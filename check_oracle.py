@@ -10,6 +10,7 @@ Usage: python check_oracle.py [--sf /root/testdata/sf0.01] [--queries a,b]
 from __future__ import annotations
 
 import argparse
+import math
 import os
 import sys
 
@@ -19,6 +20,29 @@ import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+def canon(rows):
+    """Rows → sorted list of comparable tuples with bit-level float
+    identity: -0.0 != 0.0, and NaN is its own sign-free sentinel, so NaN
+    == NaN (whatever its sign bit) but NaN != ±inf."""
+    from decimal import Decimal
+
+    out = []
+    for r in rows:
+        rr = []
+        for v in r:
+            if isinstance(v, Decimal):
+                # DuckDB types bare VALUES literals as DECIMAL; the
+                # driver's comparator coerces — match that here
+                v = float(v)
+            if isinstance(v, float):
+                rr.append(("nan",) if v != v
+                          else ("f", v, math.copysign(1.0, v)))
+            else:
+                rr.append(v)
+        out.append(tuple(rr))
+    return sorted(out, key=repr)
 
 
 def main() -> None:
@@ -42,28 +66,6 @@ def main() -> None:
         if os.path.exists(p):
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    import math
-
-    def canon(rows):
-        from decimal import Decimal
-
-        out = []
-        for r in rows:
-            rr = []
-            for v in r:
-                if isinstance(v, Decimal):
-                    # DuckDB types bare VALUES literals as DECIMAL; the
-                    # driver's comparator coerces — match that here
-                    v = float(v)
-                if isinstance(v, float):
-                    # bit-level float identity (nan == nan, -0.0 != 0.0)
-                    rr.append(("f", math.inf if v != v else v,
-                               math.copysign(1.0, v)))
-                else:
-                    rr.append(v)
-            out.append(tuple(rr))
-        return sorted(out, key=repr)
 
     failures = 0
     for name in names:

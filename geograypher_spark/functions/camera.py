@@ -222,18 +222,6 @@ def inverse_distortion_map(
             canvas)
 
 
-def angle_between(v1: np.ndarray, v2: np.ndarray) -> np.ndarray:
-    """(n,3)×(n,3) → angle in radians (X14, ``utils/geometric.py:109-121``)."""
-    a = np.asarray(v1, dtype=np.float64)
-    b = np.asarray(v2, dtype=np.float64)
-    dot = np.einsum("ij,ij->i", a, b)
-    na = np.linalg.norm(a, axis=1)
-    nb = np.linalg.norm(b, axis=1)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        c = np.clip(dot / (na * nb), -1.0, 1.0)
-    return np.arccos(c)
-
-
 def rpy_rotation(roll: float, pitch: float, yaw: float) -> np.ndarray:
     """Roll-pitch-yaw (XYZ intrinsic) rotation matrix (X15,
     ``utils/image.py:29-45``)."""

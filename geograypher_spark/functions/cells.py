@@ -68,18 +68,6 @@ def cell_iy_col(cell: Column) -> Column:
     return cell.bitwiseAND(mask) - F.lit(_OFFSET)
 
 
-def cell_parent_col(cell: Column, steps: int = 1) -> Column:
-    """Ancestor cell ``steps`` resolutions coarser (prefix for prefix-joins)."""
-    res = cell_res_col(cell).cast("long") - F.lit(steps)
-    ix = F.shiftright(cell_ix_col(cell) + F.lit(_OFFSET), steps)
-    iy = F.shiftright(cell_iy_col(cell) + F.lit(_OFFSET), steps)
-    return (
-        F.shiftleft(res, 2 * _COORD_BITS)
-        .bitwiseOR(F.shiftleft(ix, _COORD_BITS))
-        .bitwiseOR(iy)
-    )
-
-
 def cell_ancestor_col(cell: Column, level: int) -> Column:
     """Ancestor of each (finer-res) cell at the fixed resolution ``level``.
     Per-row shift count (res - level) varies, so use exact power-of-two

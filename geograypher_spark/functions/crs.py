@@ -145,11 +145,6 @@ def utm_to_geodetic(easting: np.ndarray, northing: np.ndarray, zone: int, south:
     return lon, lat
 
 
-def swap_axis_order(x: np.ndarray, y: np.ndarray, swap: bool) -> tuple[np.ndarray, np.ndarray]:
-    """X3: easting/northing axis-order swap (``meshes/meshes.py:766-774``)."""
-    return (y, x) if swap else (x, y)
-
-
 # ---------------------------------------------------------------------------
 # pUDF wrappers
 # ---------------------------------------------------------------------------

@@ -52,10 +52,6 @@ def multipolygon_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
     return b"".join(out)
 
 
-def point_to_wkb(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, _WKB_POINT, x, y)
-
-
 def wkb_to_rings(wkb: bytes) -> list[list[np.ndarray]]:
     """Decode WKB Polygon/MultiPolygon/Point → list of polygons, each a list
     of (n,2) rings (exterior first). Points decode as a 1-vertex ring."""

@@ -72,18 +72,6 @@ def weighted_argmax(
     )
 
 
-def class_counts(
-    df: DataFrame, group_cols: list[str], class_col: str,
-) -> DataFrame:
-    """Long-format sparse face×class counts (A3): the csr_array workaround
-    in the reference is just groupBy here — sparsity is free."""
-    return (
-        df.filter(F.col(class_col).isNotNull())
-        .groupBy(*group_cols, class_col)
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-
-
 def covering_grid(
     df: DataFrame, x: str, y: str, z: str, n_cells: int,
     xmin: float, ymin: float, xmax: float, ymax: float,
@@ -106,12 +94,3 @@ def covering_grid(
             F.count(F.lit(1)).alias("n_points"),
         )
     )
-
-
-def confusion_matrix(
-    df: DataFrame, true_col: str, pred_col: str, weight_col: str | None = None,
-) -> DataFrame:
-    """Long-format confusion counts (A15); pivot at the caller if a dense
-    matrix is wanted (n_classes is small)."""
-    agg = F.sum(weight_col) if weight_col else F.count(F.lit(1))
-    return df.groupBy(true_col, pred_col).agg(agg.alias("weight"))

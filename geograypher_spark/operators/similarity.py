@@ -69,29 +69,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def hyperplane_signature_udf(n_planes: int = 16, seed: int = 42):
-    """Deterministic random-hyperplane LSH signature: bit j =
-    sign(dot(vec, plane_j)), planes from a seeded Gaussian — regenerated
-    identically on every executor from the closure (no stored state).
-    One Arrow batch → one matmul (Charikar 2002 signatures at memory
-    bandwidth, not per-element expression evaluation)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.LongType())
-    def sig(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="int64")
-        M = np.stack(vec.to_numpy())            # (n, dim)
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((M.shape[1], n_planes))
-        bits = (M.astype(np.float64) @ planes) > 0   # (n, n_planes)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series(bits.astype(np.int64) @ weights)
-
-    return sig
-
-
 def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """INTEGER-quantized random hyperplanes (round(gauss*1000)): sign bits
     come from exact integer dot products of the quantized vector and the
@@ -100,13 +77,6 @@ def lsh_planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     bucketing exactly (float matmul sign would depend on summation order)."""
     rng = np.random.default_rng(seed)
     return np.round(rng.standard_normal((dim, n_planes)) * 1000.0)
-
-
-def _plane_bits(M: np.ndarray, n_planes: int, seed: int) -> np.ndarray:
-    Q = np.round(M.astype(np.float64) * 1000.0)
-    planes = lsh_planes(M.shape[1], n_planes, seed)
-    # integer-valued doubles: |dot| < dim * 3e3 * 3e3 * margin << 2^53, exact
-    return (Q @ planes) > 0
 
 
 def _topk_desc_tiebreak(sims: np.ndarray, ids: np.ndarray, k_eff: int
@@ -127,7 +97,12 @@ def _topk_desc_tiebreak(sims: np.ndarray, ids: np.ndarray, k_eff: int
     the exact full-width lexsort. Rows with fewer than k_eff valid
     candidates are safe by construction: every finite sim sorts strictly
     before the -inf padding, so argpartition keeps all of them, and
-    callers drop the non-finite slots afterwards."""
+    callers drop the non-finite slots afterwards. NaN sims (a zero-norm
+    vector's 0/0 cosine) rank as -inf: argpartition would otherwise rank
+    them above every finite value and crowd true neighbours out."""
+    nan = np.isnan(sims)
+    if nan.any():
+        sims = np.where(nan, -np.inf, sims)
     c, m = sims.shape
     part = np.argpartition(sims, m - k_eff, axis=-1)[:, m - k_eff:]
     psims = np.take_along_axis(sims, part, axis=-1)
@@ -147,31 +122,6 @@ def _topk_desc_tiebreak(sims: np.ndarray, ids: np.ndarray, k_eff: int
                 (np.broadcast_to(ids, (len(rows_u), m)), -sims[rows_u]),
                 axis=-1)[:, :k_eff]
     return idx
-
-
-def band_values_udf(n_planes: int, bands: int, seed: int = 42):
-    """Per-vector array of ``bands`` band values (contiguous groups of
-    ``n_planes//bands`` hyperplane sign bits, same grouping as splitting a
-    packed signature). Emitting band values directly (array<long>) removes
-    the 64-plane packing ceiling — n_planes scales with log2(N)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    rows = n_planes // bands
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def bv(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack(vec.to_numpy())            # (n, dim)
-        bits = _plane_bits(M, n_planes, seed)   # (n, n_planes)
-        weights = 1 << np.arange(rows, dtype=np.int64)
-        vals = np.stack(
-            [bits[:, b * rows:(b + 1) * rows].astype(np.int64) @ weights
-             for b in range(bands)], axis=1)    # (n, bands)
-        return pd.Series(list(vals))
-
-    return bv
 
 
 def _round_half_up(x: np.ndarray) -> np.ndarray:
@@ -224,6 +174,12 @@ def quantized_band_struct_udf(n_planes: int, bands: int, scale: int = 1000,
                                  "bv": pd.Series([], dtype=object)})
         M = np.stack(vec.to_numpy()).astype(np.float64)      # (n, dim)
         Q = _round_half_up(M * float(scale))                 # ints in double
+        # int32 packing: out-of-range (or non-finite) components would
+        # wrap silently in the cast
+        if not (np.abs(Q) < 2**31).all():
+            raise ValueError(
+                f"quantized embedding component outside int32 at "
+                f"scale={scale}: |round(x*scale)| must be < 2**31")
         planes = lsh_planes(M.shape[1], n_planes, seed)
         bits = (Q @ planes) > 0                              # exact int dots
         weights = 1 << np.arange(rows, dtype=np.int64)

@@ -8,14 +8,15 @@ Replaces the reference's geopandas joins:
 Pattern (the engine's core, per north_rule):
 1. encode point side to grid cells — pure column expr, codegen'd
 2. cover each polygon with cells at the same resolution — small side,
-   computed in one Arrow batch, usually broadcast
-3. equi-join on cell id (hash join; broadcast when the covering fits,
-   salted shuffle join otherwise — skew handled *explicitly*)
+   collected once and covered on the driver, then broadcast
+3. equi-join on cell id (broadcast hash join; salted shuffle join when
+   ``salt_factor`` is given — skew handled *explicitly*)
 4. refine candidates with the exact winding-number PIP kernel in a
    vectorized pandas UDF (Arrow batches, no per-row Python)
 
 At 100 TB the point side never moves twice: one projection to add the cell
-column, one (broadcast) join, one Arrow-batched refine. No driver collect.
+column, one (broadcast) join, one Arrow-batched refine. One capped driver
+collect of the broadcast side (``collect_small_side``); none when salted.
 """
 
 from __future__ import annotations
@@ -33,6 +34,27 @@ from ..functions import cells as C
 from ..functions import geometry as geom
 
 DEFAULT_RES = 7  # 8 m cells at BASE=1024 — tuned to forest-plot object size
+
+# Row cap of every broadcast side collected to the driver (the fixtures'
+# largest are 576 cameras and 64 polygons)
+SMALL_SIDE_MAX_ROWS = 100_000
+
+_SALTED_ROUTE = "; pass salt_factor= to run the distributed salted join instead"
+
+
+def collect_small_side(df: DataFrame, operator: str,
+                       route: str = "") -> pd.DataFrame:
+    """The broadcast side of ``operator`` as one pandas frame, read by ONE
+    job (the Arrow collect of ``limit(cap + 1)``; a row ``collect()`` of a
+    limit takes partitions in scale-up rounds, a job each). Raises
+    ``ValueError`` naming ``operator`` and its distributed ``route`` when
+    the side has more than ``SMALL_SIDE_MAX_ROWS`` rows."""
+    pdf = df.limit(SMALL_SIDE_MAX_ROWS + 1).toPandas()
+    if len(pdf) > SMALL_SIDE_MAX_ROWS:
+        raise ValueError(
+            f"{operator}: the broadcast side has more than "
+            f"{SMALL_SIDE_MAX_ROWS} rows{route}")
+    return pdf
 
 
 def with_cell(df: DataFrame, x: str = "x", y: str = "y", res: int = DEFAULT_RES,
@@ -68,16 +90,11 @@ def _polygon_covering_pdf(
     polygons_pdf: "pd.DataFrame", wkb_col: str, res: int,
     max_cells_per_polygon: int,
 ) -> "pd.DataFrame":
-    if not len(polygons_pdf):
-        return pd.DataFrame(
-            {"cell": pd.Series([], dtype="int64"),
-             **{c: pd.Series([], dtype=object)
-                for c in polygons_pdf.columns}})
     # bbox per geometry (WKB parse is per-row by nature), then ONE
     # batched covering + np.repeat emission for the whole frame
     boxes = np.array([
         geom.rings_bbox(geom.wkb_to_rings(bytes(v)))
-        for v in polygons_pdf[wkb_col]], dtype=np.float64)
+        for v in polygons_pdf[wkb_col]], dtype=np.float64).reshape(-1, 4)
     cells, counts = C.covering_cells_batch(
         boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3], res,
         max_cells=max_cells_per_polygon)
@@ -87,25 +104,36 @@ def _polygon_covering_pdf(
     return out
 
 
+def _driver_covering(
+    polygons: DataFrame, operator: str, wkb_col: str = "geometry_wkb",
+    res: int = DEFAULT_RES, max_cells_per_polygon: int = 4096,
+    route: str = _SALTED_ROUTE,
+) -> tuple[pd.DataFrame, DataFrame, list[int]]:
+    """``polygon_covering_cells_driver`` that also returns the collected
+    polygon rows: (rows, covering_df, res_levels)."""
+    pdf = collect_small_side(polygons, operator, route)
+    cover_pdf = _polygon_covering_pdf(pdf, wkb_col, res, max_cells_per_polygon)
+    levels = C.res_levels_of_cells(cover_pdf["cell"].to_numpy()) or [res]
+    schema = T.StructType(
+        [T.StructField("cell", T.LongType())] + list(polygons.schema.fields))
+    return pdf, polygons.sparkSession.createDataFrame(
+        cover_pdf, schema=schema).coalesce(1), levels
+
+
 def polygon_covering_cells_driver(
     polygons: DataFrame, wkb_col: str = "geometry_wkb", res: int = DEFAULT_RES,
     max_cells_per_polygon: int = 4096,
 ) -> tuple[DataFrame, list[int]]:
     """Driver-side covering for the BROADCAST path: the polygon side is by
-    definition small enough to broadcast, so collecting it is free and
+    definition small enough to broadcast, so collecting it is cheap and
     avoids a 32-task python stage for a 3-row table.
 
     Returns ``(covering_df, res_levels)`` — the levels come free from the
     local pandas frame, so the point side can key itself at every res the
     covering actually uses (coarsened large-ROI rows included) without an
     extra Spark job."""
-    pdf = polygons.toPandas()
-    cover_pdf = _polygon_covering_pdf(pdf, wkb_col, res, max_cells_per_polygon)
-    levels = C.res_levels_of_cells(cover_pdf["cell"].to_numpy()) or [res]
-    spark = polygons.sparkSession
-    schema = T.StructType(
-        [T.StructField("cell", T.LongType())] + list(polygons.schema.fields))
-    return spark.createDataFrame(cover_pdf, schema=schema).coalesce(1), levels
+    return _driver_covering(polygons, "polygon_covering_cells_driver",
+                            wkb_col, res, max_cells_per_polygon, route="")[1:]
 
 
 def polygon_covering_cells(
@@ -251,7 +279,10 @@ def salted_equi_join(
     the small side is exploded ×salt_factor. Use when the small side exceeds
     broadcast threshold AND key histogram is skewed (forest plots concentrate
     faces in few cells). AQE skew-join remains on as backstop.
+    ``salt_factor=1`` is the plain (unsalted) shuffle join.
     """
+    if salt_factor < 1:
+        raise ValueError(f"salt_factor must be >= 1, got {salt_factor}")
     big_s = big.withColumn(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_factor)).cast("int"))
     small_s = small.withColumn(
@@ -297,7 +328,6 @@ def triangles_polygon_overlap(
     faces: DataFrame,
     polygons: DataFrame,
     res: int = DEFAULT_RES,
-    broadcast_covering: bool = True,
     salt_factor: int | None = None,
     min_area: float = 1e-9,
 ) -> DataFrame:
@@ -311,9 +341,11 @@ def triangles_polygon_overlap(
     (``meshes/meshes.py:1197-1203``).
 
     ``faces`` needs columns x0..y2 (triangle 2D coords) plus any keys.
+    ``salt_factor`` as in :func:`points_in_polygons`.
     """
-    if broadcast_covering and salt_factor is None:
-        cover, levels = polygon_covering_cells_driver(polygons, res=res)
+    if salt_factor is None:
+        _, cover, levels = _driver_covering(
+            polygons, "triangles_polygon_overlap", res=res)
     else:
         cover = polygon_covering_cells(polygons, res=res)
         # one tiny agg on the covering (polygon) side to learn which
@@ -327,12 +359,10 @@ def triangles_polygon_overlap(
     fymin = F.least("y0", "y1", "y2"); fymax = F.greatest("y0", "y1", "y2")
     cells = C.multires_bbox_cells_col(fxmin, fymin, fxmax, fymax, levels)
     tri_cells = faces.withColumn("cell", F.explode(cells))
-    if broadcast_covering and salt_factor is None:
+    if salt_factor is None:
         cand = tri_cells.join(F.broadcast(cover), "cell")
-    elif salt_factor:
-        cand = salted_equi_join(tri_cells, cover, "cell", salt_factor)
     else:
-        cand = tri_cells.join(cover, "cell")
+        cand = salted_equi_join(tri_cells, cover, "cell", salt_factor)
     # a (face, polygon) pair can match in several cells → dedup before the
     # expensive refine (cheap: candidate set is already small)
     key_cols = [c for c in cand.columns if c != "cell"]
@@ -350,7 +380,6 @@ def points_in_polygons(
     x: str = "x", y: str = "y",
     point_keys: list[str] | None = None,
     res: int = DEFAULT_RES,
-    broadcast_covering: bool = True,
     salt_factor: int | None = None,
     polygon_id_col: str = "polygon_id",
 ) -> DataFrame:
@@ -359,48 +388,45 @@ def points_in_polygons(
     Output = point columns + polygon columns (minus wkb/cell plumbing).
 
     Broadcast path ships polygon geometry to executors ONCE as a
-    {polygon_id: wkb} broadcast dict — candidate rows carry only the id,
-    not a duplicated WKB blob per row (10-100× less Arrow traffic at
-    scale). Salted/shuffle paths keep the wkb column (the polygon side is
-    too big to broadcast there by definition).
+    {polygon_id: wkb} broadcast dict (from the rows the covering was built
+    from) — candidate rows carry only the id, not a duplicated WKB blob
+    per row (10-100× less Arrow traffic at scale). ``salt_factor`` selects
+    the salted shuffle join instead (1 = unsalted), which keeps the wkb
+    column (the polygon side is too big to broadcast there by definition).
     """
-    if broadcast_covering and salt_factor is None:
-        cover, levels = polygon_covering_cells_driver(polygons, res=res)
-        pts = with_cell_multires(points, x, y, levels)
-        wkb_map = {row[0]: bytes(row[1]) for row in
-                   polygons.select(polygon_id_col, "geometry_wkb").collect()}
-        cand = pts.join(
-            F.broadcast(cover.drop("geometry_wkb")), "cell")
-
-        # small polygon sets compile to a pure JVM predicate (bit-exact
-        # twin of the winding kernel) — no Python boundary in the refine
-        expr = pip_filter_expr(F.col(x), F.col(y), F.col(polygon_id_col),
-                               wkb_map)
-        if expr is not None:
-            return cand.filter(expr).drop("cell")
-
-        bc = points.sparkSession.sparkContext.broadcast(wkb_map)
-
-        @pandas_udf(T.BooleanType())
-        def pip_by_id(xs: pd.Series, ys: pd.Series, pids: pd.Series) -> pd.Series:
-            out = np.zeros(len(xs), dtype=bool)
-            xv = xs.to_numpy(dtype=np.float64)
-            yv = ys.to_numpy(dtype=np.float64)
-            codes, uniques = pd.factorize(pids)
-            for u_idx, pid in enumerate(uniques):
-                m = codes == u_idx
-                out[m] = geom.points_in_wkb(xv[m], yv[m], bc.value[pid])
-            return pd.Series(out)
-
-        refined = cand.filter(pip_by_id(F.col(x), F.col(y), F.col(polygon_id_col)))
-        return refined.drop("cell")
-    elif salt_factor:
+    if salt_factor is not None:
         cover = polygon_covering_cells(polygons, res=res)
         pts = with_cell_multires(points, x, y, covering_res_levels(cover) or [res])
         cand = salted_equi_join(pts, cover, "cell", salt_factor)
-    else:
-        cover = polygon_covering_cells(polygons, res=res)
-        pts = with_cell_multires(points, x, y, covering_res_levels(cover) or [res])
-        cand = pts.join(cover, "cell")
-    refined = cand.filter(pip_udf(F.col(x), F.col(y), F.col("geometry_wkb")))
-    return refined.drop("cell", "geometry_wkb")
+        refined = cand.filter(pip_udf(F.col(x), F.col(y), F.col("geometry_wkb")))
+        return refined.drop("cell", "geometry_wkb")
+
+    pdf, cover, levels = _driver_covering(
+        polygons, "points_in_polygons", res=res)
+    pts = with_cell_multires(points, x, y, levels)
+    wkb_map = {pid: bytes(wkb) for pid, wkb in
+               zip(pdf[polygon_id_col].tolist(), pdf["geometry_wkb"])}
+    cand = pts.join(F.broadcast(cover.drop("geometry_wkb")), "cell")
+
+    # small polygon sets compile to a pure JVM predicate (bit-exact
+    # twin of the winding kernel) — no Python boundary in the refine
+    expr = pip_filter_expr(F.col(x), F.col(y), F.col(polygon_id_col),
+                           wkb_map)
+    if expr is not None:
+        return cand.filter(expr).drop("cell")
+
+    bc = points.sparkSession.sparkContext.broadcast(wkb_map)
+
+    @pandas_udf(T.BooleanType())
+    def pip_by_id(xs: pd.Series, ys: pd.Series, pids: pd.Series) -> pd.Series:
+        out = np.zeros(len(xs), dtype=bool)
+        xv = xs.to_numpy(dtype=np.float64)
+        yv = ys.to_numpy(dtype=np.float64)
+        codes, uniques = pd.factorize(pids)
+        for u_idx, pid in enumerate(uniques):
+            m = codes == u_idx
+            out[m] = geom.points_in_wkb(xv[m], yv[m], bc.value[pid])
+        return pd.Series(out)
+
+    refined = cand.filter(pip_by_id(F.col(x), F.col(y), F.col(polygon_id_col)))
+    return refined.drop("cell")

@@ -5,10 +5,10 @@ Reference J1 (``meshes/meshes.py:1645-1823``): off-screen VTK rendering of
 faces colored with base-256-encoded ids, screenshot, decode. Here instead:
 
 1. **Candidate stage** — camera frustum-footprint covering cells ⋈ face
-   bbox covering cells (cell equi-join, broadcast cameras when few, salted
-   otherwise). Keeps the per-camera rasterizer input bounded: each camera
-   sees only faces its frustum can reach, the Spark analog of the
-   reference's per-cluster submeshes (J12).
+   bbox covering cells (cell equi-join; the camera table is collected
+   once, capped, and its covering broadcast). Keeps the per-camera
+   rasterizer input bounded: each camera sees only faces its frustum can
+   reach, the Spark analog of the reference's per-cluster submeshes (J12).
 2. **Rasterize stage** — ``applyInPandas`` grouped by camera_id: software
    z-buffer with perspective-correct depth (linear 1/z in screen space),
    pixel-center sampling. Emits ``(camera_id, face_id, pixel_count)``
@@ -19,8 +19,6 @@ No GPU, no VTK, no base-256 trick (X9) — face ids stay int64 end to end.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -29,6 +27,8 @@ from pyspark.sql import types as T
 
 from ..functions import camera as cam
 from ..functions import cells as C
+from .balanced import grouped_apply_balanced
+from .spatial_join import collect_small_side
 
 FACE_COORD_COLS = ["x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2"]
 
@@ -352,91 +352,61 @@ def _footprint_bboxes(
     return any_valid, xmin, ymin, xmax, ymax
 
 
-def camera_footprint_cells(
-    cameras: DataFrame, z_min: float, z_max: float,
-    res: int, max_cells: int = 4096,
+def _candidates(
+    cameras: DataFrame, rows: pd.DataFrame, faces: DataFrame, res: int,
+    max_cells: int, z_range: tuple[float, float] | None,
 ) -> DataFrame:
-    """(camera cols..., cell): covering cells of each camera's frustum
-    footprint over the mesh z-slab [z_min, z_max] — corner rays intersected
-    with both planes, bbox of the 8 hits, covered at ``res``."""
-    cols = cameras.columns
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"cell": pd.Series([], dtype="int64"),
-                     **{c: pd.Series([], dtype=object) for c in cols}})
-                continue
-            ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
-                np.stack(pdf["cam_to_world"].to_numpy()),
-                pdf["f"].to_numpy(np.float64),
-                pdf["cx"].to_numpy(np.float64), pdf["cy"].to_numpy(np.float64),
-                pdf["w"].to_numpy(np.float64), pdf["h"].to_numpy(np.float64),
-                z_min, z_max)
-            # batch emission: all cells of the batch in one np.repeat
-            # gather instead of a per-camera DataFrame append
-            keep = np.nonzero(ok)[0]
-            cells, counts = C.covering_cells_batch(
-                xmin[keep], ymin[keep], xmax[keep], ymax[keep],
-                res, max_cells=max_cells)
-            o = pdf.iloc[np.repeat(keep, counts)].reset_index(drop=True)
-            o.insert(0, "cell", cells)
-            yield o
-
+    """``candidate_camera_faces`` over already-collected camera ``rows``."""
+    if z_range is None:
+        zstats = faces.agg(
+            F.min(F.least("z0", "z1", "z2")).alias("zmin"),
+            F.max(F.greatest("z0", "z1", "z2")).alias("zmax"),
+        ).collect()[0]
+        z_range = (float(zstats["zmin"]), float(zstats["zmax"]))
+    # driver-side footprint covering: every camera's cells in one np.repeat
+    ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
+        np.array(rows["cam_to_world"].tolist(), np.float64).reshape(-1, 16),
+        rows["f"].to_numpy(np.float64),
+        rows["cx"].to_numpy(np.float64), rows["cy"].to_numpy(np.float64),
+        rows["w"].to_numpy(np.float64), rows["h"].to_numpy(np.float64),
+        *z_range)
+    keep = np.nonzero(ok)[0]
+    cells, counts = C.covering_cells_batch(
+        xmin[keep], ymin[keep], xmax[keep], ymax[keep], res,
+        max_cells=max_cells)
+    cover = rows.iloc[np.repeat(keep, counts)].reset_index(drop=True)
+    cover.insert(0, "cell", cells)
     schema = T.StructType(
         [T.StructField("cell", T.LongType())] + list(cameras.schema.fields))
-    return cameras.mapInPandas(gen, schema=schema)
-
-
-def camera_footprint_cells_driver(
-    cameras: DataFrame, z_min: float, z_max: float,
-    res: int, max_cells: int = 4096,
-) -> tuple[DataFrame, list[int]]:
-    """Driver-side footprint covering for the BROADCAST path: the camera
-    table is the broadcast side by definition (it's also collected for the
-    render params), so covering it locally removes a python mapInPandas
-    stage from every downstream action.
-
-    Returns ``(covering_df, res_levels)``: an oblique camera whose footprint
-    bbox exceeds ``max_cells`` coarsens its covering (see
-    ``covering_cells_np``), so the face side must key itself at every
-    resolution the covering actually uses."""
-    rows = cameras.collect()
-    out = {"cell": [], **{c: [] for c in cameras.columns}}
-    if rows:
-        ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
-            np.stack([np.asarray(r["cam_to_world"], dtype=np.float64)
-                      for r in rows]),
-            np.array([float(r["f"]) for r in rows]),
-            np.array([float(r["cx"]) for r in rows]),
-            np.array([float(r["cy"]) for r in rows]),
-            np.array([float(r["w"]) for r in rows]),
-            np.array([float(r["h"]) for r in rows]),
-            z_min, z_max)
-        keep = np.nonzero(ok)[0]
-        cells, counts = C.covering_cells_batch(
-            xmin[keep], ymin[keep], xmax[keep], ymax[keep],
-            res, max_cells=max_cells)
-        out["cell"] = cells.tolist()
-        for i, cnt in zip(keep, counts):
-            for c in cameras.columns:
-                out[c].extend([rows[int(i)][c]] * int(cnt))
-    spark = cameras.sparkSession
-    levels = C.res_levels_of_cells(out["cell"]) or [res]
-    schema = T.StructType(
-        [T.StructField("cell", T.LongType())] + list(cameras.schema.fields))
-    return (spark.createDataFrame(pd.DataFrame(out), schema=schema)
-            .coalesce(1), levels)
+    cam_cells = cameras.sparkSession.createDataFrame(
+        cover, schema=schema).coalesce(1)
+    # an oblique camera's covering may coarsen (covering_cells_np): the face
+    # side keys itself at every resolution the covering uses
+    levels = C.res_levels_of_cells(cells) or [res]
+    # face centroid cx/cy collides with the camera principal point cx/cy —
+    # only the bbox is needed for the cell key, so drop centroids after
+    fxmin = F.least("x0", "x1", "x2"); fxmax = F.greatest("x0", "x1", "x2")
+    fymin = F.least("y0", "y1", "y2"); fymax = F.greatest("y0", "y1", "y2")
+    face_cells = faces.withColumn(
+        "cell", F.explode(C.multires_bbox_cells_col(fxmin, fymin, fxmax, fymax,
+                                                    levels))
+    ).drop("cx", "cy", "cz")
+    # a face bbox spanning k covering cells of one camera yields k copies of
+    # the (camera, face) pair. The z-buffer rasterizer is idempotent per
+    # face (strict depth-<, deterministic face_id order), so duplicates are
+    # render-time overhead only — cheaper than a global dedup shuffle here;
+    # callers that need distinct pairs dedup on (camera_id, face_id).
+    return face_cells.join(F.broadcast(cam_cells), "cell").drop("cell")
 
 
 def candidate_camera_faces(
     cameras: DataFrame, faces: DataFrame, res: int = 4,
-    broadcast_cameras: bool = True, salt_factor: int | None = None,
     max_cells: int = 4096, z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Cell equi-join of camera footprints × face BBOX covering cells →
-    (camera cols + face cols) candidate pairs.
+    (camera cols + face cols) candidate pairs. The camera table is the
+    broadcast side: collected once (capped, see
+    ``spatial_join.collect_small_side``) and covered on the driver.
 
     Faces key on their bbox covering (not the centroid cell): a face whose
     centroid sits one cell outside the camera footprint but whose triangle
@@ -448,41 +418,8 @@ def candidate_camera_faces(
     ``z_range``: precomputed (zmin, zmax) of the mesh — pass it to skip the
     per-call faces scan (e.g. from table stats at 100 TB scale).
     """
-    if z_range is None:
-        zstats = faces.agg(
-            F.min(F.least("z0", "z1", "z2")).alias("zmin"),
-            F.max(F.greatest("z0", "z1", "z2")).alias("zmax"),
-        ).collect()[0]
-        z_range = (float(zstats["zmin"]), float(zstats["zmax"]))
-    if broadcast_cameras and salt_factor is None:
-        cam_cells, levels = camera_footprint_cells_driver(
-            cameras, z_range[0], z_range[1], res, max_cells=max_cells)
-    else:
-        cam_cells = camera_footprint_cells(
-            cameras, z_range[0], z_range[1], res, max_cells=max_cells)
-        from .spatial_join import covering_res_levels
-        levels = covering_res_levels(cam_cells) or [res]
-    # face centroid cx/cy collides with the camera principal point cx/cy —
-    # only the bbox is needed for the cell key, so drop centroids after
-    fxmin = F.least("x0", "x1", "x2"); fxmax = F.greatest("x0", "x1", "x2")
-    fymin = F.least("y0", "y1", "y2"); fymax = F.greatest("y0", "y1", "y2")
-    face_cells = faces.withColumn(
-        "cell", F.explode(C.multires_bbox_cells_col(fxmin, fymin, fxmax, fymax,
-                                                    levels))
-    ).drop("cx", "cy", "cz")
-    if broadcast_cameras and salt_factor is None:
-        cand = face_cells.join(F.broadcast(cam_cells), "cell")
-    elif salt_factor:
-        from .spatial_join import salted_equi_join
-        cand = salted_equi_join(face_cells, cam_cells, "cell", salt_factor)
-    else:
-        cand = face_cells.join(cam_cells, "cell")
-    # a face bbox spanning k covering cells of one camera yields k copies of
-    # the (camera, face) pair. The z-buffer rasterizer is idempotent per
-    # face (strict depth-<, deterministic face_id order), so duplicates are
-    # render-time overhead only — cheaper than a global dedup shuffle here;
-    # callers that need distinct pairs dedup on (camera_id, face_id).
-    return cand.drop("cell")
+    return _candidates(cameras, collect_small_side(
+        cameras, "candidate_camera_faces"), faces, res, max_cells, z_range)
 
 
 # ---------------------------------------------------------------------------
@@ -496,30 +433,32 @@ VISIBILITY_SCHEMA = T.StructType([
 ])
 
 
-_CAM_PARAM_KEYS = ("cam_to_world", "f", "cx", "cy", "w", "h")
+def _camera_side(cameras: DataFrame, operator: str):
+    """The camera table — the visibility join's small side by design
+    (thousands of rows vs billions of faces) — collected ONCE for
+    ``operator`` → (rows, broadcast {camera_id: row}), so candidate rows
+    carry only ids+coords. An optional ``distortion`` column
+    (Brown–Conrady params) rides along for distortion-aware rendering."""
+    rows = collect_small_side(cameras, operator)
+    cam_map = {int(r["camera_id"]): r for r in rows.to_dict("records")}
+    for p in cam_map.values():
+        if p.get("distortion"):   # struct-typed: drop null coefficients
+            p["distortion"] = {
+                k: v for k, v in p["distortion"].items() if v is not None}
+    return rows, cameras.sparkSession.sparkContext.broadcast(cam_map)
 
 
-def _broadcast_cameras(cameras: DataFrame):
-    """Camera params as a broadcast dict {camera_id: params}. The camera
-    table is the small side of the visibility join by design (thousands of
-    rows vs billions of faces); candidate rows then carry only ids+coords.
-    An optional ``distortion`` map column (Brown–Conrady params) rides
-    along for distortion-aware rendering."""
-    keys = list(_CAM_PARAM_KEYS)
-    if "distortion" in cameras.columns:
-        keys.append("distortion")
-
-    def _plain(v):
-        if v is None:
-            return v
-        if hasattr(v, "asDict"):   # Row (struct-typed distortion)
-            return {k: x for k, x in v.asDict().items() if x is not None}
-        return v                    # MapType already collects as dict
-
-    rows = cameras.select("camera_id", *keys).collect()
-    cam_map = {
-        int(r["camera_id"]): {k: _plain(r[k]) for k in keys} for r in rows}
-    return cameras.sparkSession.sparkContext.broadcast(cam_map)
+def _render_inputs(
+    cameras: DataFrame, faces: DataFrame, cols: list[str], operator: str,
+    res: int, max_cells: int, z_range: tuple[float, float] | None,
+):
+    """Shared setup of the per-camera renders from ONE camera collect →
+    (candidates (camera_id, face_id, *cols), broadcast params, group keys:
+    the broadcast dict, so grouped_apply_balanced needs no probe job)."""
+    rows, bc = _camera_side(cameras, operator)
+    cand = _candidates(cameras, rows, faces, res, max_cells, z_range).select(
+        "camera_id", "face_id", *cols)
+    return cand, bc, [(int(cid),) for cid in bc.value]
 
 
 def _counts_pdf(camera_id, img: np.ndarray) -> pd.DataFrame:
@@ -550,7 +489,6 @@ _PARTIAL_SCHEMA = T.StructType([
 def visibility_join(
     cameras: DataFrame, faces: DataFrame,
     res: int = 4, scale: float = 1.0,
-    salt_factor: int | None = None,
     max_cells: int = 4096, z_range: tuple[float, float] | None = None,
     split_res_delta: int = 0, distortion_mode: str = "vertex",
 ) -> DataFrame:
@@ -574,13 +512,9 @@ def visibility_join(
     the IDEAL pinhole image (on the expanded warp canvas when mode is
     ``"warp"``) and the per-camera merge applies the inverse-distortion
     remap exactly once, so split and non-split agree bit-for-bit."""
-    cand = candidate_camera_faces(
-        cameras, faces, res=res, salt_factor=salt_factor,
-        max_cells=max_cells, z_range=z_range,
-    ).select("camera_id", "face_id", *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
-
-    from .balanced import grouped_apply_balanced
+    cand, bc, groups = _render_inputs(
+        cameras, faces, FACE_COORD_COLS, "visibility_join", res, max_cells,
+        z_range)
 
     if split_res_delta <= 0:
         def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -591,12 +525,9 @@ def visibility_join(
         # camera renders are compute-dense (bytes-cheap candidate rows,
         # z-buffer kernel per group): the balanced grouped-apply keeps the
         # render stage at one task per camera stripe instead of the
-        # handful AQE's byte-based coalescing leaves. The key domain is
-        # the broadcast camera dict — no probe action on the candidate
-        # join lineage.
+        # handful AQE's byte-based coalescing leaves
         return grouped_apply_balanced(
-            cand, ["camera_id"], agg, VISIBILITY_SCHEMA,
-            groups=[(int(cid),) for cid in bc.value])
+            cand, ["camera_id"], agg, VISIBILITY_SCHEMA, groups=groups)
 
     sub = C.cell_id_col(F.col("x0"), F.col("y0"), res + split_res_delta)
     cand = cand.withColumn("_sub", sub)
@@ -670,8 +601,7 @@ def visibility_join(
         return _counts_pdf(cam_id, img)
 
     return grouped_apply_balanced(
-        partials, ["camera_id"], merge, VISIBILITY_SCHEMA,
-        groups=[(int(cid),) for cid in bc.value])
+        partials, ["camera_id"], merge, VISIBILITY_SCHEMA, groups=groups)
 
 
 def render_label_images(
@@ -691,10 +621,9 @@ def render_label_images(
     pipeline's faces ⋈ PIP-voted classes): the footprint-covering z-stats
     agg otherwise re-executes that whole lineage once more just to read
     two numbers the raw face table already answers."""
-    cand = candidate_camera_faces(
-        cameras, faces_with_class, res=res, z_range=z_range).select(
-        "camera_id", "face_id", class_col, *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
+    cand, bc, groups = _render_inputs(
+        cameras, faces_with_class, [class_col, *FACE_COORD_COLS],
+        "render_label_images", res, 4096, z_range)
     schema = T.StructType([
         T.StructField("camera_id", T.LongType()),
         T.StructField("w", T.IntegerType()),
@@ -728,12 +657,9 @@ def render_label_images(
     # same compute-dense exchange as visibility_join: per-camera renders
     # are ~1000x compute per byte, so AQE's byte-based coalescing would
     # collapse the render stage to a handful of tasks (the rasterize_big
-    # scaling cap, round-4). Key domain = the broadcast camera dict.
-    from .balanced import grouped_apply_balanced
-
-    return grouped_apply_balanced(
-        cand, ["camera_id"], agg, schema,
-        groups=[(int(cid),) for cid in bc.value])
+    # scaling cap, round-4)
+    return grouped_apply_balanced(cand, ["camera_id"], agg, schema,
+                                  groups=groups)
 
 
 def render_face_images(
@@ -744,10 +670,9 @@ def render_face_images(
     """→ (camera_id, w, h, face_image:binary): full pix2face images as
     int64-LE bytes — feeds the render sink (S12) / label-mask export.
     ``z_range`` as in :func:`render_label_images`."""
-    cand = candidate_camera_faces(
-        cameras, faces, res=res, z_range=z_range).select(
-        "camera_id", "face_id", *FACE_COORD_COLS)
-    bc = _broadcast_cameras(cameras)
+    cand, bc, groups = _render_inputs(
+        cameras, faces, FACE_COORD_COLS, "render_face_images", res, 4096,
+        z_range)
     schema = T.StructType([
         T.StructField("camera_id", T.LongType()),
         T.StructField("w", T.IntegerType()),
@@ -764,8 +689,5 @@ def render_face_images(
             "face_image": [np.ascontiguousarray(img).astype("<i8").tobytes()],
         })
 
-    from .balanced import grouped_apply_balanced
-
-    return grouped_apply_balanced(
-        cand, ["camera_id"], agg, schema,
-        groups=[(int(cid),) for cid in bc.value])
+    return grouped_apply_balanced(cand, ["camera_id"], agg, schema,
+                                  groups=groups)

@@ -57,7 +57,6 @@ def label_polygons(
         f.select("face_id", "x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2", class_col),
         polygons.select("polygon_id", "geometry_wkb"),
         res=res, salt_factor=salt_factor,
-        broadcast_covering=salt_factor is None,
     )
     weight = F.col("overlap_area") * (slope_ratio_col() if use_slope_weight else F.lit(1.0))
     weighted = overlap.withColumn("weight", weight)
@@ -213,9 +212,9 @@ def multiview_detections_pipeline(
     from ..functions import camera as cam_fn
     from ..operators.raytri import (connected_components, ray_proximity_edges,
                                     triangulate_components)
-    from ..operators.visibility import _broadcast_cameras
+    from ..operators.visibility import _camera_side
 
-    bc = _broadcast_cameras(cameras)
+    _, bc = _camera_side(cameras, "multiview_detections_pipeline")
     schema = T.StructType([
         T.StructField("ray_id", T.LongType()),
         T.StructField("camera_id", T.LongType()),

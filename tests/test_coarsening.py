@@ -84,11 +84,12 @@ def test_points_mixed_size_polygons(spark):
            for r in SJ.points_in_polygons(pts, polys,
                                           point_keys=["point_id"]).collect()}
     assert got == {(0, 1), (1, 2)}
-    # non-broadcast (shuffle) path takes the covering_res_levels branch
+    # shuffle path (salt_factor=1: unsalted) takes the covering_res_levels
+    # branch
     got2 = {(r["point_id"], r["polygon_id"])
             for r in SJ.points_in_polygons(
                 pts, polys, point_keys=["point_id"],
-                broadcast_covering=False).collect()}
+                salt_factor=1).collect()}
     assert got2 == got
 
 

@@ -41,6 +41,14 @@ class TestTopkDescTiebreak:
         got = SIM._topk_desc_tiebreak(sims, ids, 3)
         assert [ids[j] for j in got[0]] == [10, 20, 3]
 
+    def test_nan_ranks_below_finite(self):
+        """A NaN sim (zero-norm vector) must not displace a finite
+        neighbour from the top-k."""
+        sims = np.array([[0.9, np.nan, 0.8, 0.1, np.nan]])
+        ids = np.arange(5)
+        got = SIM._topk_desc_tiebreak(sims, ids, 2)
+        assert [sims[0, j] for j in got[0]] == [0.9, 0.8]
+
 
 class TestRoundHalfUp:
     def test_matches_spark_round_semantics(self):
@@ -61,7 +69,9 @@ class TestRoundHalfUp:
 class TestQuantizedBinaryPack:
     def test_struct_udf_matches_jvm_quantize(self, spark):
         """The packed int32 qv must equal the JVM F.round path element
-        for element, and the band values must equal band_values_udf."""
+        for element, and the band values must equal the numpy reference:
+        signs of the exact integer dots of the quantized vector with the
+        integer planes, grouped into bands."""
         rng = np.random.default_rng(3)
         rows = [(i, [float(x) for x in rng.standard_normal(16)])
                 for i in range(50)]
@@ -70,12 +80,24 @@ class TestQuantizedBinaryPack:
         got = {r["vec_id"]: r for r in emb.select(
             "vec_id", qb(F.col("embedding")).alias("s"),
             SIM.quantized(F.col("embedding"), 1000).alias("qv_jvm"),
-            SIM.band_values_udf(8, 4)(F.col("embedding")).alias("bv_ref"),
         ).collect()}
+        # array<float> column: the UDF sees the float32 values
+        M = np.array([v for _, v in rows], dtype=np.float32).astype(np.float64)
+        bits = (SIM._round_half_up(M * 1000) @ SIM.lsh_planes(16, 8)) > 0
+        bv_ref = bits.reshape(len(rows), 4, 2).astype(np.int64) @ [1, 2]
         for vid, r in got.items():
             unpacked = np.frombuffer(bytes(r["s"]["qv"]), dtype="<i4")
             assert list(unpacked) == list(r["qv_jvm"]), vid
-            assert list(r["s"]["bv"]) == list(r["bv_ref"]), vid
+            assert list(r["s"]["bv"]) == list(bv_ref[vid]), vid
+
+    def test_int32_overflow_raises(self, spark):
+        """round(3e6 * 1000) does not fit the int32 packing: the UDF must
+        fail instead of wrapping."""
+        emb = spark.createDataFrame(
+            [(0, [3e6, 1.0])], "vec_id long, embedding array<double>")
+        qb = SIM.quantized_band_struct_udf(8, 4, 1000)
+        with pytest.raises(Exception, match="outside int32"):
+            emb.select(qb(F.col("embedding")).alias("s")).collect()
 
 
 class TestPipExprEquivalence:
@@ -155,3 +177,21 @@ class TestHashedJaccardParity:
         pairs_md5 = DD.lsh_candidate_pairs(sigs_md5, n_hashes=8, bands=4,
                                            hash_fn="md5")
         assert pairs_md5.columns == pairs.columns
+
+
+class TestOracleCanon:
+    def test_nan_is_its_own_value(self):
+        """The oracle comparator keeps NaN apart from ±inf and equal to
+        any other NaN, whatever its sign bit."""
+        import math
+        import sys
+        from pathlib import Path
+
+        sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+        from check_oracle import canon
+
+        nan, neg_nan = math.nan, -math.nan
+        assert canon([(1, nan)]) == canon([(1, neg_nan)])
+        assert canon([(1, nan)]) != canon([(1, math.inf)])
+        assert canon([(1, nan)]) != canon([(1, -math.inf)])
+        assert canon([(0.0,)]) != canon([(-0.0,)])

@@ -90,7 +90,7 @@ def test_triangle_overlap_salted_equivalence(spark, scene):
     psel = polys.select("polygon_id", "geometry_wkb")
     plain = SJ.triangles_polygon_overlap(fsel, psel)
     salted = SJ.triangles_polygon_overlap(
-        fsel, psel, broadcast_covering=False, salt_factor=4)
+        fsel, psel, salt_factor=4)
     a = {(r["face_id"], r["polygon_id"]): round(r["overlap_area"], 12)
          for r in plain.collect()}
     b = {(r["face_id"], r["polygon_id"]): round(r["overlap_area"], 12)
@@ -127,6 +127,5 @@ def test_choose_salt_factor_detects_skew(spark):
         "polygon_id": pd.Series([1], dtype="int64"), "geometry_wkb": [wkb]}))
     pts = skewed.withColumn("pid", F.monotonically_increasing_id())
     a = points_in_polygons(pts, polys).count()
-    b = points_in_polygons(pts, polys, broadcast_covering=False,
-                           salt_factor=sf).count()
+    b = points_in_polygons(pts, polys, salt_factor=sf).count()
     assert a == b

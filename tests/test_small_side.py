@@ -1,0 +1,65 @@
+"""Broadcast ("small") sides: each operator collects its small side in
+exactly one job while building the plan, and a small side over the row cap
+fails loudly."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from geograypher_spark.operators import spatial_join as SJ
+from geograypher_spark.operators import visibility as V
+from geograypher_spark.sources.scene import scene_to_spark
+
+
+@pytest.fixture(scope="module")
+def scene_parquet(spark, scene, tmp_path_factory):
+    """The scene tables read back from Parquet: every collect of a file
+    scan runs a Spark job, so the job count is the collect count."""
+    root = tmp_path_factory.mktemp("scene")
+    _, faces, polys, cams = scene_to_spark(spark, scene)
+    for name, df in [("faces", faces), ("polys", polys), ("cams", cams)]:
+        df.write.parquet(str(root / name))
+    return tuple(spark.read.parquet(str(root / n))
+                 for n in ("faces", "polys", "cams"))
+
+
+def _build_jobs(spark, label, build):
+    """Number of Spark jobs ``build()`` runs while building its plan."""
+    sc = spark.sparkContext
+    group = f"small_side_{label}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_build_job_per_small_side(spark, scene_parquet):
+    faces, polys, cams = scene_parquet
+    z = (0.0, 100.0)
+    pts = faces.select("face_id", F.col("cx").alias("x"), F.col("cy").alias("y"))
+    builds = {
+        "visibility_join": lambda: V.visibility_join(cams, faces, z_range=z),
+        "render_label_images": lambda: V.render_label_images(
+            cams, faces, class_col="class_id", z_range=z),
+        "render_face_images": lambda: V.render_face_images(
+            cams, faces, z_range=z),
+        "points_in_polygons": lambda: SJ.points_in_polygons(
+            pts, polys.select("polygon_id", "geometry_wkb")),
+    }
+    jobs = {name: _build_jobs(spark, name, b) for name, b in builds.items()}
+    assert jobs == {name: 1 for name in builds}
+
+
+def test_small_side_over_cap_raises(spark, scene_parquet, monkeypatch):
+    faces, polys, cams = scene_parquet
+    pts = faces.select("face_id", F.col("cx").alias("x"), F.col("cy").alias("y"))
+    psel = polys.select("polygon_id", "geometry_wkb")
+    monkeypatch.setattr(SJ, "SMALL_SIDE_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="points_in_polygons.*salt_factor="):
+        SJ.points_in_polygons(pts, psel)
+    with pytest.raises(ValueError, match="visibility_join"):
+        V.visibility_join(cams, faces, z_range=(0.0, 100.0))
+    # the salted shuffle join is the distributed route: no driver collect
+    assert SJ.points_in_polygons(pts, psel, salt_factor=1).count() > 0

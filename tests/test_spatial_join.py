@@ -36,7 +36,7 @@ def test_salted_join_same_result(spark, scene):
     pts = faces.select("face_id", F.col("cx").alias("x"), F.col("cy").alias("y"))
     pg = polys.select("polygon_id", "geometry_wkb")
     plain = SJ.points_in_polygons(pts, pg)
-    salted = SJ.points_in_polygons(pts, pg, broadcast_covering=False, salt_factor=4)
+    salted = SJ.points_in_polygons(pts, pg, salt_factor=4)
     a = {(r["face_id"], r["polygon_id"]) for r in plain.collect()}
     b = {(r["face_id"], r["polygon_id"]) for r in salted.collect()}
     assert a == b
