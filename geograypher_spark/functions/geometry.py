@@ -12,10 +12,6 @@ UDFs without per-row Python:
   boundary via even-odd crossing with consistent tie handling
 - Sutherland–Hodgman clipping against a *convex* clipper (tile squares,
   bboxes) → exact polygon∩rect pieces for zonal stats / overlay
-- triangle-soup union via boundary-edge extraction: for a set of triangles
-  sharing edges (a mesh region), the union boundary is exactly the set of
-  edges used an odd number of times — replaces GEOS ``unary_union`` for the
-  per-class face-union export (``meshes/meshes.py:1345-1381``)
 """
 
 from __future__ import annotations
@@ -326,66 +322,6 @@ def clip_area_convex(subject: np.ndarray, clipper: np.ndarray) -> float:
 
 def rect_ring(xmin: float, ymin: float, xmax: float, ymax: float) -> np.ndarray:
     return np.array([[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax]])
-
-
-# ---------------------------------------------------------------------------
-# Triangle-soup union via boundary-edge extraction
-# ---------------------------------------------------------------------------
-
-def triangles_union_rings(tri_vert_ids: np.ndarray, coords: np.ndarray) -> list[np.ndarray]:
-    """Union of triangles that share vertices (a mesh region) as boundary
-    rings. ``tri_vert_ids``: (n,3) int vertex ids; ``coords``: (m,2).
-
-    An edge on the union boundary appears in exactly one triangle; interior
-    edges appear twice. Chain boundary edges into closed rings. Exact
-    (no floating-point construction) — replaces GEOS unary_union for
-    per-class face unions (reference ``meshes/meshes.py:1345-1381``).
-    Returns list of (k,2) closed rings (exterior CCW / holes CW as chained).
-    """
-    tri = np.asarray(tri_vert_ids, dtype=np.int64)
-    # directed edges, CCW per triangle (fix orientation by signed area)
-    p0, p1, p2 = coords[tri[:, 0]], coords[tri[:, 1]], coords[tri[:, 2]]
-    cross = (p1[:, 0] - p0[:, 0]) * (p2[:, 1] - p0[:, 1]) - (p1[:, 1] - p0[:, 1]) * (p2[:, 0] - p0[:, 0])
-    flip = cross < 0
-    t = tri.copy()
-    t[flip] = t[flip][:, [0, 2, 1]]
-    edges = np.concatenate([t[:, [0, 1]], t[:, [1, 2]], t[:, [2, 0]]], axis=0)
-    # boundary edge = directed edge whose reverse is absent
-    key = edges[:, 0] * (2**32) + edges[:, 1]
-    rkey = edges[:, 1] * (2**32) + edges[:, 0]
-    boundary = ~np.isin(key, rkey)
-    b_edges = edges[boundary]
-    # chain: successor map from vertex → next vertex (boundary is a 1-manifold
-    # for valid triangulations; duplicates resolved by first-seen order)
-    nxt: dict[int, list[int]] = {}
-    for a, b in b_edges:
-        nxt.setdefault(int(a), []).append(int(b))
-    rings: list[np.ndarray] = []
-    visited: set[tuple[int, int]] = set()
-    for a0, b0 in b_edges:
-        a0, b0 = int(a0), int(b0)
-        if (a0, b0) in visited:
-            continue
-        ring = [a0]
-        a, b = a0, b0
-        while True:
-            visited.add((a, b))
-            ring.append(b)
-            if b == a0:
-                break
-            succ = nxt.get(b, [])
-            # pick the first unvisited successor
-            nb = None
-            for c in succ:
-                if (b, c) not in visited:
-                    nb = c
-                    break
-            if nb is None:
-                break
-            a, b = b, nb
-        if ring[0] == ring[-1] and len(ring) > 3:
-            rings.append(coords[np.asarray(ring, dtype=np.int64)])
-    return rings
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,10 @@
 """Distributed Louvain community detection (A12 full analog).
 
 Reference: ``utils/numeric.py:509-556`` runs networkx
-``louvain_communities`` on the thresholded ray-proximity graph. The
-driver-side twin (``raytri.louvain_driver``) covers graphs that fit one
-machine; this module is the distributed path for graphs that don't — the
-standard parallel Louvain: synchronous best-gain label moves with a
-checkerboard update schedule (only half the nodes move per sweep, so two
+``louvain_communities`` on the thresholded ray-proximity graph on one
+machine; this module is the distributed analog — the standard parallel
+Louvain: synchronous best-gain label moves with a checkerboard update
+schedule (only half the nodes move per sweep, so two
 adjacent nodes never swap into each other's old communities in the same
 step), then graph contraction, repeated per level.
 

@@ -172,7 +172,6 @@ def word_shingle_hashes(
 def jaccard_pairs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     n: int = 3, threshold: float = 0.5, df_cap: int | None = None,
-    hashed: bool = True,
 ) -> DataFrame:
     """→ (id_a, id_b, inter, size_a, size_b, jaccard) for pairs ≥ threshold.
 
@@ -188,9 +187,9 @@ def jaccard_pairs(
     shingles are missed by design (MinHash-LSH covers near-exact dups).
     Default None = exact (small corpora / oracle parity).
 
-    ``hashed=True`` (default) keys the inverted index on xxhash64 LONGS of
-    the n-word slice (:func:`word_shingle_hashes`) instead of shingle
-    strings: every downstream stage — the df window, the self-join, the
+    The inverted index is keyed on xxhash64 LONGS of the n-word slice
+    (:func:`word_shingle_hashes`) instead of shingle strings: every
+    downstream stage — the df window, the self-join, the
     per-pair counts — only needs shingle-set identity, never the text, so
     an 8-byte fixed-width key replaces a ~40+ byte string in all shuffle
     traffic and join/aggregate buffers (guide §2.3 "narrower types";
@@ -212,8 +211,7 @@ def jaccard_pairs(
     the same input reuse the warm cache, other inputs get their own
     slot), and ``unpersist_dedup_caches()`` releases them eagerly.
     """
-    shingler = word_shingle_hashes if hashed else word_shingles
-    sh = shingler(docs, id_col, text_col, n)
+    sh = word_shingle_hashes(docs, id_col, text_col, n)
     if df_cap is not None:
         # df filter as a window over the shingle key: shuffles by shingle
         # exactly like the self-join below (the join reuses the cached

@@ -48,7 +48,6 @@ def sample_dtm(
     grid_x0: float = 0.0, grid_y0: float = 0.0,
     gsd: float = 1.0, tile_px: int = 256,
     method: str = "bilinear",
-    broadcast_dtm: bool = True,
     out: str = "ground_z",
 ) -> DataFrame:
     """points + (tile join) → points + ground elevation column.
@@ -70,8 +69,7 @@ def sample_dtm(
         F.col("width").alias("_t_w"), F.col("height").alias("_t_h"),
         F.col("x0").alias("_t_x0"), F.col("y0").alias("_t_y0"),
         F.col("gsd").alias("_t_gsd"), F.col("data").alias("_t_data"))
-    joined = keyed.join(
-        F.broadcast(tiles) if broadcast_dtm else tiles, ["tile_x", "tile_y"], "left")
+    joined = keyed.join(F.broadcast(tiles), ["tile_x", "tile_y"], "left")
 
     schema = T.StructType(
         list(points.schema.fields) + [T.StructField(out, T.DoubleType())])

@@ -78,7 +78,6 @@ def knn_join(
     res: int | None = None,
     dims: tuple[str, ...] = ("x", "y"),
     max_expansions: int = 6,
-    broadcast_refs: bool = True,
 ) -> DataFrame:
     """→ query cols + (ref_id, dist, rank, guaranteed). Exact kNN provided
     the ring at the final expansion contains ≥k refs — each expansion
@@ -103,9 +102,8 @@ def knn_join(
     r = refs.select(ref_id, *[F.col(d).alias(a) for d, a in zip(dims, r_dims)])
     if res is None:
         res = auto_resolution(r, r_dims[0], r_dims[1], target_per_cell=max(4.0, 2.0 * k))
-    r = r.withColumn("cell", C.cell_id_col(F.col(r_dims[0]), F.col(r_dims[1]), res))
-    if broadcast_refs:
-        r = F.broadcast(r)
+    r = F.broadcast(r.withColumn(
+        "cell", C.cell_id_col(F.col(r_dims[0]), F.col(r_dims[1]), res)))
 
     dist_expr = F.sqrt(sum(
         (F.col(a) - F.col(b)) * (F.col(a) - F.col(b))

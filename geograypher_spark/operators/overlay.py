@@ -23,9 +23,9 @@ from pyspark.sql import types as T
 from ..functions import cells as C
 from ..functions import geometry as geom
 from .spatial_join import (
+    _driver_covering,
     covering_res_levels,
     polygon_covering_cells,
-    polygon_covering_cells_driver,
 )
 
 
@@ -51,29 +51,24 @@ def _align_covering(cover: DataFrame, other_levels: list[int]) -> DataFrame:
 def polygon_overlap_join(
     left: DataFrame, right: DataFrame,
     left_key: str = "left_id", right_key: str = "right_id",
-    res: int = 7, broadcast_right: bool = True,
-    min_area: float = 1e-9,
+    res: int = 7, min_area: float = 1e-9,
 ) -> DataFrame:
     """→ (left_key, right_key, overlap_area) for every intersecting pair.
 
     left/right: (key, geometry_wkb). The left side streams; the right side
-    (typically the ground-truth class polygons — small) broadcasts.
+    (typically the ground-truth class polygons — small) is collected once
+    through the capped small-side guard, covered on the driver and
+    broadcast.
     """
     lcover = polygon_covering_cells(
         left.select(F.col(left_key), F.col("geometry_wkb").alias("_lwkb")),
         wkb_col="_lwkb", res=res)
     rsel = right.select(F.col(right_key), F.col("geometry_wkb").alias("_rwkb"))
-    if broadcast_right:
-        rcover, r_levels = polygon_covering_cells_driver(
-            rsel, wkb_col="_rwkb", res=res)
-    else:
-        rcover = polygon_covering_cells(rsel, wkb_col="_rwkb", res=res)
-        r_levels = covering_res_levels(rcover) or [res]
+    _, rcover, r_levels = _driver_covering(
+        rsel, "polygon_overlap_join", wkb_col="_rwkb", res=res, route="")
     l_levels = covering_res_levels(lcover) or [res]
     lcover = _align_covering(lcover, r_levels)
-    rcover = _align_covering(rcover, l_levels)
-    if broadcast_right:
-        rcover = F.broadcast(rcover)
+    rcover = F.broadcast(_align_covering(rcover, l_levels))
     cand = (
         lcover.join(rcover, "cell").drop("cell")
         .dropDuplicates([left_key, right_key])

@@ -23,8 +23,6 @@ cell — the join never materializes the N² grid the reference blocks over.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -73,32 +71,12 @@ def _segment_cover_cells(
     return df.withColumn(out, cell).drop("_k")
 
 
-def _pair_distance_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.DoubleType())
-    def seg_dist(
-        asx: pd.Series, asy: pd.Series, asz: pd.Series,
-        aex: pd.Series, aey: pd.Series, aez: pd.Series,
-        bsx: pd.Series, bsy: pd.Series, bsz: pd.Series,
-        bex: pd.Series, bey: pd.Series, bez: pd.Series,
-    ) -> pd.Series:
-        a0 = np.stack([asx, asy, asz], axis=1).astype(np.float64)
-        a1 = np.stack([aex, aey, aez], axis=1).astype(np.float64)
-        b0 = np.stack([bsx, bsy, bsz], axis=1).astype(np.float64)
-        b1 = np.stack([bex, bey, bez], axis=1).astype(np.float64)
-        _, _, d = cam.segment_pair_closest(a0, a1, b0, b1)
-        return pd.Series(d)
-
-    return seg_dist
-
-
 def with_seg_dist(df: DataFrame, out: str = "dist") -> DataFrame:
     """Segment–segment closest distance as PURE column expressions
     (Eberly formulation, same algebra as ``camera.segment_pair_closest``).
     Runs inside whole-stage codegen — no Arrow transfer of the candidate
-    set, which at 10⁶+ candidates/partition is the dominant cost of the
-    pandas-kernel variant.
+    set, which at 10⁶+ candidates/partition is the dominant cost of a
+    pandas-UDF kernel.
 
     STAGED as named intermediate columns, not one fused Column: column
     expressions are trees, so inlining s/t (each referenced 3+ times)
@@ -151,189 +129,13 @@ def with_seg_dist(df: DataFrame, out: str = "dist") -> DataFrame:
     return df.drop("_aa", "_ee", "_ff", "_cc", "_bb", "_s0", "_traw", "_t", "_s")
 
 
-def _pair_dist_exact(a0, a1, b0, b1):
-    """Segment-pair distance with the EXACT floating-op order of the
-    staged JVM kernel (``with_seg_dist``): same Eberly staging, same
-    left-associated dot products, same clamp order — bit-identical
-    float64 outputs, so the cell-grouped and join execution paths of
-    ``ray_proximity_edges`` hash-match each other and the DuckDB oracle.
-    (``camera.segment_pair_closest`` is the same algebra but sums dots
-    via einsum, whose association is an implementation detail.)"""
-    d1 = a1 - a0
-    d2 = b1 - b0
-    r = a0 - b0
-
-    def dot(u, v):
-        return u[:, 0] * v[:, 0] + u[:, 1] * v[:, 1] + u[:, 2] * v[:, 2]
-
-    aa = dot(d1, d1); ee = dot(d2, d2); ff = dot(d2, r)
-    cc = dot(d1, r); bb = dot(d1, d2)
-    denom = aa * ee - bb * bb
-    with np.errstate(divide="ignore", invalid="ignore"):
-        s0 = np.where(denom > 1e-14 * aa * ee + 1e-300,
-                      (bb * ff - cc * ee) / np.where(denom == 0, 1.0, denom),
-                      0.0)
-    s0 = np.minimum(1.0, np.maximum(0.0, s0))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        traw = np.where(ee > 0,
-                        (bb * s0 + ff) / np.where(ee == 0, 1.0, ee), 0.0)
-    t = np.minimum(1.0, np.maximum(0.0, traw))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        s2 = np.where(aa > 0,
-                      (t * bb - cc) / np.where(aa == 0, 1.0, aa), 0.0)
-    s2 = np.minimum(1.0, np.maximum(0.0, s2))
-    s = np.where(traw != t, s2, s0)
-    pa = a0 + d1 * s[:, None]
-    pb = b0 + d2 * t[:, None]
-    diff = pa - pb
-    return np.sqrt(dot(diff, diff))
-
-
-# i-rows per pair-mask chunk inside one cell: bounds the (chunk, n) bool
-# mask and the gathered pair coordinate blocks to cache size even for a
-# pathologically hot cell (n² pairs stream through in bounded slabs)
-_PAIR_CHUNK = 1 << 21
-
-
-def _cell_grouped_edges(
-    rays: DataFrame, tau: float, res: int, min_dist: float,
-    cross_camera_only: bool, cell_partitions: int,
-) -> DataFrame:
-    """Cell-grouped pair enumeration (see ray_proximity_edges): ONE
-    dilated-cover shuffle, then per-cell vectorized numpy pair masks +
-    the exact-order Eberly kernel inside mapInPandas. Candidate pairs
-    never exist outside cache-resident numpy temporaries — no second
-    cover shuffle, no two-sided merge-join sort, no O(pairs) row stream
-    through codegen."""
-    cov = _segment_cover_cells(
-        rays.select("ray_id", "camera_id", *RAY_COLS), res, dilate=tau)
-    part = (cov.repartition(cell_partitions, "cell")
-               .sortWithinPartitions("cell"))
-    s_val = float(C.cell_size(res))
-    off = 1 << 28
-    mask29 = (1 << 29) - 1
-    cols = ["cell", "ray_id", "camera_id", *RAY_COLS]
-    schema = T.StructType([
-        T.StructField("src", T.LongType()),
-        T.StructField("dst", T.LongType()),
-        T.StructField("weight", T.DoubleType()),
-        T.StructField("dist", T.DoubleType()),
-    ])
-
-    def run_partition(batches):
-        tail = None  # carry: a cell run can span an Arrow batch edge
-
-        def emit(arrs):
-            cell = arrs[0]
-            ray, cam = arrs[1], arrs[2]
-            P = np.stack(arrs[3:9], axis=1)       # (n, 6) sx sy sz ex ey ez
-            a0, a1 = P[:, 0:3], P[:, 3:6]
-            # this cell's grid index (constant across the run)
-            ix = int((int(cell[0]) >> 29) & mask29) - off
-            iy = int(int(cell[0]) & mask29) - off
-            # SAME floor expressions as the cover emission / the join
-            # path's canonical-cell recompute — bit-identical doubles
-            xlo = np.minimum(P[:, 0], P[:, 3])
-            ylo = np.minimum(P[:, 1], P[:, 4])
-            raw_ix0 = np.floor(xlo / s_val)
-            raw_iy0 = np.floor(ylo / s_val)
-            dil_ix0 = np.floor((xlo - tau) / s_val)
-            dil_iy0 = np.floor((ylo - tau) / s_val)
-            # raw cover ⊆ dilated cover: a row is a valid RAW-role (j)
-            # participant in this cell iff the cell lies in its raw
-            # cover — compress the j axis to those rows up front
-            jsel = np.flatnonzero(
-                (raw_ix0 <= ix)
-                & (ix <= np.floor(np.maximum(P[:, 0], P[:, 3]) / s_val))
-                & (raw_iy0 <= iy)
-                & (iy <= np.floor(np.maximum(P[:, 1], P[:, 4]) / s_val)))
-            if not len(jsel):
-                return []
-            ray_j, cam_j = ray[jsel], cam[jsel]
-            # canonical-cell dedup as 1-D predicates: the pair survives
-            # only where this cell is (max of the two low x-indices, max
-            # of the low y-indices). Every i has dil_ix0 ≤ ix (the cell
-            # is in its dilated cover) and every j has raw_ix0 ≤ ix, so
-            # max == ix ⇔ at least one side's low index EQUALS ix — an
-            # outer OR of two 1-D bools, no (i, j)-shaped arithmetic
-            eqx_i = dil_ix0 == ix
-            eqy_i = dil_iy0 == iy
-            eqx_j = raw_ix0[jsel] == ix
-            eqy_j = raw_iy0[jsel] == iy
-            n = len(ray)
-            out = []
-            step = max(1, _PAIR_CHUNK // max(1, len(jsel)))
-            for i0 in range(0, n, step):
-                i1 = min(n, i0 + step)
-                m = ray[i0:i1, None] < ray_j[None, :]
-                if cross_camera_only:
-                    m &= cam[i0:i1, None] != cam_j[None, :]
-                m &= eqx_i[i0:i1, None] | eqx_j[None, :]
-                m &= eqy_i[i0:i1, None] | eqy_j[None, :]
-                ii, js = np.nonzero(m)
-                if not len(ii):
-                    continue
-                ii += i0
-                jj = jsel[js]
-                # bbox-gap prefilter (same bound as the join path):
-                # dist ≥ √(Σ per-axis bbox gaps²), so gap² > τ² pairs can
-                # never pass the exact filter — prunes ~94% of candidates
-                # before the gather-heavy kernel
-                g2 = np.zeros(len(ii))
-                for lo_c, hi_c in ((0, 3), (1, 4), (2, 5)):
-                    lo = np.minimum(P[:, lo_c], P[:, hi_c])
-                    hi = np.maximum(P[:, lo_c], P[:, hi_c])
-                    g = np.maximum(
-                        0.0, np.maximum(lo[ii], lo[jj])
-                        - np.minimum(hi[ii], hi[jj]))
-                    g2 += g * g
-                near = np.flatnonzero(g2 <= tau * tau)
-                if not len(near):
-                    continue
-                ii, jj = ii[near], jj[near]
-                d = _pair_dist_exact(a0[ii], a1[ii], a0[jj], a1[jj])
-                keep = d <= tau
-                if not keep.any():
-                    continue
-                d = d[keep]
-                out.append(pd.DataFrame({
-                    "src": ray[ii[keep]], "dst": ray[jj[keep]],
-                    "weight": 1.0 / np.maximum(d, min_dist), "dist": d}))
-            return out
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = [pdf[c].to_numpy() for c in cols]
-            if tail is not None:
-                arrs = [np.concatenate([t, a]) for t, a in zip(tail, arrs)]
-            cells = arrs[0]
-            bounds = np.flatnonzero(cells[1:] != cells[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            # hold back the LAST run — it may continue in the next batch
-            chunks = []
-            for k in range(len(starts) - 1):
-                chunks.extend(emit([a[starts[k]:starts[k + 1]] for a in arrs]))
-            tail = [a[starts[-1]:] for a in arrs]
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)
-        if tail is not None and len(tail[0]):
-            chunks = emit(tail)
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)
-
-    return part.mapInPandas(run_partition, schema=schema)
-
-
 def ray_proximity_edges(
     rays: DataFrame,
     tau: float,
     res: int | None = None,
     min_dist: float = 1e-8,
     cross_camera_only: bool = True,
-    use_jvm_kernel: bool = True,
     cell_partitions: int | None = None,
-    pair_mode: str = "join",
 ) -> DataFrame:
     """→ (src, dst, weight, dist): sparse proximity graph over segments.
 
@@ -341,45 +143,34 @@ def ray_proximity_edges(
     (dist clamped below by ``min_dist`` — the reference's 1/dist with
     potential inf is made finite and deterministic).
 
-    Two execution paths, identical output (bit-identical float64 —
-    ``_pair_dist_exact`` replicates the staged JVM kernel's op order):
+    SINGLE-EXCHANGE cell-partitioned SORT-MERGE self-join:
 
-    - ``pair_mode="join"`` (default): SINGLE-EXCHANGE cell-partitioned
-      SORT-MERGE self-join. Both sides consume the same repartitioned
-      τ-dilated cover (canonically-equal exchange subtrees → Spark
-      plans a ReusedExchange: the cover is exploded, row-packed and
-      shuffled ONCE), the b side recovers its raw-cover role from the
-      coordinates post-shuffle (raw ⊆ dilated; taint-pinned filter),
-      the canonical-cell condition rides in the join, and a bbox-gap
-      prefilter guards the staged whole-stage-codegen distance kernel
-      (``with_seg_dist``). Measured at the dense bench: the two-sided
-      form's second explode+pack+write stage was the scaling sink
-      (per-task CPU inflated ~5x from 4→16 cores — bus-bound), and the
-      single-exchange form cut wall 28-32% at BOTH parallelism levels
-      and lifted 4→16 efficiency ~0.79 → 0.83. The join is hinted
-      ``merge`` on the explicit repartition: Catalyst's size estimate
-      for an exploded side of a tiny scan undershoots by orders of
-      magnitude and would pick a BroadcastHashJoin (measured:
-      memory-bound, ~0.57 scaling; at 10¹²-doc scale a data-sized
-      broadcast is a driver OOM), and the user repartition also pins
-      the pair-enumeration stage's task count (AQE byte-coalescing
-      would size it by shuffle INPUT bytes; the work is the O(pairs)
-      join OUTPUT).
-    - ``pair_mode="cellgroup"``: the same single dilated-cover shuffle,
-      then per-cell vectorized numpy pair masks + the Eberly kernel
-      inside ``mapInPandas`` — no second shuffle READ and no merge-join
-      sorts at all. The raw-cover role is recovered per row as in the
-      join path, and the canonical-cell dedup reduces to an outer OR of
-      1-D equality masks, so candidate pairs never exist outside
-      cache-resident numpy temporaries. The right trade when sort cost
-      or shuffle-read bandwidth dominates (very long segments or fat
-      payload columns); at the dense bench workload it measured SLOWER
-      than the join and scaled worse (the Python-side pair masks and
-      gathers cost more than the cache-resident merge sorts), which is
-      why it is not the default.
+    - Both sides consume the same repartitioned τ-dilated cover. The
+      exchange subtrees are canonically equal, so Spark plans a
+      ReusedExchange and the cover is exploded, row-packed and shuffled
+      ONCE. Measured at the dense bench: a two-sided form (a second,
+      raw-cover explode+pack+write stage) was the scaling sink (per-task
+      CPU inflated ~5x from 4→16 cores — bus-bound); the single-exchange
+      form cut wall 28-32% at BOTH parallelism levels and lifted 4→16
+      efficiency ~0.79 → 0.83.
+    - The b side recovers its raw-cover role from the coordinates
+      post-shuffle (raw ⊆ dilated). The recovered bounds carry a
+      rand()*0.0 taint: untainted, PushDownPredicates would push them
+      below the repartition and make the b-side exchange distinct again.
+    - The canonical-cell dedup rides in the join condition, and a
+      bbox-gap prefilter guards the staged whole-stage-codegen distance
+      kernel (``with_seg_dist``).
+    - The join is hinted ``merge`` on the explicit repartition:
+      Catalyst's size estimate for an exploded side of a tiny scan
+      undershoots by orders of magnitude and would pick a
+      BroadcastHashJoin (measured: memory-bound, ~0.57 scaling; at
+      10¹²-doc scale a data-sized broadcast is a driver OOM), and the
+      user repartition also pins the pair-enumeration stage's task count
+      (AQE byte-coalescing would size it by shuffle INPUT bytes; the work
+      is the O(pairs) join OUTPUT).
 
-    Both paths bound the candidate count by physical ray density per
-    cell — neither materializes the N² grid the reference blocks over.
+    The candidate count is bounded by physical ray density per cell —
+    the join never materializes the N² grid the reference blocks over.
     """
     if res is None:
         # cell comfortably larger than τ keeps ring logic unnecessary
@@ -387,9 +178,6 @@ def ray_proximity_edges(
     if cell_partitions is None:
         sc = rays.sparkSession.sparkContext
         cell_partitions = max(sc.defaultParallelism * 4, 16)
-    if pair_mode == "cellgroup":
-        return _cell_grouped_edges(
-            rays, tau, res, min_dist, cross_camera_only, cell_partitions)
     # ONE cover shuffle feeds BOTH join sides. The two sides used to
     # explode different covers (a: τ-dilated, b: raw) — two full
     # explode+pack+write map stages whose per-task CPU measured inflating
@@ -487,13 +275,7 @@ def ray_proximity_edges(
         "_g2", gx * gx + gy * gy + gz * gz
         + F.rand(7) * F.lit(0.0)).filter(
         F.col("_g2") <= F.lit(tau) * F.lit(tau)).drop("_g2")
-    if use_jvm_kernel:
-        scored = with_seg_dist(cand, out="dist")
-    else:
-        seg_dist = _pair_distance_udf()
-        scored = cand.withColumn("dist", seg_dist(
-            "a_sx", "a_sy", "a_sz", "a_ex", "a_ey", "a_ez",
-            "b_sx", "b_sy", "b_sz", "b_ex", "b_ey", "b_ez"))
+    scored = with_seg_dist(cand, out="dist")
     # the canonical-cell join condition already emits each pair exactly
     # once — no post-hoc dropDuplicates exchange needed
     edges = (
@@ -564,7 +346,7 @@ def connected_components(
     reference uses Louvain (``utils/numeric.py:509-556``) whose resolution
     splitting is seed-sensitive; components are the deterministic
     contract our fixtures use (SURVEY §7 hard-part 1). For modularity
-    splitting on small collapsed graphs see ``louvain_driver``.
+    splitting see ``community.louvain_distributed``.
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -591,21 +373,6 @@ def connected_components(
         if changed == 0:
             break
     return labels.select(F.col("a").alias("node"), "component")
-
-
-def louvain_driver(edges_rows: list, resolution: float = 1.0, seed: int = 42):
-    """Driver-side Louvain on a *collapsed* (post-threshold, sparse) edge
-    list — the reference's exact dependency (networkx), usable when the
-    graph fits the driver (it does: edges are thresholded to physical
-    proximity). Returns list of sets of node ids, sorted by size desc."""
-    import networkx as nx
-
-    g = nx.Graph()
-    for r in edges_rows:
-        g.add_edge(int(r["src"]), int(r["dst"]), weight=float(r["weight"]))
-    comms = nx.community.louvain_communities(
-        g, weight="weight", resolution=resolution, seed=seed)
-    return sorted(comms, key=len, reverse=True)
 
 
 # ---------------------------------------------------------------------------

@@ -117,9 +117,6 @@ def test_overlay_large_x_small(spark):
     got = polygon_overlap_join(left, right).collect()
     assert [(r["left_id"], r["right_id"]) for r in got] == [(0, 0)]
     assert got[0]["overlap_area"] == 16.0
-    # and the distributed-covering path
-    got2 = polygon_overlap_join(left, right, broadcast_right=False).collect()
-    assert [(r["left_id"], r["right_id"]) for r in got2] == [(0, 0)]
 
 
 def test_visibility_coarsened_footprint(spark):

@@ -124,33 +124,6 @@ class TestClip:
         assert a1 + a2 == pytest.approx(total)
 
 
-class TestTriangleUnion:
-    def test_two_triangles_square(self):
-        coords = np.array([[0, 0], [1, 0], [1, 1], [0, 1]], dtype=float)
-        tris = np.array([[0, 1, 2], [0, 2, 3]])
-        rings = geom.triangles_union_rings(tris, coords)
-        assert len(rings) == 1
-        assert abs(geom.ring_signed_area(rings[0])) == pytest.approx(1.0)
-        assert len(rings[0]) == 5  # 4 corners + closure
-
-    def test_union_with_hole(self):
-        # 3x3 grid of squares (each 2 tris) with center square missing → ring + hole
-        xs, ys = np.meshgrid(np.arange(4.0), np.arange(4.0), indexing="ij")
-        coords = np.stack([xs.ravel(), ys.ravel()], axis=1)
-        idx = np.arange(16).reshape(4, 4)
-        tris = []
-        for i in range(3):
-            for j in range(3):
-                if (i, j) == (1, 1):
-                    continue
-                a, b, c, d = idx[i, j], idx[i + 1, j], idx[i + 1, j + 1], idx[i, j + 1]
-                tris += [[a, b, c], [a, c, d]]
-        rings = geom.triangles_union_rings(np.asarray(tris), coords)
-        areas = sorted(abs(geom.ring_signed_area(r)) for r in rings)
-        assert len(rings) == 2
-        assert areas == pytest.approx([1.0, 9.0])
-
-
 class TestCamera:
     def _nadir(self, x=0.0, y=0.0, z=10.0):
         return np.array([[1, 0, 0, x], [0, -1, 0, y], [0, 0, -1, z], [0, 0, 0, 1.0]])

@@ -98,6 +98,25 @@ def _rays_df(spark, starts, ends, camera_ids):
     return spark.createDataFrame(pdf)
 
 
+def _assert_edges_match_bruteforce(spark, starts, ends, cams, tau):
+    got = RT.ray_proximity_edges(_rays_df(spark, starts, ends, cams), tau=tau).collect()
+    got_set = {(r["src"], r["dst"]) for r in got}
+    # brute force over all pairs, in slabs of 2^18 pairs
+    ii, jj = np.triu_indices(len(starts), k=1)
+    d = np.concatenate([
+        cam.segment_pair_closest(starts[i], ends[i], starts[j], ends[j])[2]
+        for i, j in zip(np.array_split(ii, len(ii) // (1 << 18) + 1),
+                        np.array_split(jj, len(jj) // (1 << 18) + 1))])
+    mask = (d <= tau) & (cams[ii] != cams[jj])
+    expected = {(int(a), int(b)) for a, b in zip(ii[mask], jj[mask])}
+    assert got_set == expected
+    # weights = 1/dist
+    dmap = {(int(a), int(b)): float(x) for a, b, x in zip(ii[mask], jj[mask], d[mask])}
+    for r in got:
+        assert r["weight"] == pytest.approx(1.0 / max(dmap[(r["src"], r["dst"])], 1e-8))
+    return got_set
+
+
 def test_ray_edges_match_bruteforce(spark):
     rng = np.random.default_rng(5)
     n = 120
@@ -106,19 +125,24 @@ def test_ray_edges_match_bruteforce(spark):
     dirs /= np.linalg.norm(dirs, axis=1, keepdims=True)
     ends = starts + dirs * 5.0
     cams = rng.integers(0, 6, n)
-    tau = 0.8
-    got = RT.ray_proximity_edges(_rays_df(spark, starts, ends, cams), tau=tau).collect()
-    got_set = {(r["src"], r["dst"]) for r in got}
-    # brute force
-    ii, jj = np.triu_indices(n, k=1)
-    _, _, d = cam.segment_pair_closest(starts[ii], ends[ii], starts[jj], ends[jj])
-    mask = (d <= tau) & (cams[ii] != cams[jj])
-    expected = {(int(a), int(b)) for a, b in zip(ii[mask], jj[mask])}
-    assert got_set == expected
-    # weights = 1/dist
-    dmap = {(int(a), int(b)): float(x) for a, b, x in zip(ii[mask], jj[mask], d[mask])}
-    for r in got:
-        assert r["weight"] == pytest.approx(1.0 / max(dmap[(r["src"], r["dst"])], 1e-8))
+    _assert_edges_match_bruteforce(spark, starts, ends, cams, tau=0.8)
+
+
+def test_ray_edges_match_bruteforce_dense(spark):
+    """Dense case: 1500 long segments over a 25×25 patch, 12 cameras —
+    every segment spans many cells and most pairs share several, so the
+    canonical-cell dedup and the bbox-gap prefilter are exercised hard."""
+    rng = np.random.default_rng(17)
+    n = 1500
+    cams = rng.integers(0, 12, n)
+    sx, sy = rng.uniform(0, 25, n), rng.uniform(0, 25, n)
+    sz = rng.uniform(0, 1, n)
+    ex, ey = rng.uniform(0, 25, n), rng.uniform(0, 25, n)
+    ez = rng.uniform(1, 3, n)
+    starts = np.stack([sx, sy, sz], axis=1)
+    ends = np.stack([ex, ey, ez], axis=1)
+    edges = _assert_edges_match_bruteforce(spark, starts, ends, cams, tau=0.45)
+    assert len(edges) > 100
 
 
 def test_ray_edges_cross_camera_only(spark):
@@ -220,29 +244,3 @@ def test_knn_guaranteed_true_on_dense_refs(spark):
                       "x": rng.uniform(0, 50, 400), "y": rng.uniform(0, 50, 400)})
     got = KNN.knn_join(spark.createDataFrame(q), spark.createDataFrame(r), k=2).collect()
     assert all(row["guaranteed"] for row in got)
-
-
-def test_ray_edges_cellgroup_bit_identical(spark):
-    """The cell-grouped execution path must produce the SAME edge set as
-    the merge-join path, bit-identical float64 (``_pair_dist_exact``
-    replicates the staged JVM kernel's op order)."""
-    rng = np.random.default_rng(17)
-    n = 1500
-    pdf = pd.DataFrame({
-        "ray_id": np.arange(n, dtype=np.int64),
-        "camera_id": rng.integers(0, 12, n),
-        "sx": rng.uniform(0, 25, n), "sy": rng.uniform(0, 25, n),
-        "sz": rng.uniform(0, 1, n),
-        "ex": rng.uniform(0, 25, n), "ey": rng.uniform(0, 25, n),
-        "ez": rng.uniform(1, 3, n)})
-    rays = spark.createDataFrame(pdf)
-    a = (RT.ray_proximity_edges(rays, tau=0.45, pair_mode="join")
-         .toPandas().sort_values(["src", "dst"]).reset_index(drop=True))
-    b = (RT.ray_proximity_edges(rays, tau=0.45, pair_mode="cellgroup")
-         .toPandas().sort_values(["src", "dst"]).reset_index(drop=True))
-    assert len(a) > 100
-    assert len(a) == len(b)
-    assert (a[["src", "dst"]].to_numpy() == b[["src", "dst"]].to_numpy()).all()
-    for c in ("weight", "dist"):
-        assert np.array_equal(a[c].to_numpy().view(np.uint64),
-                              b[c].to_numpy().view(np.uint64))

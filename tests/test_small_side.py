@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from geograypher_spark.operators import spatial_join as SJ
 from geograypher_spark.operators import visibility as V
+from geograypher_spark.operators.overlay import polygon_overlap_join
 from geograypher_spark.sources.scene import scene_to_spark
 
 
@@ -61,5 +62,8 @@ def test_small_side_over_cap_raises(spark, scene_parquet, monkeypatch):
         SJ.points_in_polygons(pts, psel)
     with pytest.raises(ValueError, match="visibility_join"):
         V.visibility_join(cams, faces, z_range=(0.0, 100.0))
+    with pytest.raises(ValueError, match="polygon_overlap_join"):
+        polygon_overlap_join(psel.withColumnRenamed("polygon_id", "left_id"),
+                             psel.withColumnRenamed("polygon_id", "right_id"))
     # the salted shuffle join is the distributed route: no driver collect
     assert SJ.points_in_polygons(pts, psel, salt_factor=1).count() > 0

@@ -58,6 +58,29 @@ def test_ground_plane_union_open_sheet(spark, scene):
     assert got[0]["n_rings"] == 1
 
 
+def test_union_class_with_hole(spark):
+    """Integer grid (16x16 quads): class 1 is the 4x4 block at 4..8,
+    a hole inside class 0. Class 0 → outer ring + hole ring, area
+    256 − 16; the hole's centre is outside class 0 and inside class 1."""
+    from geograypher_spark.plans.driver_queries import _union_grid_spark
+
+    faces, verts = _union_grid_spark(spark)
+    got = {r["class_id"]: r for r in face_class_union(faces, verts).collect()}
+    assert got.keys() == {0.0, 1.0}
+    assert got[0.0]["n_rings"] == 2
+    assert got[0.0]["area"] == 256.0 - 16.0
+    assert got[1.0]["n_rings"] == 1
+    assert got[1.0]["area"] == 16.0
+    rings = [r for poly in geom.wkb_to_rings(bytes(got[0.0]["geometry_wkb"]))
+             for r in poly]
+    assert sorted(abs(geom.ring_signed_area(r)) for r in rings) == [16.0, 256.0]
+    px, py = np.array([6.0, 1.5]), np.array([6.0, 1.5])  # hole centre, class 0
+    in0 = geom.points_in_wkb(px, py, bytes(got[0.0]["geometry_wkb"]))
+    in1 = geom.points_in_wkb(px, py, bytes(got[1.0]["geometry_wkb"]))
+    assert in0.tolist() == [False, True]
+    assert in1.tolist() == [True, False]
+
+
 class TestNonOverlapResolution:
     """W3 vector-space resolution (reference utils/geospatial.py:74-107)."""
 
