@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 # live shingle caches, keyed by PLAN (semanticHash), bounded LRU: the
 # result DataFrames are lazy, so a cache cannot be released inside the
 # builder — but keying by call-site (round-3 shape) meant building a
-# second jaccard/minhash pipeline over a DIFFERENT corpus evicted the
+# second jaccard pipeline over a DIFFERENT corpus evicted the
 # first pipeline's cache before its DataFrame ever executed (ADVICE r3).
 # Plan-keying keeps each distinct input's cache alive until LRU
 # capacity; identical plans still share one cache. A lock makes the
@@ -42,7 +42,7 @@ _untracked_caches: list[DataFrame] = []
 _cache_lock = _threading.Lock()
 
 
-def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
+def _persist_scoped(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     try:
@@ -81,7 +81,7 @@ def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
 
 
 def unpersist_dedup_caches() -> None:
-    """Release every shingle cache created by jaccard_pairs/minhash_dedup.
+    """Release every shingle cache created by jaccard_pairs.
     Safe to call any time after the consuming action has run."""
     with _cache_lock:
         caches = list(_live_caches.values()) + _untracked_caches
@@ -105,6 +105,33 @@ def exact_duplicates(
     )
 
 
+def _shingle_words(
+    docs: DataFrame, id_col: str, text_col: str, n: int,
+) -> tuple[DataFrame, list]:
+    """The shared shingle prologue: split → index sequence → explode.
+    Returns the exploded (id, _a, _i) rows and the n word columns of the
+    shingle starting at ``_i``; the caller combines the words."""
+    # name the split array: inlining it would re-split the text once per
+    # shingle index (O(len²)); as a multi-referenced attribute it survives
+    # CollapseProject and evaluates once per row
+    with_arr = docs.withColumn("_arr", F.split(F.col(text_col), " "))
+    arr = F.col("_arr")
+    idxs = F.when(
+        F.size(arr) >= n, F.sequence(F.lit(1), F.size(arr) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    # explode the index range and read the words via element_at lookups:
+    # the whole row stays inside ONE WholeStageCodegen span (Generate +
+    # Project fuse; the word array is never copied per shingle because
+    # nothing crosses a stage boundary until the (id, shingle) distinct
+    # exchange). The F.transform(lambda: ...(slice)) form evaluates the
+    # higher-order lambda INTERPRETED per element — measured 3× the stage
+    # CPU for the hashed variant (227 vs 73 core-s on the amplified sf0.1
+    # corpus at 16c).
+    exploded = with_arr.select(F.col(id_col), arr.alias("_a"),
+                               F.explode(idxs).alias("_i"))
+    return exploded, [F.element_at("_a", F.col("_i") + k) for k in range(n)]
+
+
 def word_shingles(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
 ) -> DataFrame:
@@ -114,25 +141,9 @@ def word_shingles(
     far less generated code than the round-1 posexplode + lead-window
     form. Mirrored verbatim in the oracle SQL (list slicing + scalar
     generate_series)."""
-    # name the split array: inlining it would re-split the text once per
-    # shingle index (O(len²)); as a multi-referenced attribute it survives
-    # CollapseProject and evaluates once per row
-    with_arr = docs.withColumn("_arr", F.split(F.col(text_col), " "))
-    arr = F.col("_arr")
-    idxs = F.when(
-        F.size(arr) >= n, F.sequence(F.lit(1), F.size(arr) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    # explode + element_at instead of transform(lambda: concat_ws(slice)):
-    # the lambda form evaluates interpreted per element; this shape stays
-    # in one WholeStageCodegen span (see word_shingle_hashes — measured
-    # 3× less stage CPU for the hashed variant, same cause here)
-    exploded = with_arr.select(F.col(id_col), arr.alias("_a"),
-                               F.explode(idxs).alias("_i"))
+    exploded, words = _shingle_words(docs, id_col, text_col, n)
     return (exploded.select(
-        F.col(id_col),
-        F.concat_ws(
-            " ", *[F.element_at("_a", F.col("_i") + k) for k in range(n)]
-        ).alias("shingle"))
+        F.col(id_col), F.concat_ws(" ", *words).alias("shingle"))
         .distinct())
 
 
@@ -148,24 +159,9 @@ def word_shingle_hashes(
     doc the expected per-doc collision count is ~s²·2⁻⁶⁴ — zero in
     practice — and everything downstream (distinct, min-per-seed,
     intersection counts) only needs set identity, not the text."""
-    with_arr = docs.withColumn("_arr", F.split(F.col(text_col), " "))
-    arr = F.col("_arr")
-    idxs = F.when(
-        F.size(arr) >= n, F.sequence(F.lit(1), F.size(arr) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    # explode the index range and hash via element_at lookups: the whole
-    # row stays inside ONE WholeStageCodegen span (Generate + Project
-    # fuse; the word array is never copied per shingle because nothing
-    # crosses a stage boundary until the 8-byte (id, hash) distinct
-    # exchange). The F.transform(lambda: xxhash64(slice)) form evaluates
-    # the higher-order lambda INTERPRETED per element — measured 3× the
-    # stage CPU (227 vs 73 core-s on the amplified sf0.1 corpus at 16c).
-    exploded = with_arr.select(F.col(id_col), arr.alias("_a"),
-                               F.explode(idxs).alias("_i"))
+    exploded, words = _shingle_words(docs, id_col, text_col, n)
     return (exploded.select(
-        F.col(id_col),
-        F.xxhash64(*[F.element_at("_a", F.col("_i") + k) for k in range(n)]
-                   ).alias("shingle"))
+        F.col(id_col), F.xxhash64(*words).alias("shingle"))
         .distinct())
 
 
@@ -220,7 +216,7 @@ def jaccard_pairs(
         wdf = Window.partitionBy("shingle")
         sh = (sh.withColumn("_df", F.count(F.lit(1)).over(wdf))
               .filter(F.col("_df") <= df_cap).drop("_df"))
-    sh = _persist_scoped(sh, "jaccard_pairs")
+    sh = _persist_scoped(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -256,37 +252,33 @@ def minhash_signatures(
 
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str = "doc_id",
-    n_hashes: int = 16, bands: int = 4, hash_fn: str = "md5",
+    n_hashes: int = 16, bands: int = 4,
 ) -> DataFrame:
     """→ (id_a, id_b, n_bands_matched): pairs whose signatures collide in
     ≥1 band (rows_per_band = n_hashes/bands). Banded OR-amplification: the
-    classic S-curve P(candidate) = 1-(1-j^r)^b. With ``hash_fn=
-    "xxhash64"`` the band key STAYS a raw long end to end (no concat/md5
-    allocation, and no string materialization of the hash — the round-5
-    ``.cast("string")`` that re-introduced a per-exploded-row JVM string
-    is gone): the explode, the collision join and the pair groupBy all
-    run on fixed-width (int, long) keys. The md5 family keeps its string
-    schema (the oracle mirrors it). Band-hash type is internal to this
-    operator — the output schema is identical for both families."""
+    classic S-curve P(candidate) = 1-(1-j^r)^b. ``bands`` must divide
+    ``n_hashes``: a remainder would silently drop the last signature
+    columns, and zero rows per band would make every pair a candidate.
+
+    The band key is xxhash64(band_idx, h…) for either signature family and
+    STAYS a raw long end to end (no concat/md5 allocation, and no string
+    materialization of the hash): the explode, the collision join and the
+    pair groupBy all run on fixed-width (int, long) keys. Keys are equal
+    for equal bands and distinct otherwise up to 64-bit collisions; the
+    band key is internal to this operator and never in the output."""
+    if bands < 1 or n_hashes < bands or n_hashes % bands:
+        raise ValueError(
+            f"bands={bands} must be between 1 and n_hashes={n_hashes} "
+            "and divide it")
     rows = n_hashes // bands
-    if hash_fn == "xxhash64":
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(
-                    F.lit(b),
-                    *[F.col(f"h{b * rows + i}") for i in range(rows)]
-                ).alias("band_hash"))
-            for b in range(bands)])
-    else:
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(F.concat_ws(
-                    "|", F.lit(str(b)),
-                    *[F.col(f"h{b * rows + i}") for i in range(rows)])
-                ).alias("band_hash"))
-            for b in range(bands)])
+    band_structs = F.array(*[
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.xxhash64(
+                F.lit(b),
+                *[F.col(f"h{b * rows + i}") for i in range(rows)]
+            ).alias("band_hash"))
+        for b in range(bands)])
     # one explode pass — a union of per-band selects would recompute the
     # signature aggregation once per branch per join side
     stacked = signatures.select(
@@ -329,82 +321,52 @@ def _minhash_aggs(n_hashes: int, hash_fn: str):
 def minhash_dedup(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     n: int = 3, n_hashes: int = 16, bands: int = 4, threshold: float = 0.5,
-    cache: bool = True, hash_fn: str = "md5",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: signatures → band collisions → exact
     Jaccard verify on candidates only → (id_a, id_b, jaccard).
 
-    ``cache=True`` (default) persists the shingle and candidate tables in
-    the scoped LRU — right for interactive sessions that re-verify with
-    different thresholds. For a ONE-SHOT batch run pass ``cache=False``:
-    a cold InMemoryRelation consumed by two independent query stages is
-    materialized by BOTH when the scheduler has spare slots (measured:
-    the 1.4 GB shingle explode+distinct map side ran twice concurrently
-    at 16 cores, making the job SLOWER than at 4 where the race
-    serializes), whereas the uncached subtrees are canonically identical
-    and share one shuffle via ReusedExchange — the map side runs once,
-    only the cheap distinct reduce-side aggregate is duplicated."""
+    One persist-free plan: the candidate subtree is consumed twice (the
+    broadcast id list and the verify join) and, being canonically equal
+    in both places, shares its shuffles via ReusedExchange. The verify
+    shingles only the candidate docs — a broadcast LeftSemi of the
+    candidate ids into ``docs`` BELOW the shingler — and collects each
+    candidate doc's shingle set into one array, so the exact Jaccard is
+    ``|A∩B| / (|A| + |B| - |A∩B|)`` over two arrays per pair, a ratio of
+    exact integers."""
     shingler = word_shingles if hash_fn == "md5" else word_shingle_hashes
-    sh_raw = shingler(
-        # the explicit notnull below the explode keeps the two consumer
-        # subtrees canonically EQUAL: a join-inferred isnotnull pushed
-        # below only one side's exchange would otherwise break
-        # ReusedExchange (same gotcha as the ray-proximity self-join)
-        docs.filter(F.col(id_col).isNotNull()), id_col, text_col, n)
-    sh_all = _persist_scoped(sh_raw, "minhash_dedup") if cache else sh_raw
-    sigs = sh_all.groupBy(id_col).agg(*_minhash_aggs(n_hashes, hash_fn))
-    # candidate pairs are consumed three times below (ids for the
-    # semi-join reduction, the inter probe, implicitly the verify's
-    # domain) — persist so the band join runs once
-    cand_raw = lsh_candidate_pairs(sigs, id_col, n_hashes, bands, hash_fn)
-    # same cold-race rationale as sh_all: uncached, the two consumers
-    # (the broadcast id list and the inter probe) share every shuffle in
-    # the candidate subtree via ReusedExchange
-    cand = _persist_scoped(cand_raw, "minhash_cand") if cache else cand_raw
-    # SEMI-JOIN REDUCTION before the exact verify: only docs that appear
-    # in some candidate pair contribute to inter/size, so shrink the
-    # shingle table to those ids first. Without this the two verify
-    # joins re-exchange the FULL shingle set by id_a and by
-    # (id_b, shingle) — measured 2×1.4 GB of shuffle to verify ~6k pairs
-    # on the amplified sf0.1 corpus, the whole job's scaling cap. The
-    # broadcast payload is bare ids (8 B/row), bounded by 2× the pair
-    # count; a corpus where that overflows has an O(N²) LSH pair
-    # problem long before the broadcast matters.
+    # the explicit notnull below the explode keeps the two consumer
+    # subtrees canonically EQUAL: a join-inferred isnotnull pushed below
+    # only one side's exchange would otherwise break ReusedExchange (same
+    # gotcha as the ray-proximity self-join)
+    docs = docs.filter(F.col(id_col).isNotNull())
+    sigs = (shingler(docs, id_col, text_col, n)
+            .groupBy(id_col).agg(*_minhash_aggs(n_hashes, hash_fn)))
+    cand = lsh_candidate_pairs(sigs, id_col, n_hashes, bands)
+    # SEMI-JOIN REDUCTION before the exact verify, pushed BELOW the
+    # shingling (filter docs, then shingle): Catalyst does not move a
+    # LeftSemi join through a Generate on its own, so the verify branch
+    # otherwise re-exploded and re-hashed the FULL corpus just to keep ~1%
+    # of it (round-6 stage probe on dedup_big at 16 cores: the verify-side
+    # shingle pass was the single largest stage, 58 s of executor time vs
+    # 38 s for the signature pass). Shingles are per-doc, so
+    # shingler(filter(docs)) == filter(shingler(docs)) exactly. The
+    # broadcast payload is bare ids, bounded by 2× the pair count; a corpus
+    # where that overflows has an O(N²) LSH pair problem long before the
+    # broadcast matters.
     cand_ids = (cand.select(F.col("id_a").alias(id_col))
                 .union(cand.select(F.col("id_b").alias(id_col)))
                 .distinct())
-    if cache:
-        # warm path: the shingle table is persisted — filter the cache
-        sh = sh_all.join(F.broadcast(cand_ids), id_col, "leftsemi")
-    else:
-        # one-shot path: push the candidate-id semi-join BELOW the
-        # shingling (filter docs, then shingle) — Catalyst does not move
-        # a LeftSemi join through a Generate on its own, so the verify
-        # branch otherwise re-exploded and re-hashed the FULL corpus just
-        # to keep ~1% of it (round-6 stage probe on dedup_big at 16
-        # cores: the verify-side shingle pass was the single largest
-        # stage, 58 s of executor time vs 38 s for the signature pass;
-        # shingling only candidate docs makes it a read+filter).
-        # Shingles are per-doc, so shingler(filter(docs)) ==
-        # filter(shingler(docs)) exactly.
-        docs_cand = docs.filter(F.col(id_col).isNotNull()).join(
-            F.broadcast(cand_ids), id_col, "leftsemi")
-        sh = shingler(docs_cand, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        cand.select("id_a", "id_b")
-        .join(a, "id_a").join(b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("inter"))
-    )
+    docs_cand = docs.join(F.broadcast(cand_ids), id_col, "leftsemi")
+    sets = (shingler(docs_cand, id_col, text_col, n)
+            .groupBy(id_col).agg(F.collect_list("shingle").alias("_s")))
+    inter = F.size(F.array_intersect("sa", "sb"))
     return (
-        inter
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("size_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("size_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")))
+        cand.select("id_a", "id_b")
+        .join(sets.select(F.col(id_col).alias("id_a"), F.col("_s").alias("sa")), "id_a")
+        .join(sets.select(F.col(id_col).alias("id_b"), F.col("_s").alias("sb")), "id_b")
+        .withColumn("jaccard",
+                    inter / (F.size("sa") + F.size("sb") - inter))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

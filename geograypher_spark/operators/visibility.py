@@ -38,9 +38,8 @@ FACE_COORD_COLS = ["x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2"]
 # PER-CORE cache share, not the whole LLC. Measured pinned at 16
 # concurrent renders: 65536 (≈5 MB of temporaries) beats 262144 (≈20 MB)
 # by 10-25% on both the ortho tile and perspective camera workloads, and
-# costs nothing at 4 cores. Overridable for re-tuning on other hardware.
-_CHUNK_SAMPLES = int(__import__("os").environ.get(
-    "SPARK_GRAFT_RASTER_CHUNK", "65536"))
+# costs nothing at 4 cores.
+_CHUNK_SAMPLES = 65536
 
 
 # ---------------------------------------------------------------------------

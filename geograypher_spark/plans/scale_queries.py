@@ -163,7 +163,7 @@ def sq_rasterize_big(spark, sf_dir):
 
 
 def sq_dedup_big(spark, sf_dir, replicas: int = 192):
-    """Full MinHash-LSH near-dup pipeline (shingle → 16 md5 minima → banded
+    """Full MinHash-LSH near-dup pipeline (shingle → 16 xxhash64 minima → banded
     collision join → exact-Jaccard verify) over a deterministically
     amplified documents table — the LLM-training-data tier's scaling
     witness, complementing the geometry workload.
@@ -177,14 +177,10 @@ def sq_dedup_big(spark, sf_dir, replicas: int = 192):
     All stages are hash/shuffle deterministic; jaccard is a ratio of
     exact ints — byte-identical output at any parallelism.
 
-    Runs with ``cache=False`` (one-shot batch mode, shuffle shared via
-    ReusedExchange instead of the scoped LRU): the interactive cache
-    would make a rebuilt plan's steady-state trial time only the
-    post-cache tail, and a COLD cache is materialized twice by
-    concurrent query stages — see minhash_dedup. Every timed trial is
-    therefore the FULL pipeline — shingle explode + distinct, 16-way md5
-    signature aggregation, band join, reduced verify — which is what a
-    one-shot production dedup pays."""
+    The pipeline persists nothing, so every timed trial is the FULL
+    pipeline — shingle explode + distinct, 16-way signature aggregation,
+    band join, reduced verify — which is what a one-shot production
+    dedup pays."""
     from ..operators.dedup import minhash_dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -208,7 +204,7 @@ def sq_dedup_big(spark, sf_dir, replicas: int = 192):
                        lambda w: F.concat(w, F.lit("_"),
                                           F.col("_rep").cast("string"))),
                    " ").alias("text")))
-    return minhash_dedup(big, cache=False, hash_fn="xxhash64")
+    return minhash_dedup(big, hash_fn="xxhash64")
 
 
 SCALE_QUERIES = {

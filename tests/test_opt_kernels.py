@@ -189,19 +189,18 @@ class TestHashedJaccardParity:
 
     def test_band_hash_stays_long_in_xxhash_family(self, spark):
         """VERDICT r5 #1: no string materialization of the xxhash64 band
-        key — the collision join runs on (int, long)."""
+        key — the collision join runs on (int, long) for either
+        signature family."""
         docs = spark.read.parquet(
             "/root/testdata/sf0.01/documents.parquet").select("doc_id", "text")
-        sigs = DD.minhash_signatures(docs, n_hashes=8, hash_fn="xxhash64")
-        pairs = DD.lsh_candidate_pairs(sigs, n_hashes=8, bands=4,
-                                       hash_fn="xxhash64")
-        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-        assert "cast(xxhash64" not in plan.lower()
-        # md5 family keeps its (oracle-mirrored) string schema
-        sigs_md5 = DD.minhash_signatures(docs, n_hashes=8, hash_fn="md5")
-        pairs_md5 = DD.lsh_candidate_pairs(sigs_md5, n_hashes=8, bands=4,
-                                           hash_fn="md5")
-        assert pairs_md5.columns == pairs.columns
+        columns = []
+        for hash_fn in ("xxhash64", "md5"):
+            sigs = DD.minhash_signatures(docs, n_hashes=8, hash_fn=hash_fn)
+            pairs = DD.lsh_candidate_pairs(sigs, n_hashes=8, bands=4)
+            plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+            assert "cast(xxhash64" not in plan.lower(), hash_fn
+            columns.append(pairs.columns)
+        assert columns[0] == columns[1]
 
 
 class TestOracleCanon:

@@ -68,21 +68,35 @@ class TestDedup:
     def test_minhash_xxhash_family_and_cacheless(self, spark, docs):
         """The xxhash64 scale family must find the same dup structure and
         report IDENTICAL jaccard values (jaccard is computed from shingle
-        SETS, which hashing preserves up to 64-bit collisions), with
-        cache=True and cache=False agreeing exactly."""
+        SETS, which hashing preserves up to 64-bit collisions)."""
         md5 = {(r["id_a"], r["id_b"]): r["jaccard"]
                for r in DD.minhash_dedup(docs, threshold=0.3).collect()}
-        for cache in (True, False):
-            xx = {(r["id_a"], r["id_b"]): r["jaccard"]
-                  for r in DD.minhash_dedup(
-                      docs, threshold=0.3, cache=cache,
-                      hash_fn="xxhash64").collect()}
-            assert xx[("d1", "d2")] == 1.0
-            assert xx[("d4", "d6")] == 1.0
-            for pair in set(xx) & set(md5):
-                assert xx[pair] == pytest.approx(md5[pair])
+        xx = {(r["id_a"], r["id_b"]): r["jaccard"]
+              for r in DD.minhash_dedup(
+                  docs, threshold=0.3, hash_fn="xxhash64").collect()}
+        assert xx[("d1", "d2")] == 1.0
+        assert xx[("d4", "d6")] == 1.0
+        for pair in set(xx) & set(md5):
+            assert xx[pair] == pytest.approx(md5[pair])
         with pytest.raises(ValueError):
             DD.minhash_dedup(docs, hash_fn="sha1").collect()
+
+    def test_minhash_dedup_persists_nothing(self, spark, docs):
+        """minhash_dedup is one persist-free plan: running it leaves
+        Spark's cache manager empty."""
+        DD.unpersist_dedup_caches()
+        spark.catalog.clearCache()
+        DD.minhash_dedup(docs).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    def test_lsh_bands_must_divide_hashes(self, spark, docs):
+        """bands > n_hashes (0 rows per band: every pair a candidate) and
+        a remainder (the last signature column silently dropped) both
+        raise instead of returning a wrong candidate set."""
+        sigs = DD.minhash_signatures(docs, n_hashes=4)
+        for bands in (8, 3, 0):
+            with pytest.raises(ValueError, match="bands"):
+                DD.lsh_candidate_pairs(sigs, n_hashes=4, bands=bands)
 
     def test_shingle_hashes_match_string_shingles(self, spark, docs):
         """word_shingle_hashes must be a bijective image of word_shingles:

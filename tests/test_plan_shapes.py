@@ -139,8 +139,8 @@ def test_proximity_cover_shuffled_once(spark, queries):
 
 
 def test_dedup_big_cacheless_shape(spark):
-    """The scale-path minhash pipeline (hash_fn=xxhash64, cache=False)
-    must keep the three properties that fixed its scaling:
+    """The scale-path minhash pipeline (hash_fn=xxhash64) must keep the
+    three properties that fixed its scaling:
     (1) no InMemoryRelation fence (the cold-cache race materialized the
         shingle subtree twice concurrently at 16 cores, and the fence
         blocked Catalyst from collapsing the distinct into the signature
@@ -153,7 +153,7 @@ def test_dedup_big_cacheless_shape(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text")
-    df = minhash_dedup(docs, cache=False, hash_fn="xxhash64")
+    df = minhash_dedup(docs, hash_fn="xxhash64")
     plan = _plan(df)
     assert "InMemoryTableScan" not in plan
     assert re.search(r"BroadcastHashJoin .*LeftSemi", plan), plan[:2000]
