@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.spatial_join import collect_small_side
+
 
 def remap_labels(
     df: DataFrame, label_col: str, mapping: dict[str, int],
@@ -25,11 +27,11 @@ def remap_labels(
 
 def infer_ids_to_labels(df: DataFrame, label_col: str) -> dict[int, str]:
     """X17: class dictionary from the distinct values, ids assigned in
-    sorted order (deterministic; reference infers from unique values)."""
+    sorted order (deterministic; reference infers from unique values).
+    More distinct labels than the small-side row cap raise ``ValueError``."""
     w = Window.orderBy(F.asc(label_col))
-    rows = (
+    pdf = collect_small_side(
         df.select(label_col).filter(F.col(label_col).isNotNull()).distinct()
-        .withColumn("_id", F.row_number().over(w) - 1)
-        .collect()
-    )
-    return {int(r["_id"]): r[label_col] for r in rows}
+        .withColumn("_id", F.row_number().over(w) - 1),
+        "infer_ids_to_labels")
+    return dict(zip(pdf["_id"].tolist(), pdf[label_col].tolist()))

@@ -5,11 +5,12 @@
   EXACT integer sums — order-independent, bit-identical across engines
   (the DuckDB oracle reproduces them); the final score
   dot / sqrt(na*nb) is a fixed sequence of correctly-rounded IEEE ops.
-- LSH-bucketed variant (random hyperplanes from xxhash64 signs): the scale
-  path — bucket join + exact re-rank inside buckets, never N².
-
-All JVM-side (zip_with/aggregate/transform higher-order functions — no
-Python in the hot path).
+  Runs JVM-side (zip_with/aggregate/transform higher-order functions).
+- the scale paths — hyperplane-LSH top-k, embedding near-duplicates and
+  IVF top-k — quantize once in Python (``_quantize_pack``, HALF_UP like
+  the JVM/oracle ``round``) into packed int32 ``qv`` cells and re-rank
+  candidates exactly in vectorized Arrow kernels (bucket / list matmuls),
+  never N².
 """
 
 from __future__ import annotations
@@ -18,6 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 
 def quantized(col: Column, scale: int = 1000) -> Column:
@@ -137,6 +140,25 @@ def _round_half_up(x: np.ndarray) -> np.ndarray:
     return f + np.where(x >= 0, d >= 0.5, d > 0.5)
 
 
+def _quantize_pack(vecs, scale: int) -> tuple[np.ndarray, list[bytes]]:
+    """The one Python-side quantizer: a sequence of n equal-length vectors
+    → ``(Q, cells)``. ``Q`` is the (n, dim) matrix of round(double(x)*scale)
+    by :func:`_round_half_up` (exact ints in double, bit-identical to the
+    JVM ``F.round`` / oracle ``round``); ``cells[i]`` is row i packed as
+    int32-LE bytes — the ``qv`` column format :func:`_decode_qv` reads."""
+    M = np.stack(vecs).astype(np.float64)                # (n, dim)
+    Q = _round_half_up(M * float(scale))
+    # int32 packing: out-of-range (or non-finite) components would
+    # wrap silently in the cast
+    if not (np.abs(Q) < 2**31).all():
+        raise ValueError(
+            f"quantized embedding component outside int32 at "
+            f"scale={scale}: |round(x*scale)| must be < 2**31")
+    qb = Q.astype("<i4").tobytes()
+    row_b = M.shape[1] * 4
+    return Q, [qb[i * row_b:(i + 1) * row_b] for i in range(len(M))]
+
+
 def quantized_band_struct_udf(n_planes: int, bands: int, scale: int = 1000,
                               seed: int = 42):
     """ONE Python pass per vector → struct(qv: binary, bv: array<long>):
@@ -151,17 +173,9 @@ def quantized_band_struct_udf(n_planes: int, bands: int, scale: int = 1000,
     over joined bytes instead of per-row object-array stacking, and only
     one column crosses the Python boundary once.
 
-    Quantization uses :func:`_round_half_up` — bit-identical to the JVM
-    ``F.round`` / oracle ``round`` for every double input — and the band
-    bits are signs of EXACT integer dots of that same quantized vector
-    with the integer planes (``lsh_planes``), which is precisely the
-    oracle's formulation (the previous ``_plane_bits`` rounded with
-    ``np.round``, i.e. half-to-even — equal on any input without exact
-    .5 ties, which the tie-free fixture guarantees, but HALF_UP is the
-    contract)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
+    Quantization is :func:`_quantize_pack`, and the band bits are signs
+    of EXACT integer dots of that same quantized vector with the integer
+    planes (``lsh_planes``), which is precisely the oracle's formulation."""
     rows = n_planes // bands
     out_t = T.StructType([
         T.StructField("qv", T.BinaryType()),
@@ -172,25 +186,14 @@ def quantized_band_struct_udf(n_planes: int, bands: int, scale: int = 1000,
         if len(vec) == 0:
             return pd.DataFrame({"qv": pd.Series([], dtype=object),
                                  "bv": pd.Series([], dtype=object)})
-        M = np.stack(vec.to_numpy()).astype(np.float64)      # (n, dim)
-        Q = _round_half_up(M * float(scale))                 # ints in double
-        # int32 packing: out-of-range (or non-finite) components would
-        # wrap silently in the cast
-        if not (np.abs(Q) < 2**31).all():
-            raise ValueError(
-                f"quantized embedding component outside int32 at "
-                f"scale={scale}: |round(x*scale)| must be < 2**31")
-        planes = lsh_planes(M.shape[1], n_planes, seed)
+        Q, cells = _quantize_pack(vec.to_numpy(), scale)
+        planes = lsh_planes(Q.shape[1], n_planes, seed)
         bits = (Q @ planes) > 0                              # exact int dots
         weights = 1 << np.arange(rows, dtype=np.int64)
         vals = np.stack(
             [bits[:, b * rows:(b + 1) * rows].astype(np.int64) @ weights
              for b in range(bands)], axis=1)                 # (n, bands)
-        qb = Q.astype("<i4").tobytes()
-        row_b = M.shape[1] * 4
-        return pd.DataFrame({
-            "qv": [qb[i * row_b:(i + 1) * row_b] for i in range(len(M))],
-            "bv": list(vals)})
+        return pd.DataFrame({"qv": cells, "bv": list(vals)})
 
     # the value is pure, but the nondeterministic mark stops the optimizer
     # duplicating the evaluation: the downstream posexplode's implicit
@@ -206,6 +209,93 @@ def _decode_qv(col: "pd.Series") -> np.ndarray:
     buf = b"".join(col)
     n = len(col)
     return np.frombuffer(buf, dtype="<i4").astype(np.float64).reshape(n, -1)
+
+
+def _cosine_chunks(Q: np.ndarray, N: np.ndarray):
+    """Yield ``(lo, hi, sims)``: the exact quantized cosine of rows
+    ``lo:hi`` of ``Q`` against every row of ``N``, row-chunked so a hot
+    bucket or list never allocates a full len(Q)×len(N) matrix.
+
+    dot / sqrt(na*nb) is the exact op sequence of the brute-force path
+    (ints exact in double, product < 2^53, one rounded sqrt + one rounded
+    divide) — bit-identical across engines. The divide is IN-PLACE
+    (identical correctly-rounded values, one fewer full-size temporary),
+    and the top-k callers mask slots by assigning -inf in place rather
+    than np.where over a bool mask: the kernels are memory-bound next to
+    a ~1 GFLOP/s GEMM."""
+    qn2 = (Q * Q).sum(axis=1)
+    nn2 = (N * N).sum(axis=1)
+    chunk = max(1, min(len(Q), 2_000_000 // max(len(N), 1) + 1, 4096))
+    for lo in range(0, len(Q), chunk):
+        hi = min(lo + chunk, len(Q))
+        sims = Q[lo:hi] @ N.T
+        sims /= np.sqrt(np.outer(qn2[lo:hi], nn2))
+        yield lo, hi, sims
+
+
+def _topk_frame(sims: np.ndarray, qids: np.ndarray, nids: np.ndarray,
+                k_eff: int) -> pd.DataFrame:
+    """(vec_id, neighbor_id, sim) rows of each ``sims`` row's top-``k_eff``
+    FINITE entries in (sim DESC, id ASC) order; -inf marks masked slots."""
+    idx = _topk_desc_tiebreak(sims, nids, k_eff)
+    rowi = np.repeat(np.arange(len(sims)), k_eff)
+    coli = idx.ravel()
+    s = sims[rowi, coli]
+    valid = np.isfinite(s)
+    return pd.DataFrame({"vec_id": qids[rowi[valid]],
+                         "neighbor_id": nids[coli[valid]], "sim": s[valid]})
+
+
+def _topk_schema(id_type: T.DataType) -> T.StructType:
+    return T.StructType([
+        T.StructField("vec_id", id_type),
+        T.StructField("neighbor_id", id_type),
+        T.StructField("sim", T.DoubleType()),
+    ])
+
+
+def _global_topk(local: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k over the kernels' local (vec_id, neighbor_id, sim)
+    rows — a window shuffle of a few·k slim rows per query."""
+    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (local.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("vec_id", "neighbor_id", "rank", "sim"))
+
+
+def _band_buckets(
+    embeddings: DataFrame, id_col: str, vec_col: str, n_planes: int | None,
+    bands: int, scale: int, target_bucket: int, n_vectors: int | None,
+) -> DataFrame:
+    """(vec_id, qv, bv, band_idx, band_val): one row per vector and band —
+    the hyperplane-LSH banding both LSH operators group by
+    (band_idx, band_val). ``n_planes=None`` auto-sizes the band width (see
+    ``cosine_topk_lsh``) from ``n_vectors``, counted when not given."""
+    if n_planes is None:
+        if n_vectors is None:
+            n_vectors = embeddings.count()
+        rows = max(1, int(np.ceil(np.log2(max(n_vectors, 2) / target_bucket))))
+        n_planes = rows * bands
+    elif n_planes % bands:
+        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
+    qb_udf = quantized_band_struct_udf(n_planes, bands, scale)
+    # no pre-UDF repartition: the signature UDF is one small matmul per
+    # batch, and the band-bucket exchange right below already gives the
+    # kernel stage its parallelism — the old repartition(2*cores) added a
+    # full exchange of the embedding arrays purely to spread a trivial
+    # UDF over a single-row-group local file (measured at sf1.0: full
+    # query 2.5 s with it, 1.6 s without; at warehouse scale the scan
+    # is already split and the exchange was pure overhead)
+    base = embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        qb_udf(F.col(vec_col)).alias("_s"),
+    ).select("vec_id", F.col("_s.qv").alias("qv"),
+             F.col("_s.bv").alias("bv"))
+    # ONE pass: posexplode the band array — a union of per-band selects
+    # would re-execute the signature stage once per branch per join side
+    return base.select(
+        "vec_id", "qv", "bv",
+        F.posexplode("bv").alias("band_idx", "band_val"))
 
 
 def cosine_topk_lsh(
@@ -227,42 +317,8 @@ def cosine_topk_lsh(
     on the two band arrays) instead of dropDuplicates — no extra shuffle of
     the wide candidate rows; the only shuffle after the join is the final
     per-vector top-k window over slim (id, id, sim) rows."""
-    if n_planes is None:
-        if n_vectors is None:
-            n_vectors = embeddings.count()
-        rows = max(1, int(np.ceil(np.log2(max(n_vectors, 2) / target_bucket))))
-        n_planes = rows * bands
-    else:
-        if n_planes % bands:
-            raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-        rows = n_planes // bands
-    qb_udf = quantized_band_struct_udf(n_planes, bands, scale)
-    # no pre-UDF repartition: the signature UDF is one small matmul per
-    # batch, and the band-bucket exchange right below already gives the
-    # kernel stage its parallelism — the old repartition(2*cores) added a
-    # full exchange of the embedding arrays purely to spread a trivial
-    # UDF over a single-row-group local file (measured at sf1.0: full
-    # query 2.5 s with it, 1.6 s without; at warehouse scale the scan
-    # is already split and the exchange was pure overhead)
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        qb_udf(F.col(vec_col)).alias("_s"),
-    ).select("vec_id", F.col("_s.qv").alias("qv"),
-             F.col("_s.bv").alias("bv"))
-    # ONE pass: posexplode the band array — a union of per-band selects
-    # would re-execute the signature stage once per branch per join side
-    stacked = base.select(
-        "vec_id", "qv", "bv",
-        F.posexplode("bv").alias("band_idx", "band_val"))
-
-    from pyspark.sql import types as T
-
-    id_type = embeddings.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("vec_id", id_type),
-        T.StructField("neighbor_id", id_type),
-        T.StructField("sim", T.DoubleType()),
-    ])
+    stacked = _band_buckets(embeddings, id_col, vec_col, n_planes, bands,
+                            scale, target_bucket, n_vectors)
     kk = int(k)
 
     def bucket_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -276,49 +332,23 @@ def cosine_topk_lsh(
         is emitted exactly once — dedup as a kernel filter, no shuffle."""
         band_idx = int(key[0])
         m = len(pdf)
-        empty = pd.DataFrame({"vec_id": pd.Series([], dtype=object),
-                              "neighbor_id": pd.Series([], dtype=object),
-                              "sim": pd.Series([], dtype="float64")})
         if m < 2:
-            return empty
-        Q = _decode_qv(pdf["qv"])  # int32-LE cells -> exact ints in double
-        n2 = (Q * Q).sum(axis=1)
+            return pd.DataFrame({"vec_id": pd.Series([], dtype=object),
+                                 "neighbor_id": pd.Series([], dtype=object),
+                                 "sim": pd.Series([], dtype="float64")})
+        Q = _decode_qv(pdf["qv"])
         ids = pdf["vec_id"].to_numpy()
         B = np.stack(pdf["bv"].to_numpy()) if band_idx > 0 else None
-        k_eff = min(kk, m - 1)
         outs = []
-        # row-chunked so a hot bucket never allocates an m×m matrix
-        chunk = max(1, min(m, 2_000_000 // max(m, 1) + 1, 4096))
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            # dot / sqrt(na*nb): the exact op sequence of the brute-force
-            # path (ints exact in double, product < 2^53, one rounded sqrt
-            # + one rounded divide) — bit-identical across engines
-            # dot / sqrt(na*nb) kept as the exact brute-force op sequence;
-            # the divide is IN-PLACE (identical correctly-rounded values,
-            # one fewer full-size temporary) and masked slots are assigned
-            # -inf directly instead of np.where over a bool mask (saves
-            # two more (c, m) passes — the kernel is memory-bound on this
-            # host next to its ~1 GFLOP/s GEMM)
-            sims = Q[lo:hi] @ Q.T
-            sims /= np.sqrt(np.outer(n2[lo:hi], n2))
-            c = hi - lo
-            sims[np.arange(c), np.arange(lo, hi)] = -np.inf  # self
+        for lo, hi, sims in _cosine_chunks(Q, Q):
+            sims[np.arange(hi - lo), np.arange(lo, hi)] = -np.inf  # self
             if band_idx > 0:
                 earlier = (
                     B[lo:hi, None, :band_idx] == B[None, :, :band_idx]
                 ).any(axis=-1)
                 sims[earlier] = -np.inf
-            idx = _topk_desc_tiebreak(sims, ids, k_eff)
-            rowi = np.repeat(np.arange(c), k_eff)
-            coli = idx.ravel()
-            s = sims[rowi, coli]
-            valid = np.isfinite(s)
-            outs.append(pd.DataFrame({
-                "vec_id": ids[lo:hi][rowi[valid]],
-                "neighbor_id": ids[coli[valid]],
-                "sim": s[valid]}))
-        return pd.concat(outs) if outs else empty
+            outs.append(_topk_frame(sims, ids[lo:hi], ids, min(kk, m - 1)))
+        return pd.concat(outs)
 
     # plain grouped applyInPandas: with the argpartition kernel the
     # per-bucket compute is cheap enough that AQE's byte-based partition
@@ -327,14 +357,8 @@ def cosine_topk_lsh(
     # sf0.1 (1.2 -> 2.1 s) and sf1.0 (1.6 -> 2.6 s): its extra broadcast
     # round and fixed 64-task waves cost more than the coalesced stage
     local = stacked.groupBy("band_idx", "band_val").applyInPandas(
-        bucket_topk, schema=out_schema)
-    # global top-k over ≤ bands·k slim rows per query — tiny window shuffle
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("vec_id", "neighbor_id", "rank", "sim")
-    )
+        bucket_topk, schema=_topk_schema(embeddings.schema[id_col].dataType))
+    return _global_topk(local, kk)
 
 
 def embedding_near_duplicates(
@@ -353,34 +377,8 @@ def embedding_near_duplicates(
     size is bounded by the true near-duplicate density (pairs ≥ threshold
     within a bucket), never N². As with all LSH dedup, a pair colliding in
     no band is missed by design — recall tunes with ``bands``."""
-    if n_planes is None:
-        if n_vectors is None:
-            n_vectors = embeddings.count()
-        rows = max(1, int(np.ceil(np.log2(max(n_vectors, 2) / target_bucket))))
-        n_planes = rows * bands
-    elif n_planes % bands:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    else:
-        rows = n_planes // bands
-    qb_udf = quantized_band_struct_udf(n_planes, bands, scale)
-    # no pre-UDF repartition: the signature UDF is one small matmul per
-    # batch, and the band-bucket exchange right below already gives the
-    # kernel stage its parallelism — the old repartition(2*cores) added a
-    # full exchange of the embedding arrays purely to spread a trivial
-    # UDF over a single-row-group local file (measured at sf1.0: full
-    # query 2.5 s with it, 1.6 s without; at warehouse scale the scan
-    # is already split and the exchange was pure overhead)
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        qb_udf(F.col(vec_col)).alias("_s"),
-    ).select("vec_id", F.col("_s.qv").alias("qv"),
-             F.col("_s.bv").alias("bv"))
-    stacked = base.select(
-        "vec_id", "qv", "bv",
-        F.posexplode("bv").alias("band_idx", "band_val"))
-
-    from pyspark.sql import types as T
-
+    stacked = _band_buckets(embeddings, id_col, vec_col, n_planes, bands,
+                            scale, target_bucket, n_vectors)
     id_type = embeddings.schema[id_col].dataType
     out_schema = T.StructType([
         T.StructField("id_a", id_type),
@@ -391,22 +389,16 @@ def embedding_near_duplicates(
 
     def bucket_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band_idx = int(key[0])
-        m = len(pdf)
         empty = pd.DataFrame({"id_a": pd.Series([], dtype=object),
                               "id_b": pd.Series([], dtype=object),
                               "sim": pd.Series([], dtype="float64")})
-        if m < 2:
+        if len(pdf) < 2:
             return empty
-        Q = _decode_qv(pdf["qv"])  # int32-LE cells -> exact ints in double
-        n2 = (Q * Q).sum(axis=1)
+        Q = _decode_qv(pdf["qv"])
         ids = pdf["vec_id"].to_numpy()
         B = np.stack(pdf["bv"].to_numpy()) if band_idx > 0 else None
         outs = []
-        chunk = max(1, min(m, 2_000_000 // max(m, 1) + 1, 4096))
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            sims = Q[lo:hi] @ Q.T
-            sims /= np.sqrt(np.outer(n2[lo:hi], n2))
+        for lo, hi, sims in _cosine_chunks(Q, Q):
             ok = ids[lo:hi, None] < ids[None, :]
             ok &= sims >= thr
             if band_idx > 0:
@@ -428,7 +420,7 @@ def embedding_near_duplicates(
 def cosine_topk_ivf(
     embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 5, n_lists: int | None = None, n_probe: int = 4,
-    scale: int = 1000, refine_iters: int = 0, n_vectors: int | None = None,
+    scale: int = 1000, n_vectors: int | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k — the inverted-list ANN scale path
     alongside the LSH variant.
@@ -438,19 +430,19 @@ def cosine_topk_ivf(
     nearest anchor (min L2 over EXACT integer-quantized arithmetic, ties
     to the lowest anchor index); a query probes its ``n_probe`` nearest
     lists and re-ranks their members with the exact quantized cosine.
-    ``refine_iters`` > 0 runs distributed Lloyd steps to improve the
-    anchors (better recall; the anchors then depend on means and lose the
-    closed-form SQL twin, so the contract query uses 0).
+    Anchors and vectors share one quantizer (``_quantize_pack``), so the
+    whole structure has a closed-form SQL twin.
 
     Scale shape: assignment is one broadcast-matmul pass (anchors are tiny
-    by construction); the probe join shuffles each vector once per probed
-    list; per-list re-rank is a vectorized matmul bounded by list size
-    ~N/n_lists. A neighbor appears in exactly ONE list, so per-list top-k
-    rows are already pair-unique — no dedup shuffle. Lossless within the
-    probed lists (exact re-rank + the bucket-truncation argument of
-    ``cosine_topk_lsh``)."""
-    from pyspark.sql import types as T
-
+    by construction) that also packs ``qv`` as int32 cells; the probe join
+    shuffles each vector once per probed list; per-list re-rank is a
+    vectorized matmul bounded by list size ~N/n_lists. A neighbor appears
+    in exactly ONE list, so per-list top-k rows are already pair-unique —
+    no dedup shuffle. Lossless within the probed lists (exact re-rank +
+    the bucket-truncation argument of ``cosine_topk_lsh``)."""
+    spark = embeddings.sparkSession
+    id_type = embeddings.schema[id_col].dataType
+    kk = int(k)
     if n_lists is None:
         if n_vectors is None:
             n_vectors = embeddings.count()
@@ -458,120 +450,62 @@ def cosine_topk_ivf(
     anchors_rows = (embeddings.orderBy(id_col).limit(n_lists)
                     .select(id_col, vec_col).collect())
     if not anchors_rows:  # empty corpus → empty result, typed
-        from pyspark.sql import types as T
+        return _global_topk(spark.createDataFrame([], _topk_schema(id_type)), kk)
+    C, _ = _quantize_pack([r[vec_col] for r in anchors_rows], scale)
+    bc = spark.sparkContext.broadcast((C, (C * C).sum(axis=1)))
+    npb = int(min(n_probe, n_lists))
 
-        id_type = embeddings.schema[id_col].dataType
-        return embeddings.sparkSession.createDataFrame([], T.StructType([
-            T.StructField("vec_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("sim", T.DoubleType())]))
-    C = np.round(np.stack([np.asarray(r[vec_col], dtype=np.float64)
-                           for r in anchors_rows]) * scale)  # (L, d) ints
-    c_n2 = (C * C).sum(axis=1)
-    bc = embeddings.sparkSession.sparkContext.broadcast((C, c_n2))
-    n_probe = min(n_probe, n_lists)
-
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
+    par = spark.sparkContext.defaultParallelism
     base = embeddings.repartition(max(par * 2, 8)).select(
-        F.col(id_col).alias("vec_id"),
-        quantized(F.col(vec_col), scale).alias("qv"))
-
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
     assign_schema = T.StructType([
-        T.StructField("vec_id", embeddings.schema[id_col].dataType),
-        T.StructField("qv", T.ArrayType(T.LongType())),
+        T.StructField("vec_id", id_type),
+        T.StructField("qv", T.BinaryType()),
         T.StructField("own_list", T.IntegerType()),
         T.StructField("probes", T.ArrayType(T.IntegerType())),
     ])
-    npb = int(n_probe)
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             Cm, cn2 = bc.value
-            Q = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
+            Q, cells = _quantize_pack(pdf["embedding"].to_numpy(), scale)
             # argmin ||q-c||^2 = argmin (|c|^2 - 2 q.c): exact integers
             d2 = cn2[None, :] - 2.0 * (Q @ Cm.T)
             order = np.argsort(d2, axis=1, kind="stable")  # ties -> low idx
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"],
-                "qv": pdf["qv"],
+                "qv": cells,
                 "own_list": order[:, 0].astype(np.int32),
                 "probes": list(order[:, :npb].astype(np.int32)),
             })
 
     assigned = base.mapInPandas(assign, schema=assign_schema)
-    if refine_iters > 0:
-        for _ in range(refine_iters):
-            means = (assigned.select("own_list", F.posexplode("qv")
-                                     .alias("dim", "val"))
-                     .groupBy("own_list", "dim").agg(F.avg("val").alias("m"))
-                     .groupBy("own_list")
-                     .agg(F.sort_array(F.collect_list(F.struct("dim", "m")))
-                          .alias("vals")).collect())
-            Cm = bc.value[0].copy()
-            for r in means:
-                Cm[int(r["own_list"])] = np.round(
-                    [v["m"] for v in r["vals"]])
-            bc = embeddings.sparkSession.sparkContext.broadcast(
-                (Cm, (Cm * Cm).sum(axis=1)))
-            assigned = base.mapInPandas(assign, schema=assign_schema)
-
-    members = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("qv").alias("qn"),
-        F.col("own_list").alias("probe_list"))
-    queries = assigned.select(
-        "vec_id", F.col("qv").alias("qq"),
-        F.explode("probes").alias("probe_list"))
-
-    id_type = embeddings.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("vec_id", id_type),
-        T.StructField("neighbor_id", id_type),
-        T.StructField("sim", T.DoubleType()),
-    ])
-    kk = int(k)
 
     def list_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"vec_id": pd.Series([], dtype=object),
-                              "neighbor_id": pd.Series([], dtype=object),
-                              "sim": pd.Series([], dtype="float64")})
         qs = pdf[pdf["side"] == 0]
         ns = pdf[pdf["side"] == 1]
         if not len(qs) or not len(ns):
-            return empty
-        Q = np.stack(qs["qv"].to_numpy()).astype(np.float64)
-        Nn = np.stack(ns["qv"].to_numpy()).astype(np.float64)
-        qn2 = (Q * Q).sum(axis=1)
-        nn2 = (Nn * Nn).sum(axis=1)
+            return pd.DataFrame({"vec_id": pd.Series([], dtype=object),
+                                 "neighbor_id": pd.Series([], dtype=object),
+                                 "sim": pd.Series([], dtype="float64")})
         qids = qs["vec_id"].to_numpy()
         nids = ns["vec_id"].to_numpy()
         outs = []
-        chunk = max(1, min(len(Q), 2_000_000 // max(len(Nn), 1) + 1, 4096))
-        for lo in range(0, len(Q), chunk):
-            hi = min(lo + chunk, len(Q))
-            sims = (Q[lo:hi] @ Nn.T) / np.sqrt(np.outer(qn2[lo:hi], nn2))
-            ok = qids[lo:hi, None] != nids[None, :]
-            sims = np.where(ok, sims, -np.inf)
-            k_eff = min(kk, sims.shape[1])
-            idx = _topk_desc_tiebreak(sims, nids, k_eff)
-            rowi = np.repeat(np.arange(hi - lo), k_eff)
-            coli = idx.ravel()
-            s = sims[rowi, coli]
-            valid = np.isfinite(s)
-            outs.append(pd.DataFrame({
-                "vec_id": qids[lo:hi][rowi[valid]],
-                "neighbor_id": nids[coli[valid]], "sim": s[valid]}))
-        return pd.concat(outs) if outs else empty
+        for lo, hi, sims in _cosine_chunks(_decode_qv(qs["qv"]),
+                                           _decode_qv(ns["qv"])):
+            sims[qids[lo:hi, None] == nids[None, :]] = -np.inf  # self
+            outs.append(_topk_frame(sims, qids[lo:hi], nids,
+                                    min(kk, len(nids))))
+        return pd.concat(outs)
 
-    both = (queries.select("probe_list", F.col("vec_id"), F.col("qq").alias("qv"),
-                           F.lit(0).alias("side"))
-            .unionByName(members.select(
-                "probe_list", F.col("neighbor_id").alias("vec_id"),
-                F.col("qn").alias("qv"), F.lit(1).alias("side"))))
-    local = both.groupBy("probe_list").applyInPandas(list_topk, out_schema)
-    w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= kk)
-            .select("vec_id", "neighbor_id", "rank", "sim"))
+    both = (assigned.select("vec_id", "qv",
+                            F.explode("probes").alias("probe_list"),
+                            F.lit(0).alias("side"))
+            .unionByName(assigned.select(
+                "vec_id", "qv", F.col("own_list").alias("probe_list"),
+                F.lit(1).alias("side"))))
+    local = both.groupBy("probe_list").applyInPandas(
+        list_topk, _topk_schema(id_type))
+    return _global_topk(local, kk)

@@ -246,29 +246,6 @@ def pip_udf(x: pd.Series, y: pd.Series, wkb: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def choose_salt_factor(
-    df: DataFrame, key: str = "cell",
-    target_rows_per_task: int = 200_000, cap: int = 64,
-) -> int:
-    """Salting factor from the key histogram (north_rule: skew handled
-    EXPLICITLY, AQE as backstop). Forest plots concentrate faces in a few
-    cells; the hottest key's row count divided by a per-task budget gives
-    the number of salt shards needed to level it. One cheap agg job."""
-    row = (
-        df.groupBy(key).count()
-        .agg(F.max("count").alias("mx"), F.avg("count").alias("avg"))
-        .collect()[0]
-    )
-    mx = int(row["mx"] or 0)
-    avg = float(row["avg"] or 1.0)
-    # no salting unless the hottest key is both big and skewed
-    if mx <= target_rows_per_task or mx <= 4 * avg:
-        return 1
-    import math
-
-    return min(cap, math.ceil(mx / target_rows_per_task))
-
-
 def salted_equi_join(
     big: DataFrame, small: DataFrame, key: str, salt_factor: int = 8,
     how: str = "inner",

@@ -94,13 +94,17 @@ class TestQuantizedBinaryPack:
             assert list(r["s"]["bv"]) == list(bv_ref[vid]), vid
 
     def test_int32_overflow_raises(self, spark):
-        """round(3e6 * 1000) does not fit the int32 packing: the UDF must
-        fail instead of wrapping."""
+        """round(3e6 * 1000) does not fit the int32 packing: the LSH
+        struct UDF and IVF's list assignment (the in-range anchor is
+        vector 0) must fail instead of wrapping."""
         emb = spark.createDataFrame(
-            [(0, [3e6, 1.0])], "vec_id long, embedding array<double>")
+            [(0, [1.0, 1.0]), (1, [3e6, 1.0])],
+            "vec_id long, embedding array<double>")
         qb = SIM.quantized_band_struct_udf(8, 4, 1000)
         with pytest.raises(Exception, match="outside int32"):
             emb.select(qb(F.col("embedding")).alias("s")).collect()
+        with pytest.raises(Exception, match="outside int32"):
+            SIM.cosine_topk_ivf(emb, k=1, n_lists=1).collect()
 
 
 class TestPipExprEquivalence:

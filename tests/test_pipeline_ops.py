@@ -503,16 +503,41 @@ class TestIvf:
                 n2[r["vec_id"]] * n2[r["neighbor_id"]])
             assert r["sim"] == expect
 
-    def test_ivf_lloyd_refinement_runs(self, spark):
-        rng = np.random.default_rng(15)
-        V = rng.normal(size=(40, 8)).astype(np.float32)
-        pdf = pd.DataFrame({"vec_id": np.arange(40, dtype=np.int64),
-                            "embedding": list(V)})
-        df = spark.createDataFrame(pdf)
-        out = SIM.cosine_topk_ivf(df, k=2, n_lists=4, n_probe=2,
-                                  refine_iters=1)
-        assert out.groupBy("vec_id").count().agg(
-            F.max("count")).collect()[0][0] <= 2
+    @staticmethod
+    def _sql_ivf_twin(V, k, n_lists, n_probe):
+        """numpy twin of the ``ann_ivf`` oracle SQL with ids = row index:
+        HALF_UP quantization everywhere, the n_lists lowest ids as anchors,
+        lists ordered by (dist2, list_idx), exact cosine re-rank over the
+        probed lists with (sim DESC, id ASC) ties."""
+        Q = SIM._round_half_up(V.astype(np.float64) * 1000)
+        C = Q[:n_lists]
+        lists = np.argsort((C * C).sum(axis=1) - 2 * Q @ C.T, axis=1,
+                           kind="stable")
+        own, probes = lists[:, 0], lists[:, :n_probe]
+        out = set()
+        for q in range(len(Q)):
+            cands = [j for j in range(len(Q))
+                     if j != q and own[j] in probes[q]]
+            sim = {j: (Q[q] @ Q[j]) / np.sqrt((Q[q] @ Q[q]) * (Q[j] @ Q[j]))
+                   for j in cands}
+            ranked = sorted(cands, key=lambda j: (-sim[j], j))[:k]
+            out |= {(q, j, r + 1) for r, j in enumerate(ranked)}
+        return out
+
+    def test_ivf_anchors_round_half_up(self, spark):
+        """Exact .5 ties after *1000: the anchors must round HALF_UP like
+        the vectors and the oracle (a half-to-even anchor moves vector 3
+        into the wrong list)."""
+        V = np.array([[-0.8125, -0.75], [0.9375, 0.25], [0.875, -0.5],
+                      [0.0625, -0.25], [0.4375, -0.6875], [0.5625, 0.5625]],
+                     dtype=np.float32)
+        df = spark.createDataFrame(pd.DataFrame({
+            "vec_id": np.arange(len(V), dtype=np.int64),
+            "embedding": list(V)}))
+        got = {(r["vec_id"], r["neighbor_id"], r["rank"])
+               for r in SIM.cosine_topk_ivf(
+                   df, k=2, n_lists=2, n_probe=1).collect()}
+        assert got == self._sql_ivf_twin(V, k=2, n_lists=2, n_probe=1)
 
     def test_malformed_jpeg_segment_does_not_hang(self):
         from geograypher_spark.functions.exif import parse_jpeg_gps

@@ -47,6 +47,26 @@ def test_no_cartesian_in_headline(spark, queries):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def test_ann_ivf_packed_qv(spark, queries):
+    """IVF quantizes in its Arrow assignment step, not with the JVM
+    higher-order transform, and ships qv as packed int32 binary."""
+    import json
+
+    sp = queries["ann_ivf"](spark, SF_DIR)._jdf.queryExecution().sparkPlan()
+    assert "lambdafunction" not in sp.toString()
+    qv_types = set()
+
+    def walk(node):
+        for f in json.loads(node.schema().json())["fields"]:
+            if f["name"] == "qv":
+                qv_types.add(json.dumps(f["type"]))
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(sp)
+    assert qv_types == {'"binary"'}, qv_types
+
+
 def test_proximity_kernel_stays_staged(spark, queries):
     """The tau filter must NOT be pushed below the staged distance
     projections (round-1 bug: pushdown inlined a ~256KB predicate that

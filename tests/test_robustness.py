@@ -98,26 +98,14 @@ def test_triangle_overlap_salted_equivalence(spark, scene):
     assert a == b
 
 
-def test_choose_salt_factor_detects_skew(spark):
-    from geograypher_spark.operators.spatial_join import (
-        choose_salt_factor, with_cell)
-
-    # uniform points → no salting
-    uniform = spark.range(100_000).select(
-        ((F.col("id") * 7919 % 10000) / 100.0).alias("x"),
-        ((F.col("id") * 104729 % 10000) / 100.0).alias("y"))
-    assert choose_salt_factor(with_cell(uniform), target_rows_per_task=5000) == 1
-
-    # 90% of points in one 8m cell (a dense forest plot) → salted
+def test_salted_join_matches_unsalted_on_skew(spark):
+    # 90% of points in one 8m cell (a dense forest plot)
     skewed = spark.range(100_000).select(
         F.when(F.col("id") % 10 > 0, 1.0)
         .otherwise((F.col("id") * 7919 % 10000) / 100.0).alias("x"),
         F.when(F.col("id") % 10 > 0, 1.0)
         .otherwise((F.col("id") * 104729 % 10000) / 100.0).alias("y"))
-    sf = choose_salt_factor(with_cell(skewed), target_rows_per_task=5000)
-    assert sf >= 8
 
-    # salted join equals unsalted on the skewed data
     from geograypher_spark.operators.spatial_join import points_in_polygons
     from geograypher_spark.functions import geometry as geom
     import pandas as pd
@@ -127,5 +115,5 @@ def test_choose_salt_factor_detects_skew(spark):
         "polygon_id": pd.Series([1], dtype="int64"), "geometry_wkb": [wkb]}))
     pts = skewed.withColumn("pid", F.monotonically_increasing_id())
     a = points_in_polygons(pts, polys).count()
-    b = points_in_polygons(pts, polys, salt_factor=sf).count()
+    b = points_in_polygons(pts, polys, salt_factor=8).count()
     assert a == b

@@ -67,3 +67,13 @@ def test_small_side_over_cap_raises(spark, scene_parquet, monkeypatch):
                              psel.withColumnRenamed("polygon_id", "right_id"))
     # the salted shuffle join is the distributed route: no driver collect
     assert SJ.points_in_polygons(pts, psel, salt_factor=1).count() > 0
+
+
+def test_label_dictionary_over_cap_raises(spark, monkeypatch):
+    from geograypher_spark.functions.labels import infer_ids_to_labels
+
+    df = spark.createDataFrame([("cube",), ("cone",), ("mystery",)],
+                               "label string")
+    monkeypatch.setattr(SJ, "SMALL_SIDE_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="infer_ids_to_labels"):
+        infer_ids_to_labels(df, "label")
