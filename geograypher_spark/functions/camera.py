@@ -165,10 +165,8 @@ def inverse_distortion_canvas(
     a source sample. ``max_margin`` clips runaway inverses (non-physical
     parameter sets) to at most that fraction of the frame per side; pixels
     mapping outside are reported invalid by :func:`inverse_distortion_map`.
-    Deterministic in the camera parameters alone, so distributed partial
-    renders and their merge task agree on the geometry without
-    coordination (reference builds the same warped→ideal map densely with
-    scipy griddata, ``cameras/cameras.py:995-1090``)."""
+    (The reference builds the same warped→ideal map densely with scipy
+    griddata, ``cameras/cameras.py:995-1090``.)"""
     eu = np.arange(w, dtype=np.float64) + 0.5
     ev = np.arange(h, dtype=np.float64) + 0.5
     u = np.concatenate([eu, eu, np.full(h, 0.5), np.full(h, w - 0.5)])
@@ -189,7 +187,7 @@ def inverse_distortion_canvas(
 
 def inverse_distortion_map(
     params: dict[str, float], f: float, cx: float, cy: float,
-    w: int, h: int, canvas: tuple[int, int, int, int] | None = None,
+    w: int, h: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, tuple[int, int, int, int]]:
     """Per-output-pixel nearest-neighbour remap for render-then-warp
     distortion: for every DISTORTED pixel (r, c) (sampled at its center),
@@ -201,8 +199,7 @@ def inverse_distortion_map(
     the map is the identity (bit-exact pass-through). Matches the
     reference's render-undistorted-then-warp order-0 remap
     (``meshes.py:1817-1820`` via ``cameras.py:995-1090``)."""
-    if canvas is None:
-        canvas = inverse_distortion_canvas(params, f, cx, cy, w, h)
+    canvas = inverse_distortion_canvas(params, f, cx, cy, w, h)
     x_off, y_off, W, H = canvas
     u = np.broadcast_to(np.arange(w, dtype=np.float64)[None, :] + 0.5, (h, w))
     v = np.broadcast_to(np.arange(h, dtype=np.float64)[:, None] + 0.5, (h, w))

@@ -137,15 +137,17 @@ def auto_partitions(p: int, n_groups: int) -> int:
     return p
 
 
+# Group enumeration pulls at most this many distinct keys to the driver in
+# one action; beyond it the group count alone guarantees hash balance.
+MAX_ENUMERATED_GROUPS = 100_000
+
+
 def grouped_apply_balanced(
     df: DataFrame,
     keys: Sequence[str],
     fn: Callable[[tuple, pd.DataFrame], pd.DataFrame],
     schema,
-    partitions: int | None = None,
-    max_enumerated_groups: int = 100_000,
     groups: Sequence[tuple] | None = None,
-    volume: bool = False,
 ) -> DataFrame:
     """``df.groupBy(*keys).applyInPandas(fn, schema)`` with a
     compute-aware exchange (see module docstring).
@@ -153,61 +155,50 @@ def grouped_apply_balanced(
     ``fn(key_tuple, pdf) -> pdf`` — identical contract to applyInPandas;
     ``pdf`` contains the full rows including the key columns.
 
-    ``partitions`` defaults to 4× the session's default parallelism —
+    The partition count is 4× the session's default parallelism —
     round-robin assignment is exact, so a handful of waves absorbs
     group-cost variance, and four waves halve the last-wave straggler
     tail a two-wave schedule pays (measured ~8% of stage wall on the
     576-camera render at 2×) while per-task Python-worker overhead
     stays negligible (workers are reused across tasks). In the
-    enumeration regime the default is additionally raised by
-    ``auto_partitions`` when the group domain is thin relative to the
-    bucket count (high per-group cost variance stops averaging out —
-    see its docstring for the measurements); an explicit ``partitions``
-    is always respected verbatim. Groups are atomic: one group's rows always land
+    enumeration regime it is adjusted by ``auto_partitions`` when the
+    group domain is thin relative to the bucket count (high per-group
+    cost variance stops averaging out — see its docstring for the
+    measurements). Groups are atomic: one group's rows always land
     in one task, so per-task memory is bounded by the largest
     ⌈groups/partitions⌉ groups (enumeration regime) or by the streamed
     single group (volume regime).
 
-    Group enumeration pulls at most ``max_enumerated_groups`` distinct
-    keys to the driver in one action; beyond that the group count alone
-    guarantees hash balance and the volume path is used. When ``df`` is
-    itself expensive to compute, that probe action re-runs its lineage —
-    callers that already know the key domain (e.g. a broadcast camera
-    dict) should pass ``groups`` (a superset is fine: empty buckets cost
-    nothing, and keys with no rows produce no output, exactly like
-    applyInPandas; keys MISSING from ``groups`` — and null-valued keys,
-    which no equi-join matches — are still processed, routed to a
-    shared fallback bucket). ``volume=True`` skips the probe and goes
-    straight to
-    the hash-routed path — right for chained stages whose group count is
-    known to be large but whose keys are data-dependent.
+    More than ``MAX_ENUMERATED_GROUPS`` groups take the volume path.
+    When ``df`` is itself expensive to compute, the enumeration probe
+    re-runs its lineage — callers that already know the key domain (e.g.
+    a broadcast camera dict) should pass ``groups`` (a superset is fine:
+    empty buckets cost nothing, and keys with no rows produce no output,
+    exactly like applyInPandas; keys MISSING from ``groups`` — and
+    null-valued keys, which no equi-join matches — are still processed,
+    routed to a shared fallback bucket).
     """
     keys = list(keys)
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    p = partitions or max(par * 4, 8)
+    p = max(par * 4, 8)
 
     # ONE extra action: pull the distinct groups if there are few enough
     # to enumerate (map-side-combined distinct, tiny result). Everything
     # else — round-robin assignment, placement inversion — happens on the
     # driver, so no count job and no single-partition window stage.
-    cap = max_enumerated_groups
-    if volume and groups is None:
-        return (df.repartition(p, *keys)
-                  .groupBy(*keys).applyInPandas(fn, schema=schema))
     if groups is not None:
         head = [tuple(g) if isinstance(g, (tuple, list)) else (g,)
                 for g in groups]
     else:
-        head = df.select(*keys).distinct().take(cap + 1)
+        head = df.select(*keys).distinct().take(MAX_ENUMERATED_GROUPS + 1)
     if not head:
         return spark.createDataFrame([], schema)
-    if len(head) > cap:
+    if len(head) > MAX_ENUMERATED_GROUPS:
         return (df.repartition(p, *keys)
                   .groupBy(*keys).applyInPandas(fn, schema=schema))
 
-    if partitions is None:
-        p = auto_partitions(p, len(head))
+    p = auto_partitions(p, len(head))
     inv = inverse_bucket_keys(p)
     # stripe in content-hash order, not key order: group cost usually
     # varies smoothly with the natural key (neighboring cameras/tiles see

@@ -453,16 +453,20 @@ def cosine_topk_ivf(
         return _global_topk(spark.createDataFrame([], _topk_schema(id_type)), kk)
     C, _ = _quantize_pack([r[vec_col] for r in anchors_rows], scale)
     bc = spark.sparkContext.broadcast((C, (C * C).sum(axis=1)))
-    npb = int(min(n_probe, n_lists))
+    # a corpus smaller than n_lists has fewer anchors than lists
+    npb = int(min(n_probe, len(C)))
 
     par = spark.sparkContext.defaultParallelism
     base = embeddings.repartition(max(par * 2, 8)).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    # one row per (vector, probed list) with side=0 plus one side=1 row
+    # for the list the vector belongs to — emitted by the assignment step
+    # itself, so each vector is shuffled, quantized and assigned once
     assign_schema = T.StructType([
         T.StructField("vec_id", id_type),
         T.StructField("qv", T.BinaryType()),
-        T.StructField("own_list", T.IntegerType()),
-        T.StructField("probes", T.ArrayType(T.IntegerType())),
+        T.StructField("probe_list", T.IntegerType()),
+        T.StructField("side", T.IntegerType()),
     ])
 
     def assign(batches):
@@ -474,11 +478,15 @@ def cosine_topk_ivf(
             # argmin ||q-c||^2 = argmin (|c|^2 - 2 q.c): exact integers
             d2 = cn2[None, :] - 2.0 * (Q @ Cm.T)
             order = np.argsort(d2, axis=1, kind="stable")  # ties -> low idx
+            n = len(pdf)
+            rows = np.concatenate([np.repeat(np.arange(n), npb),
+                                   np.arange(n)])
             yield pd.DataFrame({
-                "vec_id": pdf["vec_id"],
-                "qv": cells,
-                "own_list": order[:, 0].astype(np.int32),
-                "probes": list(order[:, :npb].astype(np.int32)),
+                "vec_id": pdf["vec_id"].to_numpy()[rows],
+                "qv": np.asarray(cells, dtype=object)[rows],
+                "probe_list": np.concatenate(
+                    [order[:, :npb].ravel(), order[:, 0]]).astype(np.int32),
+                "side": np.repeat(np.int32([0, 1]), [n * npb, n]),
             })
 
     assigned = base.mapInPandas(assign, schema=assign_schema)
@@ -500,12 +508,6 @@ def cosine_topk_ivf(
                                     min(kk, len(nids))))
         return pd.concat(outs)
 
-    both = (assigned.select("vec_id", "qv",
-                            F.explode("probes").alias("probe_list"),
-                            F.lit(0).alias("side"))
-            .unionByName(assigned.select(
-                "vec_id", "qv", F.col("own_list").alias("probe_list"),
-                F.lit(1).alias("side"))))
-    local = both.groupBy("probe_list").applyInPandas(
+    local = assigned.groupBy("probe_list").applyInPandas(
         list_topk, _topk_schema(id_type))
     return _global_topk(local, kk)

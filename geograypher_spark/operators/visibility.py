@@ -57,7 +57,7 @@ def rasterize_zbuffer(
     """(h, w) int64 image of face ids, -1 = no hit. Pixel (r, c) sampled at
     image coords (c+0.5, r+0.5). Perspective-correct depth via linear 1/z.
     ``return_depth=True`` also returns the (h, w) float64 depth buffer
-    (inf = no hit) for partial-image z-merging.
+    (inf = no hit).
 
     ``ortho=True`` switches to orthographic semantics: depth interpolates
     LINEARLY in screen space (exact for a parallel projection) and the
@@ -211,22 +211,8 @@ def rasterize_zbuffer(
     return _out()
 
 
-def _scaled_intrinsics(cam_params: dict, scale: float):
-    """(f, cx, cy, w, h) after the render-scale factor — shared by the
-    render kernel and the split-path merge so canvas geometry agrees."""
-    f = float(cam_params["f"])
-    cx, cy = float(cam_params["cx"]), float(cam_params["cy"])
-    w, h = int(cam_params["w"]), int(cam_params["h"])
-    if scale != 1.0:
-        f, cx, cy = f * scale, cx * scale, cy * scale
-        w, h = int(round(w * scale)), int(round(h * scale))
-    return f, cx, cy, w, h
-
-
-def _render_group(pdf: pd.DataFrame, cam_params: dict, scale: float,
-                  return_depth: bool = False,
-                  distortion_mode: str = "vertex",
-                  _ideal_canvas: tuple[int, int, int, int] | None = None):
+def _render_group(pdf: pd.DataFrame, cam_params: dict,
+                  distortion_mode: str = "vertex"):
     """Shared per-camera render: returns the (h, w) face-id image.
 
     ``cam_params`` comes from the broadcast camera map — candidate rows
@@ -242,42 +228,29 @@ def _render_group(pdf: pd.DataFrame, cam_params: dict, scale: float,
     — exact for arbitrarily large triangles (a straight edge renders as
     the properly curved image curve) at the cost of one (h, w) inverse
     map per render.
-
-    ``_ideal_canvas`` is internal (split-render path): render the IDEAL
-    pinhole image shifted into the given ``(x_off, y_off, W, H)`` canvas
-    and skip distortion entirely — the split-path merge applies the warp
-    ONCE after depth-min-merging the ideal partials (warping each partial
-    would double-resample).
     """
     # deterministic z-tie resolution: rasterize in face_id order regardless
     # of shuffle-dependent group row order
     pdf = pdf.sort_values("face_id")
     c2w = np.asarray(cam_params["cam_to_world"], dtype=np.float64).reshape(4, 4)
-    f, cx, cy, w, h = _scaled_intrinsics(cam_params, scale)
+    f = float(cam_params["f"])
+    cx, cy = float(cam_params["cx"]), float(cam_params["cy"])
+    w, h = int(cam_params["w"]), int(cam_params["h"])
     coords = pdf[FACE_COORD_COLS].to_numpy(dtype=np.float64)
     n = len(coords)
     # coords row = [x0,y0,z0,x1,y1,z1,x2,y2,z2] → (n*3, 3) points
     pts = coords.reshape(n, 3, 3).reshape(n * 3, 3)
     distortion = cam_params.get("distortion") or {}
-    if _ideal_canvas is not None:
-        px, py, z = cam.project_points(pts, c2w, f, cx, cy, w, h)
-        x_off, y_off, w, h = _ideal_canvas
-        px = px - x_off
-        py = py - y_off
-    elif distortion and distortion_mode == "warp":
+    if distortion and distortion_mode == "warp":
         rows, cols, valid, (x_off, y_off, cw, ch) = cam.inverse_distortion_map(
             distortion, f, cx, cy, w, h)
         px, py, z = cam.project_points(pts, c2w, f, cx, cy, w, h)
         tri_px = np.stack([px - x_off, py - y_off], axis=1).reshape(n, 3, 2)
         tri_z = z.reshape(n, 3)
-        img_u, dep_u = rasterize_zbuffer(
-            tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), cw, ch,
-            return_depth=True)
-        img = np.where(valid, img_u[rows, cols], np.int64(-1))
-        if return_depth:
-            return img, np.where(valid, dep_u[rows, cols], np.inf)
-        return img
-    elif distortion:
+        img_u = rasterize_zbuffer(
+            tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), cw, ch)
+        return np.where(valid, img_u[rows, cols], np.int64(-1))
+    if distortion:
         # project via normalized coords → Brown–Conrady warp → pixels
         # (reference renders undistorted then warps, meshes.py:1817-1820;
         # distorting the vertices directly is the vectorized equivalent
@@ -296,8 +269,7 @@ def _render_group(pdf: pd.DataFrame, cam_params: dict, scale: float,
     tri_px = np.stack([px, py], axis=1).reshape(n, 3, 2)
     tri_z = z.reshape(n, 3)
     return rasterize_zbuffer(
-        tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), w, h,
-        return_depth=return_depth)
+        tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), w, h)
 
 
 # ---------------------------------------------------------------------------
@@ -310,7 +282,9 @@ def _footprint_bboxes(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batched corner-ray footprint: for n cameras at once, intersect the
     4 image-corner rays with both z-planes and bbox the valid hits.
-    Returns (any_valid, xmin, ymin, xmax, ymax), each (n,). Same math as
+    Returns (any_valid, xmin, ymin, xmax, ymax): ``any_valid`` is (n,),
+    the bbox arrays hold only the ``any_valid`` cameras (a camera looking
+    away from the mesh has no footprint to bbox). Same math as
     ``cam.cast_rays`` (normalized dirs, scale-normalized rotation) — one
     numpy pass instead of a per-camera iterrows loop."""
     n = len(f)
@@ -343,12 +317,24 @@ def _footprint_bboxes(
     HY = np.concatenate(hy_parts, axis=1)
     V = np.concatenate(v_parts, axis=1)
     any_valid = V.any(axis=1)
-    with np.errstate(invalid="ignore"):
-        xmin = np.nanmin(np.where(V, HX, np.nan), axis=1)
-        xmax = np.nanmax(np.where(V, HX, np.nan), axis=1)
-        ymin = np.nanmin(np.where(V, HY, np.nan), axis=1)
-        ymax = np.nanmax(np.where(V, HY, np.nan), axis=1)
-    return any_valid, xmin, ymin, xmax, ymax
+    V = V[any_valid]
+    HX = np.where(V, HX[any_valid], np.nan)
+    HY = np.where(V, HY[any_valid], np.nan)
+    return (any_valid, np.nanmin(HX, axis=1), np.nanmin(HY, axis=1),
+            np.nanmax(HX, axis=1), np.nanmax(HY, axis=1))
+
+
+def mesh_z_range(faces: DataFrame) -> tuple[float, float]:
+    """(zmin, zmax) over every face vertex — the two planes the camera
+    footprints are cut at. A face-less mesh has no range; (0, 0) stands
+    in, since the face side of the candidate join is empty anyway."""
+    z = faces.agg(
+        F.min(F.least("z0", "z1", "z2")).alias("zmin"),
+        F.max(F.greatest("z0", "z1", "z2")).alias("zmax"),
+    ).collect()[0]
+    if z["zmin"] is None:
+        return 0.0, 0.0
+    return float(z["zmin"]), float(z["zmax"])
 
 
 def _candidates(
@@ -357,11 +343,7 @@ def _candidates(
 ) -> DataFrame:
     """``candidate_camera_faces`` over already-collected camera ``rows``."""
     if z_range is None:
-        zstats = faces.agg(
-            F.min(F.least("z0", "z1", "z2")).alias("zmin"),
-            F.max(F.greatest("z0", "z1", "z2")).alias("zmax"),
-        ).collect()[0]
-        z_range = (float(zstats["zmin"]), float(zstats["zmax"]))
+        z_range = mesh_z_range(faces)
     # driver-side footprint covering: every camera's cells in one np.repeat
     ok, xmin, ymin, xmax, ymax = _footprint_bboxes(
         np.array(rows["cam_to_world"].tolist(), np.float64).reshape(-1, 16),
@@ -369,11 +351,10 @@ def _candidates(
         rows["cx"].to_numpy(np.float64), rows["cy"].to_numpy(np.float64),
         rows["w"].to_numpy(np.float64), rows["h"].to_numpy(np.float64),
         *z_range)
-    keep = np.nonzero(ok)[0]
     cells, counts = C.covering_cells_batch(
-        xmin[keep], ymin[keep], xmax[keep], ymax[keep], res,
-        max_cells=max_cells)
-    cover = rows.iloc[np.repeat(keep, counts)].reset_index(drop=True)
+        xmin, ymin, xmax, ymax, res, max_cells=max_cells)
+    cover = rows.iloc[np.repeat(np.nonzero(ok)[0], counts)].reset_index(
+        drop=True)
     cover.insert(0, "cell", cells)
     schema = T.StructType(
         [T.StructField("cell", T.LongType())] + list(cameras.schema.fields))
@@ -474,139 +455,40 @@ def _counts_pdf(camera_id, img: np.ndarray) -> pd.DataFrame:
     })
 
 
-_PARTIAL_SCHEMA = T.StructType([
-    T.StructField("camera_id", T.LongType()),
-    T.StructField("x0", T.IntegerType()),   # crop origin in the image
-    T.StructField("y0", T.IntegerType()),
-    T.StructField("w", T.IntegerType()),
-    T.StructField("h", T.IntegerType()),
-    T.StructField("faces", T.BinaryType()),   # int64 (h, w) face ids
-    T.StructField("depths", T.BinaryType()),  # float64 (h, w) depths
-])
-
-
 def visibility_join(
     cameras: DataFrame, faces: DataFrame,
-    res: int = 4, scale: float = 1.0,
-    max_cells: int = 4096, z_range: tuple[float, float] | None = None,
-    split_res_delta: int = 0, distortion_mode: str = "vertex",
+    res: int = 4, max_cells: int = 4096,
+    z_range: tuple[float, float] | None = None,
+    distortion_mode: str = "vertex",
 ) -> DataFrame:
     """→ (camera_id, face_id, pixel_count): for every camera, the number of
     pixels whose first hit is each face (pixel_count > 0 only). The
     engine's pix2face analog, aggregated (SURVEY §1.1 'pix2face map').
-
-    ``split_res_delta > 0`` breaks the one-task-per-camera ceiling: each
-    camera's candidates split into spatial sub-groups (face cells at
-    res + delta), every sub-group rasterizes independently into a
-    bbox-CROPPED partial z-buffer (face ids + depths), and a per-camera
-    depth-min merge reduces the partials. Spatially coherent sub-groups
-    keep each partial's crop small, so the merge shuffle moves ~the
-    footprint area once, not #subgroups full frames. Exact: merge ties on
-    (depth, face_id) reproduce the single-pass face_id-sorted strict-<
-    rule. Use for wide scenes where cameras >> cores is false (the
-    per-camera group is the straggler at 100× face counts).
+    One z-buffer render per camera.
 
     ``distortion_mode``: ``"vertex"`` (default) or ``"warp"`` — see
-    :func:`_render_group`. In the split path the partials always render
-    the IDEAL pinhole image (on the expanded warp canvas when mode is
-    ``"warp"``) and the per-camera merge applies the inverse-distortion
-    remap exactly once, so split and non-split agree bit-for-bit."""
+    :func:`_render_group`."""
     cand, bc, groups = _render_inputs(
         cameras, faces, FACE_COORD_COLS, "visibility_join", res, max_cells,
         z_range)
 
-    if split_res_delta <= 0:
-        def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return _counts_pdf(int(key[0]),
-                               _render_group(pdf, bc.value[int(key[0])], scale,
-                                             distortion_mode=distortion_mode))
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        return _counts_pdf(int(key[0]),
+                           _render_group(pdf, bc.value[int(key[0])],
+                                         distortion_mode=distortion_mode))
 
-        # camera renders are compute-dense (bytes-cheap candidate rows,
-        # z-buffer kernel per group): the balanced grouped-apply keeps the
-        # render stage at one task per camera stripe instead of the
-        # handful AQE's byte-based coalescing leaves
-        return grouped_apply_balanced(
-            cand, ["camera_id"], agg, VISIBILITY_SCHEMA, groups=groups)
-
-    sub = C.cell_id_col(F.col("x0"), F.col("y0"), res + split_res_delta)
-    cand = cand.withColumn("_sub", sub)
-
-    def _warp_canvas(p) -> tuple[int, int, int, int] | None:
-        """Expanded ideal-render canvas for this camera, or None when the
-        camera is undistorted / mode is vertex. Deterministic in the
-        camera params, so partial-render and merge tasks agree with no
-        coordination."""
-        dist = p.get("distortion") or {}
-        if not dist or distortion_mode != "warp":
-            return None
-        return cam.inverse_distortion_canvas(
-            dist, *_scaled_intrinsics(p, scale))
-
-    def render_partial(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cam_id = int(key[0])
-        img, depth = _render_group(pdf, bc.value[cam_id], scale,
-                                   return_depth=True,
-                                   distortion_mode=distortion_mode,
-                                   _ideal_canvas=_warp_canvas(bc.value[cam_id]))
-        ys, xs = np.nonzero(img >= 0)
-        empty = pd.DataFrame({
-            "camera_id": pd.Series([], dtype="int64"),
-            "x0": pd.Series([], dtype="int32"), "y0": pd.Series([], dtype="int32"),
-            "w": pd.Series([], dtype="int32"), "h": pd.Series([], dtype="int32"),
-            "faces": pd.Series([], dtype=object),
-            "depths": pd.Series([], dtype=object)})
-        if len(ys) == 0:
-            return empty
-        y0, y1 = int(ys.min()), int(ys.max()) + 1
-        x0, x1 = int(xs.min()), int(xs.max()) + 1
-        return pd.DataFrame({
-            "camera_id": [cam_id], "x0": [x0], "y0": [y0],
-            "w": [x1 - x0], "h": [y1 - y0],
-            "faces": [img[y0:y1, x0:x1].astype("<i8").tobytes()],
-            "depths": [depth[y0:y1, x0:x1].astype("<f8").tobytes()]})
-
-    # (camera, sub-cell) keys are data-dependent and numerous by
-    # construction (the split path exists for cameras << cores) — skip
-    # the enumeration probe, hash routing is balanced by volume
-    partials = grouped_apply_balanced(
-        cand, ["camera_id", "_sub"], render_partial, _PARTIAL_SCHEMA,
-        volume=True)
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        cam_id = int(key[0])
-        p = bc.value[cam_id]
-        f, cx, cy, w, h = _scaled_intrinsics(p, scale)
-        canvas = _warp_canvas(p)
-        mw, mh = (canvas[2], canvas[3]) if canvas is not None else (w, h)
-        img = np.full((mh, mw), -1, dtype=np.int64)
-        depth = np.full((mh, mw), np.inf, dtype=np.float64)
-        for r in pdf.itertuples(index=False):
-            pw, ph = int(r.w), int(r.h)
-            pf = np.frombuffer(r.faces, dtype="<i8").reshape(ph, pw)
-            pdp = np.frombuffer(r.depths, dtype="<f8").reshape(ph, pw)
-            sl = (slice(r.y0, r.y0 + ph), slice(r.x0, r.x0 + pw))
-            cur_f, cur_d = img[sl], depth[sl]
-            # strict-< plus lower-face tie-break == the single-pass
-            # face_id-sorted strict-< rule
-            take = (pdp < cur_d) | ((pdp == cur_d) & (pf >= 0) & (pf < cur_f))
-            cur_f[take] = pf[take]
-            cur_d[take] = pdp[take]
-        if canvas is not None:
-            # one inverse-distortion remap of the merged ideal frame —
-            # identical to the non-split warp render by construction
-            rows, cols, valid, _ = cam.inverse_distortion_map(
-                p.get("distortion") or {}, f, cx, cy, w, h, canvas=canvas)
-            img = np.where(valid, img[rows, cols], np.int64(-1))
-        return _counts_pdf(cam_id, img)
-
+    # camera renders are compute-dense (bytes-cheap candidate rows,
+    # z-buffer kernel per group): the balanced grouped-apply keeps the
+    # render stage at one task per camera stripe instead of the
+    # handful AQE's byte-based coalescing leaves
     return grouped_apply_balanced(
-        partials, ["camera_id"], merge, VISIBILITY_SCHEMA, groups=groups)
+        cand, ["camera_id"], agg, VISIBILITY_SCHEMA, groups=groups)
 
 
 def render_label_images(
     cameras: DataFrame, faces_with_class: DataFrame,
     class_col: str = "face_class", nodata: int = 255,
-    res: int = 4, scale: float = 1.0, distortion_mode: str = "vertex",
+    res: int = 4, distortion_mode: str = "vertex",
     z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """→ (camera_id, w, h, label_image): per-camera uint8 CLASS images —
@@ -631,7 +513,7 @@ def render_label_images(
     ])
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        img = _render_group(pdf, bc.value[int(key[0])], scale,
+        img = _render_group(pdf, bc.value[int(key[0])],
                             distortion_mode=distortion_mode)
         lab = np.full(img.shape, nodata, dtype=np.uint8)
         hit = img >= 0
@@ -663,7 +545,7 @@ def render_label_images(
 
 def render_face_images(
     cameras: DataFrame, faces: DataFrame,
-    res: int = 4, scale: float = 1.0, distortion_mode: str = "vertex",
+    res: int = 4, distortion_mode: str = "vertex",
     z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """→ (camera_id, w, h, face_image:binary): full pix2face images as
@@ -680,7 +562,7 @@ def render_face_images(
     ])
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        img = _render_group(pdf, bc.value[int(key[0])], scale,
+        img = _render_group(pdf, bc.value[int(key[0])],
                             distortion_mode=distortion_mode)
         return pd.DataFrame({
             "camera_id": [key[0]],

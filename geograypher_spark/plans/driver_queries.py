@@ -702,15 +702,13 @@ def q_visibility_zbuffer(spark, sf_dir):
     """J1: the z-buffer visibility join on the analytic flat mesh — the
     DuckDB oracle computes the pixel→face mapping in closed form
     (sources/analytic.py exactness argument; occlusion/distortion paths
-    are covered by the pixel-exact pytest oracles)."""
+    are covered by the pixel-exact pytest oracles). One render task per
+    camera (2 cameras × 20k faces)."""
     from ..operators import visibility as V
     from ..sources import analytic as AN
 
     faces, cams = AN.flat_mesh_spark(spark)
-    # 2 cameras × 20k faces would be 2 render tasks; the spatial sub-group
-    # split (res 4+7 = 0.5 m cells → ~64 sub-groups/camera) parallelizes
-    # the render and exercises the partial-z-buffer merge in the gated path
-    return V.visibility_join(cams, faces, split_res_delta=7)
+    return V.visibility_join(cams, faces)
 
 
 _UNION_G = 16  # quads per side of the union fixture; verts at INTEGER coords

@@ -158,7 +158,7 @@ def render_labels_pipeline(
 
     Returns (camera_id, w, h, label_image binary uint8, nodata=255).
     """
-    from ..operators.visibility import render_label_images
+    from ..operators.visibility import mesh_z_range, render_label_images
 
     vert_labels = SJ.points_in_polygons(
         verts.select("vert_id", "x", "y"),
@@ -179,12 +179,8 @@ def render_labels_pipeline(
     # re-execute the whole PIP + mode-vote lineage once more (measured
     # ~25% of the pipeline's stage CPU at 32 cores). At warehouse scale
     # this is the table-stats read the operator docstring describes.
-    zstats = faces.agg(
-        F.min(F.least("z0", "z1", "z2")).alias("zmin"),
-        F.max(F.greatest("z0", "z1", "z2")).alias("zmax")).collect()[0]
-    return render_label_images(
-        cameras, labeled, nodata=nodata,
-        z_range=(float(zstats["zmin"]), float(zstats["zmax"])))
+    return render_label_images(cameras, labeled, nodata=nodata,
+                               z_range=mesh_z_range(faces))
 
 
 def multiview_detections_pipeline(

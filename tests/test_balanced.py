@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geograypher_spark.operators import balanced
 from geograypher_spark.operators.balanced import (
     grouped_apply_balanced, inverse_bucket_keys, spark_hash_long)
 
@@ -65,17 +66,21 @@ def _mkdf(spark, n_groups, rows_per_group=7):
 
 
 class TestGroupedApplyBalanced:
+    # kwargs: balanced-module attributes overridden for the case
     @pytest.mark.parametrize("n_groups,kwargs", [
         (23, {}),                                   # enumeration regime
-        (23, {"max_enumerated_groups": 5}),         # forced volume regime
+        (23, {"MAX_ENUMERATED_GROUPS": 5}),         # forced volume regime
         (1, {}),
     ])
-    def test_matches_apply_in_pandas(self, spark, n_groups, kwargs):
+    def test_matches_apply_in_pandas(self, spark, monkeypatch, n_groups,
+                                     kwargs):
+        for name, value in kwargs.items():
+            monkeypatch.setattr(balanced, name, value)
         df = _mkdf(spark, n_groups)
         _agg = _make_agg()
         want = (df.groupBy("g", "h").applyInPandas(_agg, schema=SCHEMA)
                 .toPandas().sort_values(["g", "h"]).reset_index(drop=True))
-        got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA, **kwargs)
+        got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA)
                .toPandas().sort_values(["g", "h"]).reset_index(drop=True))
         pd.testing.assert_frame_equal(got, want)
 
@@ -128,17 +133,18 @@ class TestGroupedApplyBalanced:
 
     def test_group_spanning_batch_boundary(self, spark):
         """The streaming run-carver must reassemble a group whose rows
-        arrive split across Arrow batches."""
+        arrive split across Arrow batches. 40 groups on the default
+        bucket count put several groups in each partition, so group
+        edges also fall inside batches."""
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
         try:
-            df = _mkdf(spark, 4, rows_per_group=50).coalesce(1)
+            df = _mkdf(spark, 40, rows_per_group=5).coalesce(1)
             _agg = _make_agg()
             want = (df.groupBy("g", "h").applyInPandas(_agg, schema=SCHEMA)
                     .toPandas().sort_values(["g", "h"])
                     .reset_index(drop=True))
-            got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA,
-                                          partitions=2)
+            got = (grouped_apply_balanced(df, ["g", "h"], _agg, SCHEMA)
                    .toPandas().sort_values(["g", "h"])
                    .reset_index(drop=True))
             pd.testing.assert_frame_equal(got, want)

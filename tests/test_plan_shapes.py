@@ -65,6 +65,9 @@ def test_ann_ivf_packed_qv(spark, queries):
 
     walk(sp)
     assert qv_types == {'"binary"'}, qv_types
+    # the assignment step emits probe and member rows itself: every
+    # vector is shuffled, quantized and assigned once
+    assert sp.toString().count("MapInPandas") == 1, sp.toString()[:2000]
 
 
 def test_proximity_kernel_stays_staged(spark, queries):
@@ -89,21 +92,24 @@ def test_rasterize_single_shuffle(spark, queries):
 
 
 def test_render_labels_plan_sane(spark, queries):
-    """The reverse pipeline must stay cartesian-free, its render stage
-    must go through the BALANCED exchange (repartition on the synthetic
-    _gb bucket key — a user repartition AQE cannot byte-coalesce; a plain
-    camera_id exchange here would reintroduce the round-4 coalescing cap
-    that made render_labels the slowest headline query), and the class
-    gather must happen inside the render groups — no second camera-keyed
-    exchange after the render. (The face→class join shows as a broadcast
-    at this fixture scale — a size-based choice; don't assert it.)"""
-    plan = _plan(queries["render_labels"](spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert len(re.findall(r"Exchange hashpartitioning\(_gb", plan)) == 1, \
-        plan[:2000]
-    assert not re.search(r"Exchange hashpartitioning\(camera_id", plan), \
-        plan[:2000]
+    """The reverse pipeline and the visibility join must stay
+    cartesian-free and render through ONE balanced exchange (repartition
+    on the synthetic _gb bucket key — a user repartition AQE cannot
+    byte-coalesce; a plain camera_id exchange here would reintroduce the
+    round-4 coalescing cap that made render_labels the slowest headline
+    query). The class gather happens inside the render groups and the
+    visibility counts come straight out of them — no camera-keyed
+    exchange before or after the render. (The face→class join shows as a
+    broadcast at this fixture scale — a size-based choice; don't assert
+    it.)"""
+    for name in ["render_labels", "visibility_zbuffer"]:
+        plan = _plan(queries[name](spark, SF_DIR))
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert len(re.findall(r"Exchange hashpartitioning\(_gb", plan)) == 1, \
+            plan[:2000]
+        assert not re.search(r"Exchange hashpartitioning\(camera_id",
+                             plan), plan[:2000]
 
 
 def test_simhash_no_dedup_exchange(spark):
