@@ -21,6 +21,8 @@ collect of the broadcast side (``collect_small_side``); none when salted.
 
 from __future__ import annotations
 
+import math
+import numbers
 from typing import Iterator
 
 import numpy as np
@@ -154,61 +156,91 @@ def polygon_covering_cells(
     return polygons.mapInPandas(gen, schema=schema)
 
 
-def _pip_ring_expr(px, py, ring: np.ndarray):
-    """Crossing-number test for one closed ring as a pure column
-    expression — the EXACT arithmetic of ``geom.points_in_ring`` compiled
-    per edge: ``cond = (y0 <= py) != (y1 <= py)`` and
+def _sql_double(v: float) -> str:
+    """A float64 as Spark SQL text that parses back to the same bits:
+    ``repr`` is the shortest round-tripping decimal and the parser reads
+    a ``D`` literal with Java's correctly rounded ``parseDouble``."""
+    v = float(v)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    return f"CAST('{v!r}' AS DOUBLE)"
+
+
+def _sql_literal(v) -> str:
+    """A polygon id as the SQL literal ``F.lit(v)`` would build."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    if isinstance(v, numbers.Real):
+        return _sql_double(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"pip_filter_expr: unsupported polygon id {v!r}")
+
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _pip_ring_sql(px: str, py: str, ring: np.ndarray) -> tuple[str, int]:
+    """Crossing-number test for one closed ring as SQL text — the EXACT
+    arithmetic of ``geom.points_in_ring`` compiled per edge:
+    ``cond = (y0 <= py) != (y1 <= py)`` and
     ``px < x0 + (py - y0) * dx / dy`` with dx/dy precomputed in float64
     (the same subtractions numpy performs), same op order, so every
     comparison is bit-identical to the kernel. Horizontal edges are
     skipped (``cond`` is identically false for them — numpy reaches the
-    same result through its inf-divisor guard). Returns (expr, n_edges)."""
-    x0s, y0s = ring[:-1, 0], ring[:-1, 1]
-    x1s, y1s = ring[1:, 0], ring[1:, 1]
-    crossings = None
-    n = 0
-    for x0, y0, x1, y1 in zip(x0s, y0s, x1s, y1s):
+    same result through its inf-divisor guard). The per-edge terms are
+    joined flat (``t1 + t2 + ...``): the parser builds the left-deep
+    ``Add`` chain itself, while nesting each partial sum in parentheses
+    would hit its depth limit at 64 edges. Returns (sql, n_edges)."""
+    terms = []
+    for (x0, y0), (x1, y1) in zip(ring[:-1], ring[1:]):
         if y0 == y1:
             continue
-        dx = float(x1 - x0)
-        dy = float(y1 - y0)
-        cond = ((F.lit(float(y0)) <= py) != (F.lit(float(y1)) <= py)) & (
-            px < F.lit(float(x0)) + (py - F.lit(float(y0)))
-            * F.lit(dx) / F.lit(dy))
-        c = F.when(cond, 1).otherwise(0)
-        crossings = c if crossings is None else crossings + c
-        n += 1
-    if crossings is None:
-        return F.lit(False), 0
-    return (crossings % 2) == 1, n
+        a, b = _sql_double(y0), _sql_double(y1)
+        terms.append(
+            f"CASE WHEN ({a} <= {py}) != ({b} <= {py}) AND {px} < "
+            f"{_sql_double(x0)} + ({py} - {a}) * {_sql_double(x1 - x0)}"
+            f" / {_sql_double(y1 - y0)} THEN 1 ELSE 0 END")
+    if not terms:
+        return "false", 0
+    return f"(({' + '.join(terms)}) % 2 = 1)", len(terms)
 
 
-def _pip_polys_expr(px, py, polys: list[list[np.ndarray]]):
-    """``geom.points_in_multipolygon`` as a column expression: OR over
-    polygons of (exterior ring & ~holes). Returns (expr, n_edges)."""
+def _pip_polys_sql(px: str, py: str,
+                   polys: list[list[np.ndarray]]) -> tuple[str, int]:
+    """``geom.points_in_multipolygon`` as SQL text: OR over polygons of
+    (exterior ring AND NOT holes). Returns (sql, n_edges)."""
     def _closed(r: np.ndarray) -> np.ndarray:
         return r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
 
-    out = None
+    parts = []
     total = 0
     for rings in polys:
-        e, n = _pip_ring_expr(px, py, _closed(np.asarray(rings[0])))
-        total += n
-        for hole in rings[1:]:
-            he, hn = _pip_ring_expr(px, py, _closed(np.asarray(hole)))
-            e = e & ~he
-            total += hn
-        out = e if out is None else out | e
-    return (F.lit(False) if out is None else out), total
+        ring_sql = []
+        for i, ring in enumerate(rings):
+            e, n = _pip_ring_sql(px, py, _closed(ring))
+            ring_sql.append(e if i == 0 else f"NOT {e}")
+            total += n
+        parts.append(" AND ".join(ring_sql))
+    return (" OR ".join(f"({p})" for p in parts) or "false"), total
 
 
-def pip_filter_expr(px, py, pid_col, wkb_map: dict,
+def pip_filter_expr(x: str, y: str, pid: str, wkb_map: dict,
                     max_edges: int = 512):
     """The whole broadcast-path PIP refine as ONE JVM expression (a
-    polygon_id CASE over per-polygon crossing tests), or None when the
-    polygon set is too big to inline (edge budget keeps the generated
-    method well under janino limits — the caller falls back to the Arrow
-    kernel).
+    CASE on column ``pid`` over per-polygon crossing tests of columns
+    ``x``/``y``), or None when the polygon set is too big to inline (edge
+    budget keeps the generated method well under janino limits — the
+    caller falls back to the Arrow kernel).
+
+    The predicate is written as SQL text and parsed by one ``F.expr``
+    call, because building it from ``Column`` operators costs one py4j
+    round trip per operator (9,466 for the 26 polygons of the reverse
+    fixture). Doubles are written so they parse back to the same bits,
+    so every comparison matches the kernel's.
 
     Guide §4: the refine predicate was the only Python boundary in the
     point/vert spatial joins — every candidate row crossed JVM→Arrow→
@@ -217,19 +249,18 @@ def pip_filter_expr(px, py, pid_col, wkb_map: dict,
     (measured at sf1.0: points_in_polygons 0.94 s → ~0.55 s,
     ArrowEvalPython gone from the plan). The kernel path stays the
     implementation for polygon sets beyond the inlining budget."""
+    px, py, pc = _sql_name(x), _sql_name(y), _sql_name(pid)
     total = 0
-    expr = None
-    for pid, wkb in wkb_map.items():
-        polys = geom.wkb_to_rings(bytes(wkb))
-        e, n = _pip_polys_expr(px, py, polys)
+    branches = []
+    for pid_v, wkb in wkb_map.items():
+        e, n = _pip_polys_sql(px, py, geom.wkb_to_rings(bytes(wkb)))
         total += n
         if total > max_edges:
             return None
-        expr = (F.when(pid_col == F.lit(pid), e) if expr is None
-                else expr.when(pid_col == F.lit(pid), e))
-    if expr is None:
+        branches.append(f"WHEN {pc} = {_sql_literal(pid_v)} THEN {e}")
+    if not branches:
         return F.lit(False)
-    return expr.otherwise(F.lit(False))
+    return F.expr(f"CASE {' '.join(branches)} ELSE false END")
 
 
 @pandas_udf(T.BooleanType())
@@ -387,8 +418,7 @@ def points_in_polygons(
 
     # small polygon sets compile to a pure JVM predicate (bit-exact
     # twin of the winding kernel) — no Python boundary in the refine
-    expr = pip_filter_expr(F.col(x), F.col(y), F.col(polygon_id_col),
-                           wkb_map)
+    expr = pip_filter_expr(x, y, polygon_id_col, wkb_map)
     if expr is not None:
         return cand.filter(expr).drop("cell")
 

@@ -78,22 +78,33 @@ def aggregate_images(
     streaming nansum/count loop is exactly groupBy partial+final agg here.
 
     Returns (face_id, pred_class, total_weight, n_cameras).
+
+    One pass over the input: (face, class) totals and camera sets, then a
+    per-face aggregate of both. The class is the ``A.weighted_argmax``
+    pick — positive totals only, weight DESC (NaN first, as Spark orders
+    it) then class ASC — as the min of a (not NaN, -w, class) struct.
+    Every read of ``pixel_classes`` re-runs its whole lineage (the
+    visibility render included), so it is read by this one chain only.
     """
     valid = pixel_classes.filter(F.col("class_id").isNotNull())
-    counts = (
-        valid.groupBy("face_id", "class_id")
-        .agg(F.sum("pixel_count").alias("w"))
-    )
+    per_class = valid.groupBy("face_id", "class_id").agg(
+        F.sum("pixel_count").alias("w"),
+        F.collect_set("camera_id").alias("cams"))
+    w = F.col("w")
+    best = F.min(F.when(w > 0, F.struct(
+        (~F.isnan(w)).alias("not_nan"), (-w).alias("neg_w"),
+        F.col("class_id").alias("class_id"))))
     # observations are per FACE across all classes — a face seen by two
     # cameras voting for different classes has n_cameras=2, not max(1,1)
     # (reference counts valid projections per face, meshes.py:2010-2031)
-    obs = valid.groupBy("face_id").agg(
-        F.countDistinct("camera_id").alias("n_cameras"))
-    pred = A.weighted_argmax(counts, ["face_id"], "class_id", "w")
+    n_cameras = F.size(F.array_distinct(F.flatten(F.collect_list("cams"))))
     return (
-        pred.join(obs, "face_id")
-        .filter(F.col("n_cameras") >= min_observations)
-        .select("face_id", "pred_class", "total_weight", "n_cameras")
+        per_class.groupBy("face_id")
+        .agg(best.alias("best"), n_cameras.cast("long").alias("n_cameras"))
+        .filter(F.col("best").isNotNull()
+                & (F.col("n_cameras") >= min_observations))
+        .select("face_id", F.col("best.class_id").alias("pred_class"),
+                (-F.col("best.neg_w")).alias("total_weight"), "n_cameras")
     )
 
 

@@ -16,6 +16,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..functions import geometry as geom
+from ..operators.spatial_join import collect_small_side
 
 
 def write_vector_geojson(
@@ -23,8 +24,9 @@ def write_vector_geojson(
     class_names: dict | None = None,
 ) -> int:
     """S9: (class_id, geometry_wkb, ...) → one GeoJSON FeatureCollection.
-    Input is per-class collapsed output of face_class_union — tiny."""
-    rows = unions.collect()
+    Input is per-class collapsed output of face_class_union — tiny, and
+    read through the capped small-side collect."""
+    rows = collect_small_side(unions, "write_vector_geojson").to_dict("records")
     feats = []
     for r in rows:
         polys = geom.wkb_to_rings(bytes(r["geometry_wkb"]))
@@ -34,7 +36,7 @@ def write_vector_geojson(
         props = {"class_id": cls}
         if class_names and cls in class_names:
             props["class_name"] = class_names[cls]
-        if "area" in r.asDict():
+        if "area" in r:
             props["area"] = r["area"]
         feats.append({
             "type": "Feature",

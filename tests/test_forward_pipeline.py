@@ -4,6 +4,7 @@ own true class back; ground faces stay unlabeled; the exported per-class
 unions contain the object centroids."""
 
 import json
+import math
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -72,6 +73,79 @@ def test_aggregate_images_n_cameras_across_classes(spark):
     assert got[2]["n_cameras"] == 1
     kept = aggregate_images(pc, min_observations=2).collect()
     assert [r["face_id"] for r in kept] == [1]
+
+
+def _aggregate_images_two_pass(pixel_classes, min_observations=1):
+    """The two-aggregation formulation aggregate_images replaced: the
+    window argmax of the (face, class) totals joined to a separate
+    distinct-camera count over the same valid rows."""
+    from geograypher_spark.operators.aggregates import weighted_argmax
+
+    valid = pixel_classes.filter(F.col("class_id").isNotNull())
+    counts = valid.groupBy("face_id", "class_id").agg(
+        F.sum("pixel_count").alias("w"))
+    obs = valid.groupBy("face_id").agg(
+        F.countDistinct("camera_id").alias("n_cameras"))
+    pred = weighted_argmax(counts, ["face_id"], "class_id", "w")
+    return (pred.join(obs, "face_id")
+            .filter(F.col("n_cameras") >= min_observations)
+            .select("face_id", "pred_class", "total_weight", "n_cameras"))
+
+
+def _canon(df):
+    """Rows as a set of tuples, NaN made comparable."""
+    def c(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+    return {tuple(c(v) for v in r) for r in df.collect()}
+
+
+def test_aggregate_images_matches_two_pass(spark):
+    """The one-pass aggregate equals the two-pass one on equal-weight
+    ties (lower class wins), a NaN class, totals <= 0, NaN weights and
+    min_observations=2; schema included."""
+    from geograypher_spark.plans.pipelines import aggregate_images
+
+    nan = float("nan")
+    rows = [
+        # face 1: tie 4 vs 4 between classes 2.0 and 1.0 -> 1.0
+        (1, 1, 2.0, 4.0), (2, 1, 1.0, 4.0),
+        # face 2: the NaN class wins its weight tie (NaN sorts last on
+        # the class, so only a heavier NaN class wins) ...
+        (1, 2, nan, 6.0), (2, 2, 3.0, 5.0),
+        # face 3: ... and loses an equal-weight tie
+        (1, 3, nan, 5.0), (3, 3, 3.0, 5.0),
+        # face 4: class 7 sums to 0 and class 8 to < 0: no prediction,
+        # while its cameras still count for nothing
+        (1, 4, 7.0, 2.0), (2, 4, 7.0, -2.0), (3, 4, 8.0, -1.0),
+        # face 5: non-positive class next to a positive one; 3 cameras
+        (1, 5, 7.0, -9.0), (2, 5, 8.0, 1.0), (3, 5, 8.0, 1.0),
+        # face 6: a NaN total outranks every finite one
+        (1, 6, 1.0, nan), (2, 6, 2.0, 100.0),
+        # face 7: two NaN totals tie, the lower class wins
+        (1, 7, 5.0, nan), (1, 7, 4.0, nan),
+        # face 8: one camera only; a NULL class and a NULL camera
+        (4, 8, 9.0, 3.0), (5, 8, None, 50.0), (None, 8, 9.0, 1.0),
+    ]
+    pc = spark.createDataFrame(
+        rows, "camera_id long, face_id long, class_id double, "
+              "pixel_count double")
+    ints = pc.filter(~F.isnan("class_id") & ~F.isnan("pixel_count")).select(
+        "camera_id", "face_id",
+                     F.col("class_id").cast("long").alias("class_id"),
+                     F.col("pixel_count").cast("long").alias("pixel_count"))
+    for df in (pc, ints):
+        for k in (1, 2, 3):
+            got = aggregate_images(df, min_observations=k)
+            ref = _aggregate_images_two_pass(df, min_observations=k)
+            assert got.schema.simpleString() == ref.schema.simpleString()
+            assert _canon(got) == _canon(ref), (k, df.schema)
+    got = {r["face_id"]: r for r in aggregate_images(pc).collect()}
+    assert got[1]["pred_class"] == 1.0 and got[1]["n_cameras"] == 2
+    assert math.isnan(got[2]["pred_class"]) and got[3]["pred_class"] == 3.0
+    assert 4 not in got and got[5]["pred_class"] == 8.0
+    assert got[5]["n_cameras"] == 3
+    assert got[6]["pred_class"] == 1.0 and math.isnan(got[6]["total_weight"])
+    assert got[7]["pred_class"] == 4.0 and got[8]["n_cameras"] == 1
 
 
 def test_render_labels_pipeline_exact(spark):

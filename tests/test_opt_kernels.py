@@ -134,8 +134,7 @@ class TestPipExprEquivalence:
         rows = [(int(i % 3), float(px), float(py))
                 for i, (px, py) in enumerate(pts)]
         df = spark.createDataFrame(rows, "polygon_id int, x double, y double")
-        expr = pip_filter_expr(F.col("x"), F.col("y"), F.col("polygon_id"),
-                               wkb_map)
+        expr = pip_filter_expr("x", "y", "polygon_id", wkb_map)
         assert expr is not None
         got = {(r["polygon_id"], r["x"], r["y"])
                for r in df.filter(expr).collect()}
@@ -154,8 +153,121 @@ class TestPipExprEquivalence:
         ring = np.array([[0, 0], [1, 0], [1, 1], [0, 1]], dtype=float)
         wkb = geom.polygon_to_wkb([ring])
         big = {i: wkb for i in range(300)}  # 300 polys x 2 crossing edges
-        assert pip_filter_expr(F.col("x"), F.col("y"),
-                               F.col("polygon_id"), big) is None
+        assert pip_filter_expr("x", "y", "polygon_id", big) is None
+
+    @staticmethod
+    def _assert_matches_kernel(spark, wkb_map, pts, id_type):
+        """Every (polygon, point) pair: the JVM predicate keeps exactly
+        the pairs the numpy winding kernel calls inside."""
+        from geograypher_spark.functions import geometry as geom
+        from geograypher_spark.operators.spatial_join import pip_filter_expr
+
+        pts = [(float(x), float(y)) for x, y in pts]
+        rows = [(pid, x, y) for pid in wkb_map for x, y in pts]
+        df = spark.createDataFrame(
+            rows, f"polygon_id {id_type}, x double, y double")
+        expr = pip_filter_expr("x", "y", "polygon_id", wkb_map)
+        assert expr is not None
+        # compare bits, so -0.0 and 0.0 stay distinct points
+        key = lambda pid, x, y: (pid, np.float64(x).tobytes(),
+                                 np.float64(y).tobytes())
+        got = sorted(key(*r) for r in df.filter(expr).collect())
+        xs = np.array([x for x, _ in pts])
+        ys = np.array([y for _, y in pts])
+        expect = []
+        for pid, wkb in wkb_map.items():
+            inside = geom.points_in_multipolygon(
+                xs, ys, geom.wkb_to_rings(wkb))
+            expect += [key(pid, x, y) for (x, y), k in zip(pts, inside) if k]
+        assert got == sorted(expect)
+        return len(expect)
+
+    @staticmethod
+    def _boundary_points(rings, step_frac=0.5):
+        """Every vertex, every edge midpoint (horizontal edges included)
+        and a grid over the bbox whose lines pass through the vertices."""
+        pts = []
+        for r in rings:
+            r = np.asarray(r, dtype=np.float64)
+            pts += [tuple(v) for v in r]
+            pts += [tuple(v) for v in (r[:-1] + (r[1:] - r[:-1]) * 0.5)]
+        allv = np.vstack([np.asarray(r, dtype=np.float64) for r in rings])
+        gx = np.unique(np.concatenate([allv[:, 0], (allv[:-1, 0] + allv[1:, 0]) * step_frac]))
+        gy = np.unique(np.concatenate([allv[:, 1], (allv[:-1, 1] + allv[1:, 1]) * step_frac]))
+        pts += [(x, y) for x in gx for y in gy]
+        return sorted(set(pts))
+
+    def test_literals_round_trip_exactly(self, spark):
+        """Coordinates whose SQL text must parse back to the same bits:
+        tiny (1e-300), subnormal (5e-324), large (1e15 + fractions),
+        negative and -0.0; probes on vertices and horizontal edges."""
+        from geograypher_spark.functions import geometry as geom
+
+        notch = np.array([[0, 0], [3, 0], [3, 2], [1.5, 1], [0, 2]], dtype=float)
+        tiny = 5e-324
+        cases = {
+            1: notch * 1e-300,
+            2: np.array([[0, 0], [4, 0], [4, 4], [2, 1], [0, 4]]) * tiny,
+            3: notch * 0.375 + [1e15, -1e15],
+            4: -notch * 7.1 - [3.3, 1.1],
+            5: np.array([[-0.0, -0.0], [1.0, -0.0], [1.0, 1.0], [-0.0, 1.0]]),
+        }
+        wkb_map = {pid: geom.polygon_to_wkb([r]) for pid, r in cases.items()}
+        pts = []
+        for r in cases.values():
+            pts += self._boundary_points([r])
+        pts += [(0.0, 0.0), (-0.0, -0.0), (0.0, -0.0), (-0.0, 0.5),
+                (0.5, -0.0), (tiny, tiny), (-tiny, tiny)]
+        assert self._assert_matches_kernel(spark, wkb_map, pts, "int") > 20
+
+    def test_long_ring_and_string_ids(self, spark):
+        """One 80-edge concave ring (past the parser's nesting limit if
+        partial sums were parenthesised), a holed polygon and a
+        multipolygon, keyed by string ids that need escaping."""
+        from geograypher_spark.functions import geometry as geom
+
+        ang = np.linspace(0, 2 * np.pi, 80, endpoint=False)
+        rad = np.where(np.arange(80) % 2 == 0, 5.0, 3.2)
+        star = np.stack([rad * np.cos(ang), rad * np.sin(ang)], axis=1)
+        square = np.array([[-2, -2], [2, -2], [2, 2], [-2, 2]], dtype=float)
+        hole = np.array([[-1, -1], [-1, 1], [1, 1], [1, -1]], dtype=float)
+        wkb_map = {
+            "star": geom.polygon_to_wkb([star]),
+            "it's": geom.polygon_to_wkb([square, hole]),
+            "back\\slash": geom.multipolygon_to_wkb(
+                [[square + 6], [hole * 0.5 - 6], [square * 0.5 + [0, 6]]]),
+        }
+        rng = np.random.default_rng(11)
+        pts = [tuple(p) for p in rng.uniform(-8, 8, size=(300, 2))]
+        pts += self._boundary_points([square, hole])
+        pts += [tuple(v) for v in star]
+        assert self._assert_matches_kernel(spark, wkb_map, pts, "string") > 50
+
+    def test_one_round_trip_per_predicate(self, spark, monkeypatch):
+        """The reverse fixture's 26-polygon predicate is sent to the JVM
+        as one parsed expression, not one py4j call per operator."""
+        from py4j.clientserver import ClientServerConnection
+
+        from geograypher_spark.operators.spatial_join import pip_filter_expr
+        from geograypher_spark.sources.analytic import reverse_fixture_spark
+
+        polys = reverse_fixture_spark(spark)[3].toPandas()
+        wkb_map = {int(p): bytes(w) for p, w in
+                   zip(polys["polygon_id"], polys["geometry_wkb"])}
+        assert len(wkb_map) == 26
+        calls = []
+        send = ClientServerConnection.send_command
+
+        def counting_send(self, command):
+            calls.append(command)
+            return send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command",
+                            counting_send)
+        expr = pip_filter_expr("x", "y", "polygon_id", wkb_map)
+        monkeypatch.undo()
+        assert expr is not None
+        assert len(calls) <= 5, len(calls)
 
 
 def _jaccard_reference(texts: dict, n: int, df_cap: int,

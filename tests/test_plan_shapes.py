@@ -112,6 +112,15 @@ def test_render_labels_plan_sane(spark, queries):
                              plan), plan[:2000]
 
 
+def test_forward_pipeline_renders_once(spark, queries):
+    """aggregate_images reads the rendered observations in one pass: a
+    second branch over them (an argmax and a camera count joined back
+    together) renders every camera twice, since Spark cannot reuse the
+    first render's exchange."""
+    sp = queries["forward_pipeline"](spark, SF_DIR)._jdf.queryExecution().sparkPlan()
+    assert sp.toString().count("MapInPandas") == 1, sp.toString()[:2000]
+
+
 def test_simhash_no_dedup_exchange(spark):
     """simhash_near_pairs attributes each pair to its FIRST matching
     block (round-4): reintroducing a dropDuplicates over (id_a, id_b)

@@ -77,3 +77,19 @@ def test_label_dictionary_over_cap_raises(spark, monkeypatch):
     monkeypatch.setattr(SJ, "SMALL_SIDE_MAX_ROWS", 2)
     with pytest.raises(ValueError, match="infer_ids_to_labels"):
         infer_ids_to_labels(df, "label")
+
+
+def test_geojson_sink_over_cap_raises(spark, scene, tmp_path, monkeypatch):
+    """The GeoJSON sink collects its per-class unions through the capped
+    small-side read, so an unexpectedly large union table fails loudly
+    instead of filling the driver."""
+    from geograypher_spark.operators.union import face_class_union
+    from geograypher_spark.sources.sinks import write_vector_geojson
+
+    verts, faces, _, _ = scene_to_spark(spark, scene)
+    unions = face_class_union(faces, verts)
+    path = tmp_path / "out.geojson"
+    monkeypatch.setattr(SJ, "SMALL_SIDE_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="write_vector_geojson"):
+        write_vector_geojson(unions, str(path))
+    assert not path.exists()
