@@ -24,6 +24,7 @@ chip/render sinks can emit .jpg.
 from __future__ import annotations
 
 import struct
+from collections.abc import Sequence
 
 import numpy as np
 
@@ -67,9 +68,9 @@ STD_QUANT_CHROMA = np.array([
     99, 99, 99, 99, 99, 99, 99, 99], dtype=np.int64)
 
 _DC_LUMA_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_DC_LUMA_VALS = list(range(12))
+_DC_LUMA_VALS = tuple(range(12))
 _DC_CHROMA_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_DC_CHROMA_VALS = list(range(12))
+_DC_CHROMA_VALS = tuple(range(12))
 _AC_LUMA_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
 _AC_LUMA_VALS = [
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
@@ -452,7 +453,7 @@ class _BitWriter:
             self.put((1 << pad) - 1, pad)   # pad with 1s (T.81 F.1.2.3)
 
 
-def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
+def _huff_codes(bits: list[int], vals: Sequence[int]) -> dict[int, tuple[int, int]]:
     out, code, k = {}, 0, 0
     for l in range(1, 17):
         for _ in range(bits[l - 1]):

@@ -86,15 +86,12 @@ def spark_hash_long(value: int, seed: int = 42) -> int:
     return out - (1 << 32) if out >= (1 << 31) else out
 
 
-_INVERSE_CACHE: dict[int, list[int]] = {}
-
-
 def inverse_bucket_keys(p: int) -> list[int]:
     """For each target partition t in [0, p): the smallest non-negative
     long k with pmod(spark_hash_long(k), p) == t, so that
-    ``repartition(p, key)`` places bucket t's rows in partition t."""
-    if p in _INVERSE_CACHE:
-        return _INVERSE_CACHE[p]
+    ``repartition(p, key)`` places bucket t's rows in partition t.
+    Recomputed per call: about p·ln(p) pure-Python hashes, a few ms at
+    the bucket counts ``auto_partitions`` returns."""
     keys: list[int | None] = [None] * p
     found, k = 0, 0
     while found < p:
@@ -103,7 +100,6 @@ def inverse_bucket_keys(p: int) -> list[int]:
             keys[t] = k
             found += 1
         k += 1
-    _INVERSE_CACHE[p] = keys  # type: ignore[assignment]
     return keys  # type: ignore[return-value]
 
 

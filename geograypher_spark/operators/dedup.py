@@ -4,8 +4,9 @@ Large-scale ingest needs dedup before any of the geospatial pipelines see
 the interleaved docs. Four tiers, cheapest first:
 
 - exact: md5(text) hash groupBy — one shuffle
-- n-gram Jaccard: inverted shingle index join (pairs share ≥1 shingle) →
-  |A∩B| by groupBy, sizes by broadcast join → threshold
+- n-gram Jaccard: inverted shingle index self-join (pairs share ≥1
+  shingle) → |A∩B| by groupBy, each doc's size from the join's diagonal
+  → threshold
 - MinHash-LSH: per-doc signature = min(md5(seed:shingle)) per seed (string
   min — engine-portable, no custom hashing); banded OR-amplification; only
   band-collision pairs get exact Jaccard verification
@@ -21,77 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# live shingle caches, keyed by PLAN (semanticHash), bounded LRU: the
-# result DataFrames are lazy, so a cache cannot be released inside the
-# builder — but keying by call-site (round-3 shape) meant building a
-# second jaccard pipeline over a DIFFERENT corpus evicted the
-# first pipeline's cache before its DataFrame ever executed (ADVICE r3).
-# Plan-keying keeps each distinct input's cache alive until LRU
-# capacity; identical plans still share one cache. A lock makes the
-# bookkeeping safe for concurrent job threads in one session.
-import threading as _threading
-from collections import OrderedDict as _OrderedDict
-
-_live_caches: "_OrderedDict[int, DataFrame]" = _OrderedDict()
-_LIVE_CACHE_SLOTS = 4
-# persists that never got a slot key (semanticHash threw) or were
-# displaced by a hash collision: tracked so unpersist_dedup_caches can
-# still release them — overwriting/skipping a slot must never orphan a
-# persisted DataFrame in a long-lived session (round-4 ADVICE)
-_untracked_caches: list[DataFrame] = []
-_cache_lock = _threading.Lock()
-
-
-def _persist_scoped(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    try:
-        h = df.semanticHash()
-    except Exception:
-        h = None
-    with _cache_lock:
-        if h is not None:
-            prev = _live_caches.get(h)
-            if prev is not None:
-                try:
-                    if prev.sameSemantics(df):
-                        # same input + params → the existing cache IS this
-                        # plan's cache (Spark cache lookup is plan-keyed);
-                        # keep it warm and mark it most-recently used
-                        _live_caches.move_to_end(h)
-                        return prev
-                except Exception:
-                    pass  # session may be gone; fall through to re-persist
-                # semanticHash collision (same h, different plan): the new
-                # persist takes the slot; the displaced cache moves to the
-                # untracked list so it stays releasable
-                _untracked_caches.append(prev)
-        p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if h is not None:
-            _live_caches[h] = p
-            while len(_live_caches) > _LIVE_CACHE_SLOTS:
-                _, old = _live_caches.popitem(last=False)
-                try:
-                    old.unpersist(blocking=False)
-                except Exception:
-                    pass
-        else:
-            _untracked_caches.append(p)
-    return p
-
 
 def unpersist_dedup_caches() -> None:
-    """Release every shingle cache created by jaccard_pairs.
-    Safe to call any time after the consuming action has run."""
-    with _cache_lock:
-        caches = list(_live_caches.values()) + _untracked_caches
-        _live_caches.clear()
-        _untracked_caches.clear()
-    for df in caches:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
+    """No-op: :func:`jaccard_pairs` is one persist-free plan, so there is
+    no dedup cache left to release. Kept only because the perfbench
+    ``doc_dedup`` workload still calls it; it goes once that call does."""
 
 
 def exact_duplicates(
@@ -193,49 +128,53 @@ def jaccard_pairs(
     Set semantics are exact up to 64-bit collisions (~s²·2⁻⁶⁴ per doc —
     zero in practice; oracle-verified on the contract data).
 
-    The shingle set feeds three plan branches (sizes, both join sides);
-    without materialization Spark re-runs the split → slice → explode →
-    distinct construction — and re-scans the source — once per branch.
-    One persist turns that into one construction. The persist sits AFTER
-    the df_cap window so the window executes once at materialization, not
-    once per consuming branch (measured: the pre-cap persist re-ran the
-    shingle-keyed window exchange 4× per action — 4 × 52 MB of identical
-    exchange writes at sf1.0), and the cache comes out HASH-PARTITIONED
-    BY SHINGLE (the window's own distribution), which the self-join
-    below reuses directly — no further exchange on either join side
-    (guide §2.4). Caches are plan-keyed in a small LRU (repeat calls on
-    the same input reuse the warm cache, other inputs get their own
-    slot), and ``unpersist_dedup_caches()`` releases them eagerly.
+    One persist-free plan: the self-join counts shared shingles for every
+    pair with ``id_a <= id_b``. Off-diagonal rows (``id_a < id_b``) are
+    the intersections; each doc's diagonal row ``(id, id)`` counts its own
+    shingles, i.e. its size over the capped set, and both size joins read
+    it. Every consumer of the shingle set is then a join over the same
+    non-null subtree, which Spark builds once and shares through
+    ReusedExchange; a ``groupBy(id)`` sizes branch lacks the joins'
+    inferred ``isnotnull`` and re-runs the shingle construction. A doc
+    with no shingle left has no diagonal row, so it gets no pair.
+    Catalyst pushes the diagonal split into the join (the sizes run as an
+    ``(id, shingle)`` equi-join); pinning the split above one shared
+    aggregate measured slower (sf0.1, 4 cores).
     """
-    sh = word_shingle_hashes(docs, id_col, text_col, n)
+    # one fixed-count exchange by shingle: AQE coalesces a byte-small
+    # shingle shuffle (8-byte keys) to a few partitions, but the self-join
+    # stage reading it emits ~5x its input rows (sf0.1 on 4 cores: the
+    # coalesced join stage ran 2 tasks on 4 cores and the plan was ~15%
+    # slower), and AQE does not coalesce a repartition to a set count
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    sh = word_shingle_hashes(docs, id_col, text_col, n).repartition(par, "shingle")
     if df_cap is not None:
-        # df filter as a window over the shingle key: shuffles by shingle
-        # exactly like the self-join below (the join reuses the cached
-        # window output's partitioning), instead of an eager broadcast
+        # df filter as a window over the shingle key: it runs inside the
+        # shingle partitioning, so both join sides read the window's
+        # output with no further exchange, instead of an eager broadcast
         # sub-job for the hot-shingle list
         wdf = Window.partitionBy("shingle")
         sh = (sh.withColumn("_df", F.count(F.lit(1)).over(wdf))
               .filter(F.col("_df") <= df_cap).drop("_df"))
-    sh = _persist_scoped(sh)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
+    counts = (
         a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(F.col("id_a") <= F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
-        inter
-        .join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("size_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("size_b")), "id_b")
+    sizes = counts.filter(F.col("id_a") == F.col("id_b"))
+    return (
+        counts.filter(F.col("id_a") < F.col("id_b"))
+        .join(sizes.select("id_a", F.col("inter").alias("size_a")), "id_a")
+        .join(sizes.select(F.col("id_a").alias("id_b"),
+                           F.col("inter").alias("size_b")), "id_b")
         .withColumn(
             "jaccard",
             F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
     )
-    return out
 
 
 def minhash_signatures(

@@ -342,11 +342,15 @@ def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50,
 ) -> DataFrame:
     """→ (node, component): component = min reachable node id, via
-    alternating min-label propagation (large-star/small-star style). The
-    reference uses Louvain (``utils/numeric.py:509-556``) whose resolution
-    splitting is seed-sensitive; components are the deterministic
-    contract our fixtures use (SURVEY §7 hard-part 1). For modularity
-    splitting see ``community.louvain_distributed``.
+    hash-min label propagation: each round, every node takes the least
+    label among itself and its neighbours, so a label travels one hop
+    per round and the loop needs (graph diameter + 1) rounds. A graph
+    still changing labels after ``max_iter`` rounds raises ``ValueError``
+    instead of returning partial components. The reference uses Louvain
+    (``utils/numeric.py:509-556``) whose resolution splitting is
+    seed-sensitive; components are the deterministic contract our
+    fixtures use (SURVEY §7 hard-part 1). For modularity splitting see
+    ``community.louvain_distributed``.
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -372,6 +376,10 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise ValueError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; the graph's diameter needs more")
     return labels.select(F.col("a").alias("node"), "component")
 
 

@@ -21,6 +21,8 @@ def greedy_set_cover(
     """Minimal-ish camera subset covering every (sufficiently observed)
     face: classic greedy — each round pick the set covering the most
     uncovered elements. Returns [(camera_id, newly_covered), ...].
+    Elements still uncovered after ``max_rounds`` picks raise
+    ``ValueError``: a partial cover is never returned.
 
     Driver-coordinated loop of distributed aggregations: per round one
     groupBy-count + one top-1 (no N×M matrix ever materializes — the
@@ -53,6 +55,12 @@ def greedy_set_cover(
             F.broadcast(covered), elem_col, "left_anti").localCheckpoint()
         if remaining.isEmpty():
             break
+    else:
+        uncovered = remaining.select(elem_col).distinct().count()
+        if uncovered:
+            raise ValueError(
+                f"greedy_set_cover: {uncovered} elements still uncovered "
+                f"after max_rounds={max_rounds}")
     return chosen
 
 

@@ -191,6 +191,13 @@ class TestSetCover:
         # only face 101 is eligible; either camera covers it with gain 1
         assert sum(g for _, g in chosen) == 1
 
+    def test_max_rounds_raises_on_partial_cover(self, spark):
+        rows = [(1, 1), (1, 2), (2, 3)]  # two disjoint cameras
+        vis = spark.createDataFrame(rows, "camera_id long, face_id long")
+        with pytest.raises(ValueError, match="1 elements still uncovered"):
+            greedy_set_cover(vis, max_rounds=1)
+        assert greedy_set_cover(vis, max_rounds=2) == [(1, 2), (2, 1)]
+
     def test_filters(self, spark):
         df = spark.createDataFrame(
             [(0, "a/x.jpg"), (1, "a/y.jpg"), (2, "b/z.jpg"), (4, "a/w.png")],

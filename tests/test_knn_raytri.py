@@ -165,6 +165,16 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_out_of_rounds_raises(spark):
+    """A 120-node path needs 120 hash-min rounds; at max_iter=50 the
+    labels are still moving, which must raise, not return 70
+    components."""
+    edges = spark.createDataFrame([(i, i + 1) for i in range(119)],
+                                  "src long, dst long")
+    with pytest.raises(ValueError, match="connected_components.*max_iter=50"):
+        RT.connected_components(edges)
+
+
 def test_triangulation_recovers_point(spark, scene):
     """Rays cast from every camera through the projection of a known 3D
     point must triangulate back to that point (multiview_detections e2e)."""

@@ -82,12 +82,28 @@ class TestDedup:
             DD.minhash_dedup(docs, hash_fn="sha1").collect()
 
     def test_minhash_dedup_persists_nothing(self, spark, docs):
-        """minhash_dedup is one persist-free plan: running it leaves
-        Spark's cache manager empty."""
-        DD.unpersist_dedup_caches()
+        """minhash_dedup and jaccard_pairs (with and without df_cap) are
+        persist-free plans: building one runs no Spark job, and running
+        it leaves Spark's cache manager empty."""
+        sc = spark.sparkContext
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        builds = {
+            "minhash_dedup": lambda: DD.minhash_dedup(docs),
+            "jaccard_pairs": lambda: DD.jaccard_pairs(docs),
+            "jaccard_pairs_df_cap": lambda: DD.jaccard_pairs(docs, df_cap=2),
+        }
         spark.catalog.clearCache()
-        DD.minhash_dedup(docs).collect()
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        for name, build in builds.items():
+            group = f"persists_nothing_{name}"
+            sc.setJobGroup(group, group)
+            try:
+                out = build()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0, name
+            out.collect()
+            assert cache.isEmpty(), name
 
     def test_lsh_bands_must_divide_hashes(self, spark, docs):
         """bands > n_hashes (0 rows per band: every pair a candidate) and
