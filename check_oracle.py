@@ -14,7 +14,13 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# the Python workers are forked by the JVM and inherit this environment,
+# not the driver's sys.path: without it, every Python-UDF query fails with
+# ModuleNotFoundError when the script runs outside the repository root
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb
 

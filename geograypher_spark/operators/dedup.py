@@ -8,19 +8,28 @@ the interleaved docs. Four tiers, cheapest first:
   shingle) → |A∩B| by groupBy, each doc's size from the join's diagonal
   → threshold
 - MinHash-LSH: per-doc signature = min(md5(seed:shingle)) per seed (string
-  min — engine-portable, no custom hashing); banded OR-amplification; only
-  band-collision pairs get exact Jaccard verification
+  min — engine-portable, no custom hashing), built by one function,
+  :func:`minhash_signatures`, for both the public signature table and the
+  full :func:`minhash_dedup` pipeline; banded OR-amplification; only
+  band-collision pairs get exact Jaccard verification. ``minhash_dedup``
+  spreads its docs round-robin over every core before hashing, so a
+  single-split input does not serialise the signature stage
 - SimHash: 64-bit xxhash64-weighted bit votes, hamming-distance buckets
 
 All built from groupBy/join/window (Catalyst-native); md5/lead/min are
 deliberately chosen so an external SQL engine (the DuckDB oracle) computes
-bit-identical intermediates.
+bit-identical intermediates. The shingle and MinHash expressions are
+written as SQL text (a few py4j round trips per expression, as
+``spatial_join.pip_filter_expr`` does), so building a plan costs a few
+hundred driver round trips, not thousands.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .spatial_join import _sql_name
 
 
 def unpersist_dedup_caches() -> None:
@@ -42,18 +51,17 @@ def exact_duplicates(
 
 def _shingle_words(
     docs: DataFrame, id_col: str, text_col: str, n: int,
-) -> tuple[DataFrame, list]:
+) -> tuple[DataFrame, str]:
     """The shared shingle prologue: split → index sequence → explode.
-    Returns the exploded (id, _a, _i) rows and the n word columns of the
-    shingle starting at ``_i``; the caller combines the words."""
+    Returns the exploded (id, _a, _i) rows and, as SQL text, the n word
+    expressions of the shingle starting at ``_i``; the caller combines the
+    words. Written as SQL text so the prologue costs a few py4j round
+    trips, not one per Column operator."""
     # name the split array: inlining it would re-split the text once per
     # shingle index (O(len²)); as a multi-referenced attribute it survives
     # CollapseProject and evaluates once per row
-    with_arr = docs.withColumn("_arr", F.split(F.col(text_col), " "))
-    arr = F.col("_arr")
-    idxs = F.when(
-        F.size(arr) >= n, F.sequence(F.lit(1), F.size(arr) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
+    with_arr = docs.selectExpr(_sql_name(id_col),
+                               f"split({_sql_name(text_col)}, ' ') AS _arr")
     # explode the index range and read the words via element_at lookups:
     # the whole row stays inside ONE WholeStageCodegen span (Generate +
     # Project fuse; the word array is never copied per shingle because
@@ -62,9 +70,11 @@ def _shingle_words(
     # higher-order lambda INTERPRETED per element — measured 3× the stage
     # CPU for the hashed variant (227 vs 73 core-s on the amplified sf0.1
     # corpus at 16c).
-    exploded = with_arr.select(F.col(id_col), arr.alias("_a"),
-                               F.explode(idxs).alias("_i"))
-    return exploded, [F.element_at("_a", F.col("_i") + k) for k in range(n)]
+    exploded = with_arr.selectExpr(
+        _sql_name(id_col), "_arr AS _a",
+        f"explode(CASE WHEN size(_arr) >= {n} THEN sequence(1, size(_arr) - "
+        f"{n - 1}) ELSE CAST(array() AS array<int>) END) AS _i")
+    return exploded, ", ".join(f"element_at(_a, _i + {k})" for k in range(n))
 
 
 def word_shingles(
@@ -77,9 +87,9 @@ def word_shingles(
     form. Mirrored verbatim in the oracle SQL (list slicing + scalar
     generate_series)."""
     exploded, words = _shingle_words(docs, id_col, text_col, n)
-    return (exploded.select(
-        F.col(id_col), F.concat_ws(" ", *words).alias("shingle"))
-        .distinct())
+    return (exploded.selectExpr(_sql_name(id_col),
+                                f"concat_ws(' ', {words}) AS shingle")
+            .distinct())
 
 
 def word_shingle_hashes(
@@ -95,9 +105,9 @@ def word_shingle_hashes(
     practice — and everything downstream (distinct, min-per-seed,
     intersection counts) only needs set identity, not the text."""
     exploded, words = _shingle_words(docs, id_col, text_col, n)
-    return (exploded.select(
-        F.col(id_col), F.xxhash64(*words).alias("shingle"))
-        .distinct())
+    return (exploded.selectExpr(_sql_name(id_col),
+                                f"xxhash64({words}) AS shingle")
+            .distinct())
 
 
 def jaccard_pairs(
@@ -177,16 +187,41 @@ def jaccard_pairs(
     )
 
 
+def _minhash_family(hash_fn: str) -> tuple:
+    """→ (shingler, per-seed min aggregate as SQL text) of a signature
+    family. ``"md5"`` — min over the hex string of md5("seed:shingle")
+    of :func:`word_shingles` strings: engine-portable (mirrored verbatim
+    in the DuckDB oracle SQL) but allocates a concat + a 32-char string
+    per (seed, shingle). ``"xxhash64"`` — min over the raw long of
+    xxhash64(seed, shingle) of :func:`word_shingle_hashes` longs: one JVM
+    hash call, no string allocation, ~long-typed aggregation buffers; the
+    scale path (measured ~2× less stage CPU and far less GC at 16 cores on
+    the amplified sf0.1 corpus). Both families are deterministic; LSH
+    banding only needs exchangeable uniform hashes."""
+    if hash_fn == "md5":
+        return word_shingles, "min(md5(concat('{i}:', shingle))) AS h{i}"
+    if hash_fn == "xxhash64":
+        return word_shingle_hashes, "min(xxhash64({i}, shingle)) AS h{i}"
+    raise ValueError(f"unknown minhash hash_fn {hash_fn!r}")
+
+
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     n: int = 3, n_hashes: int = 16, hash_fn: str = "md5",
 ) -> DataFrame:
     """→ (id, h0..h{k-1}): MinHash signature; min per seed over the doc's
-    shingle set. ``hash_fn`` picks the family — see :func:`_minhash_aggs`
-    ("md5" default: engine-portable/oracle-mirrorable; "xxhash64": the
-    allocation-free scale path)."""
-    sh = word_shingles(docs, id_col, text_col, n)
-    return sh.groupBy(id_col).agg(*_minhash_aggs(n_hashes, hash_fn))
+    shingle set. ``hash_fn`` picks the family and its shingler together
+    (see :func:`_minhash_family`): "md5" (default, oracle-mirrorable)
+    hashes string shingles, "xxhash64" (the scale path) hashed shingle
+    longs. :func:`minhash_dedup` builds its signatures here, so
+    ``lsh_candidate_pairs(minhash_signatures(docs, hash_fn=f))`` is
+    exactly the candidate set ``minhash_dedup`` verifies. The aggregates
+    keep the caller's partitioning; :func:`minhash_dedup` spreads its docs
+    first. Each aggregate is SQL text parsed by one ``F.expr`` (the Column
+    API spent ~42 py4j round trips per aggregate)."""
+    shingler, agg = _minhash_family(hash_fn)
+    return shingler(docs, id_col, text_col, n).groupBy(id_col).agg(
+        *[F.expr(agg.format(i=i)) for i in range(n_hashes)])
 
 
 def lsh_candidate_pairs(
@@ -210,51 +245,26 @@ def lsh_candidate_pairs(
             f"bands={bands} must be between 1 and n_hashes={n_hashes} "
             "and divide it")
     rows = n_hashes // bands
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.xxhash64(
-                F.lit(b),
-                *[F.col(f"h{b * rows + i}") for i in range(rows)]
-            ).alias("band_hash"))
-        for b in range(bands)])
-    # one explode pass — a union of per-band selects would recompute the
-    # signature aggregation once per branch per join side
-    stacked = signatures.select(
-        F.col(id_col), F.explode(band_structs).alias("_b")
-    ).select(id_col, F.col("_b.band_idx").alias("band_idx"),
-             F.col("_b.band_hash").alias("band_hash"))
-    a = stacked.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b_ = stacked.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
+    # the band structs as SQL text, parsed by one py4j call (the Column
+    # API spent ~200 round trips on them); ``xxhash64(b, h…)`` is the same
+    # seed-42 hash of the same int literal and columns, so the band keys
+    # are bit-identical. One explode pass — a union of per-band selects
+    # would recompute the signature aggregation once per branch per join
+    # side
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash', xxhash64({b}, "
+        + ", ".join(f"h{b * rows + i}" for i in range(rows)) + "))"
+        for b in range(bands))
+    idq = _sql_name(id_col)
+    stacked = signatures.selectExpr(idq, f"inline(array({structs}))")
+    a = stacked.selectExpr(f"{idq} AS id_a", "band_idx", "band_hash")
+    b_ = stacked.selectExpr(f"{idq} AS id_b", "band_idx", "band_hash")
     return (
         a.join(b_, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        .filter("id_a < id_b")
         .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands_matched"))
+        .agg(F.expr("count(1) AS n_bands_matched"))
     )
-
-
-def _minhash_aggs(n_hashes: int, hash_fn: str):
-    """The per-seed min-hash aggregate expressions over a ``shingle``
-    column. ``"md5"`` — min over the hex string of md5("seed:shingle"):
-    engine-portable (mirrored verbatim in the DuckDB oracle SQL) but
-    allocates a concat + a 32-char string per (seed, shingle).
-    ``"xxhash64"`` — min over the raw long of xxhash64(seed, shingle):
-    one JVM hash call, no string allocation, ~long-typed aggregation
-    buffers; the scale path (measured ~2× less stage CPU and far less
-    GC at 16 cores on the amplified sf0.1 corpus). Both families are
-    deterministic; LSH banding only needs exchangeable uniform hashes."""
-    if hash_fn == "md5":
-        return [
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    if hash_fn == "xxhash64":
-        return [
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    raise ValueError(f"unknown minhash hash_fn {hash_fn!r}")
 
 
 def minhash_dedup(
@@ -265,22 +275,37 @@ def minhash_dedup(
     """Full MinHash-LSH pipeline: signatures → band collisions → exact
     Jaccard verify on candidates only → (id_a, id_b, jaccard).
 
+    The non-null docs are spread once, round-robin over
+    ``defaultParallelism`` (the sizing rule of :func:`jaccard_pairs`),
+    before both shingling branches: the signature stage — shingling plus
+    the ``n_hashes`` min aggregates, whose md5 form is an interpreted
+    sort aggregate — then runs on every core, not on the caller's
+    partitioning (one task for a single-split file). The spread is
+    round-robin on purpose: hashing it by ``id_col`` would satisfy the
+    signature ``groupBy`` and lift the whole aggregate above the
+    exchange that the LSH self-join sides and both candidate uses share,
+    so every consumer would recompute it. The signatures come from
+    :func:`minhash_signatures`, so ``hash_fn`` picks the same shingler
+    and hash family there and here.
+
     One persist-free plan: the candidate subtree is consumed twice (the
     broadcast id list and the verify join) and, being canonically equal
     in both places, shares its shuffles via ReusedExchange. The verify
     shingles only the candidate docs — a broadcast LeftSemi of the
-    candidate ids into ``docs`` BELOW the shingler — and collects each
-    candidate doc's shingle set into one array, so the exact Jaccard is
-    ``|A∩B| / (|A| + |B| - |A∩B|)`` over two arrays per pair, a ratio of
-    exact integers."""
-    shingler = word_shingles if hash_fn == "md5" else word_shingle_hashes
+    candidate ids into ``docs`` BELOW the shingler (Catalyst also pushes
+    it below the spread, so the verify branch spreads only the candidate
+    docs) — and collects each candidate doc's shingle set into one array,
+    so the exact Jaccard is ``|A∩B| / (|A| + |B| - |A∩B|)`` over two
+    arrays per pair, a ratio of exact integers."""
+    shingler, _ = _minhash_family(hash_fn)
+    idq = _sql_name(id_col)
+    par = docs.sparkSession.sparkContext.defaultParallelism
     # the explicit notnull below the explode keeps the two consumer
     # subtrees canonically EQUAL: a join-inferred isnotnull pushed below
     # only one side's exchange would otherwise break ReusedExchange (same
     # gotcha as the ray-proximity self-join)
-    docs = docs.filter(F.col(id_col).isNotNull())
-    sigs = (shingler(docs, id_col, text_col, n)
-            .groupBy(id_col).agg(*_minhash_aggs(n_hashes, hash_fn)))
+    docs = docs.filter(f"{idq} IS NOT NULL").repartition(par)
+    sigs = minhash_signatures(docs, id_col, text_col, n, n_hashes, hash_fn)
     cand = lsh_candidate_pairs(sigs, id_col, n_hashes, bands)
     # SEMI-JOIN REDUCTION before the exact verify, pushed BELOW the
     # shingling (filter docs, then shingle): Catalyst does not move a
@@ -293,19 +318,19 @@ def minhash_dedup(
     # broadcast payload is bare ids, bounded by 2× the pair count; a corpus
     # where that overflows has an O(N²) LSH pair problem long before the
     # broadcast matters.
-    cand_ids = (cand.select(F.col("id_a").alias(id_col))
-                .union(cand.select(F.col("id_b").alias(id_col)))
+    cand_ids = (cand.selectExpr(f"id_a AS {idq}")
+                .union(cand.selectExpr(f"id_b AS {idq}"))
                 .distinct())
     docs_cand = docs.join(F.broadcast(cand_ids), id_col, "leftsemi")
     sets = (shingler(docs_cand, id_col, text_col, n)
-            .groupBy(id_col).agg(F.collect_list("shingle").alias("_s")))
-    inter = F.size(F.array_intersect("sa", "sb"))
+            .groupBy(id_col).agg(F.expr("collect_list(shingle) AS _s")))
+    inter = "size(array_intersect(sa, sb))"
     return (
         cand.select("id_a", "id_b")
-        .join(sets.select(F.col(id_col).alias("id_a"), F.col("_s").alias("sa")), "id_a")
-        .join(sets.select(F.col(id_col).alias("id_b"), F.col("_s").alias("sb")), "id_b")
-        .withColumn("jaccard",
-                    inter / (F.size("sa") + F.size("sb") - inter))
+        .join(sets.selectExpr(f"{idq} AS id_a", "_s AS sa"), "id_a")
+        .join(sets.selectExpr(f"{idq} AS id_b", "_s AS sb"), "id_b")
+        .withColumn("jaccard", F.expr(
+            f"{inter} / (size(sa) + size(sb) - {inter})"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -192,9 +192,17 @@ def _pip_ring_sql(px: str, py: str, ring: np.ndarray) -> tuple[str, int]:
     comparison is bit-identical to the kernel. Horizontal edges are
     skipped (``cond`` is identically false for them — numpy reaches the
     same result through its inf-divisor guard). The per-edge terms are
-    joined flat (``t1 + t2 + ...``): the parser builds the left-deep
-    ``Add`` chain itself, while nesting each partial sum in parentheses
-    would hit its depth limit at 64 edges. Returns (sql, n_edges)."""
+    summed in two levels: ⌈√n⌉-term chunks, each a flat parenthesised
+    sum, then the chunk sums flat, so the ``Add`` tree is at most
+    2⌈√n⌉ deep (44 at 510 edges). A flat ``t1 + t2 + ...`` parses to an
+    n-deep left chain, and once whole-stage codegen of a long ring
+    overflows 64 KB, the fallback's recursive ``genCode`` down that chain
+    overflowed the executor's stack. A balanced parenthesised tree
+    (⌈log₂ n⌉ deep) runs too, but the parser's first parse of each new
+    parenthesis depth costs about twice the previous one: 8.2 s for one
+    510-edge ring in a fresh JVM, against 0.5 s flat or in two levels.
+    Integer addition is exact, so the crossing count is the same in any
+    order. Returns (sql, n_edges)."""
     terms = []
     for (x0, y0), (x1, y1) in zip(ring[:-1], ring[1:]):
         if y0 == y1:
@@ -206,7 +214,14 @@ def _pip_ring_sql(px: str, py: str, ring: np.ndarray) -> tuple[str, int]:
             f" / {_sql_double(y1 - y0)} THEN 1 ELSE 0 END")
     if not terms:
         return "false", 0
-    return f"(({' + '.join(terms)}) % 2 = 1)", len(terms)
+    return f"(({_two_level_sum(terms)}) % 2 = 1)", len(terms)
+
+
+def _two_level_sum(terms: list[str]) -> str:
+    """``terms`` added as flat parenthesised chunks of ⌈√n⌉ terms."""
+    k = math.isqrt(len(terms) - 1) + 1
+    return " + ".join(f"({' + '.join(terms[i:i + k])})"
+                      for i in range(0, len(terms), k))
 
 
 def _pip_polys_sql(px: str, py: str,

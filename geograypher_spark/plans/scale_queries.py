@@ -188,14 +188,14 @@ def sq_dedup_big(spark, sf_dir, replicas: int = 192):
     par = spark.sparkContext.defaultParallelism
     # spread the base docs BEFORE the ×replicas crossJoin: the bench
     # corpus is a single-row-group file (1 scan split), so the replica
-    # emission and the 166 MB repartition-exchange write otherwise run in
-    # ONE task — a measured 3.5 s SERIAL stage at every parallelism level
-    # (stage probe, round 6), i.e. a pure-Amdahl term the scaling ratio
-    # charged to the engine. The base shuffle is ~1.7 MB — noise.
+    # emission otherwise runs in ONE task — a measured 3.5 s SERIAL stage
+    # at every parallelism level (stage probe, round 6), i.e. a pure-Amdahl
+    # term the scaling ratio charged to the engine. The base shuffle is
+    # ~1.7 MB — noise. minhash_dedup spreads its own input over every
+    # core, so the 166 MB amplified corpus is shuffled once, there.
     docs = docs.repartition(max(par * 2, 16))
     reps = spark.range(replicas).select(F.col("id").alias("_rep"))
     big = (docs.crossJoin(reps)
-           .repartition(max(par * 4, 64))
            .select(
                (F.col("doc_id") + F.col("_rep") * 10_000_000).alias("doc_id"),
                F.array_join(

@@ -243,6 +243,37 @@ class TestPipExprEquivalence:
         pts += [tuple(v) for v in star]
         assert self._assert_matches_kernel(spark, wkb_map, pts, "string") > 50
 
+    def test_510_edge_ring(self, spark, tmp_path):
+        """One 510-edge concave ring (just under the 512-edge inlining
+        budget) over 3,000 points read from Parquet, so the filter runs in
+        executor tasks: the predicate keeps exactly the points
+        geom.points_in_wkb calls inside. Its crossing terms are summed in
+        two levels; a flat 510-deep Add chain overflowed the executor's
+        stack once whole-stage codegen fell back, which in local mode
+        stops the SparkContext."""
+        from geograypher_spark.functions import geometry as geom
+        from geograypher_spark.operators.spatial_join import (
+            _pip_ring_sql, pip_filter_expr)
+
+        n = 510
+        ang = np.linspace(0, 2 * np.pi, n, endpoint=False) + 0.001
+        rad = np.where(np.arange(n) % 2 == 0, 5.0, 3.5)
+        ring = np.stack([rad * np.cos(ang), rad * np.sin(ang)], axis=1)
+        assert _pip_ring_sql("x", "y", np.vstack([ring, ring[:1]]))[1] == n
+        wkb = geom.polygon_to_wkb([ring])
+        pts = np.random.default_rng(5).uniform(-5.5, 5.5, size=(3000, 2))
+        spark.createDataFrame(
+            [(float(x), float(y)) for x, y in pts], "x double, y double"
+        ).write.parquet(str(tmp_path / "pts"))
+        df = spark.read.parquet(str(tmp_path / "pts")).withColumn(
+            "polygon_id", F.lit(0))
+        expr = pip_filter_expr("x", "y", "polygon_id", {0: wkb})
+        assert expr is not None
+        got = sorted((r["x"], r["y"]) for r in df.filter(expr).collect())
+        inside = geom.points_in_wkb(pts[:, 0], pts[:, 1], wkb)
+        expect = sorted((float(x), float(y)) for x, y in pts[inside])
+        assert got == expect and len(expect) > 1000
+
     def test_one_round_trip_per_predicate(self, spark, monkeypatch):
         """The reverse fixture's 26-polygon predicate is sent to the JVM
         as one parsed expression, not one py4j call per operator."""

@@ -197,3 +197,98 @@ def test_dedup_big_cacheless_shape(spark):
     assert re.search(r"BroadcastHashJoin .*LeftSemi", plan), plan[:2000]
     assert "transform(" not in plan
     assert "xxhash64" in plan
+
+
+def _final_nodes(df):
+    """The nodes of an executed adaptive plan's final tree, with each
+    query stage's exchange in place of the stage and a ReusedExchange as
+    a leaf (its shared exchange is listed where it first runs)."""
+    nodes = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name.endswith("QueryStage"):
+            node = node.plan()
+            name = node.nodeName()
+        nodes.append(node)
+        if name != "ReusedExchange":
+            for i in range(node.children().size()):
+                walk(node.children().apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan().executedPlan())
+    return nodes
+
+
+def _md5_partial_aggregates(nodes):
+    return [n for n in nodes if n.nodeName() == "SortAggregate"
+            and "partial_min(md5" in n.simpleString(100)]
+
+
+@pytest.fixture(scope="module")
+def minhash_one_split(spark):
+    """minhash_dedup (md5) over a one-split documents file, executed
+    under its own job group."""
+    from geograypher_spark.operators.dedup import minhash_dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text")
+    assert docs.rdd.getNumPartitions() == 1
+    df = minhash_dedup(docs)
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash_one_split", "minhash_one_split")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return df
+
+
+def test_minhash_spreads_below_signature_aggregate(spark, minhash_one_split):
+    """On a one-split input the md5 signature aggregate runs above a
+    round-robin spread over defaultParallelism, and below ONE
+    hashpartitioning(id) exchange that every consumer (both LSH self-join
+    sides, both candidate uses) reads through ReusedExchange. A spread by
+    id would lift the aggregate above the shared exchange, so every
+    consumer would recompute it."""
+    par = spark.sparkContext.defaultParallelism
+    nodes = _final_nodes(minhash_one_split)
+    partials = _md5_partial_aggregates(nodes)
+    assert len(partials) == 1, [p.simpleString(100) for p in partials]
+    partial = partials[0]
+    shared = [n for n in nodes if n.nodeName() == "Exchange"
+              and n.child().equals(partial)]
+    assert len(shared) == 1
+    assert shared[0].simpleString(100).startswith(
+        "Exchange hashpartitioning(doc_id"), shared[0].simpleString(100)
+    reused = [n for n in nodes if n.nodeName() == "ReusedExchange"
+              and n.child().equals(shared[0])]
+    assert reused, "the signature exchange is not reused"
+    below = partial
+    while below.nodeName() != "Exchange" and below.children().size() == 1:
+        below = below.children().apply(0)
+        if below.nodeName().endswith("QueryStage"):
+            below = below.plan()
+    assert below.simpleString(100).startswith(
+        f"Exchange RoundRobinPartitioning({par})"), below.simpleString(100)
+
+
+def test_minhash_signature_stage_runs_on_every_core(spark, minhash_one_split):
+    """The stage that runs the md5 partial aggregate has defaultParallelism
+    tasks on a one-split input (it was one task: half a doc_dedup
+    iteration with three cores idle). The stage is found through the
+    job that materialised its exchange; the status tracker gives its
+    task count."""
+    par = spark.sparkContext.defaultParallelism
+    nodes = _final_nodes(minhash_one_split)
+    partial, = _md5_partial_aggregates(nodes)
+    exchange, = [n for n in nodes if n.nodeName() == "Exchange"
+                 and n.child().equals(partial)]
+    jobs = exchange.futureAction().get().get().jobIds()
+    job_ids = [jobs.apply(i) for i in range(jobs.size())]
+    tracker = spark.sparkContext.statusTracker()
+    assert set(job_ids) <= set(tracker.getJobIdsForGroup("minhash_one_split"))
+    ran = [tracker.getStageInfo(s) for j in job_ids
+           for s in tracker.getJobInfo(j).stageIds]
+    ran = [s for s in ran if s is not None and s.numCompletedTasks > 0]
+    assert [s.numTasks for s in ran] == [par], ran
