@@ -322,8 +322,12 @@ def minhash_dedup(
                 .union(cand.selectExpr(f"id_b AS {idq}"))
                 .distinct())
     docs_cand = docs.join(F.broadcast(cand_ids), id_col, "leftsemi")
+    # collect_set is duplicate-agnostic, so Catalyst drops the shingler's
+    # distinct below it (RemoveRedundantAggregates): one exchange by id
+    # instead of a (id, shingle) exchange first. The Jaccard reads only
+    # sizes, which are the same either way
     sets = (shingler(docs_cand, id_col, text_col, n)
-            .groupBy(id_col).agg(F.expr("collect_list(shingle) AS _s")))
+            .groupBy(id_col).agg(F.expr("collect_set(shingle) AS _s")))
     inter = "size(array_intersect(sa, sb))"
     return (
         cand.select("id_a", "id_b")

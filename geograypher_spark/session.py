@@ -4,12 +4,25 @@ Single place where all engine jobs, tests and benchmarks get their session.
 Defaults are chosen for a real multi-executor cluster (AQE on, skew-join
 handling on, Arrow on) and merely *sized down* via parameters for the
 local[k] sandbox.
+
+Whole-stage codegen compiles each distinct generated class with Janino
+and keeps it in one JVM-wide cache of ``spark.sql.codegen.cache.maxEntries``
+entries, split over 4 LRU segments. A pipeline that re-runs the same plans
+thrashes Spark's default of 100: a cold perfbench ``forward_survey``
+iteration compiles about 140 classes, always in the same order, and at
+the default each steady iteration recompiled 108 of them (seed 1,
+``local[4]``), code identical to the last iteration's. At 512 each
+segment holds 128 entries against about 35 of that pipeline's, and a
+steady iteration compiles none. The cache is built once per JVM, at the
+first compile, from the conf then in force, so the value belongs in the
+launch conf; sessions rebuilt later in the same JVM keep the cache.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # Conservative defaults for the local sandbox; on a real cluster these are
@@ -26,6 +39,9 @@ _DEFAULTS = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
+    # generated-class cache: ~3.5x a cold forward_survey iteration's ~140
+    # classes (see the module docstring); a static conf, read at launch
+    "spark.sql.codegen.cache.maxEntries": "512",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -49,6 +65,22 @@ def _inject_worker_sitecustomize() -> None:
     if d not in parts.split(os.pathsep):
         os.environ["PYTHONPATH"] = (
             d + os.pathsep + parts if parts else d)
+
+
+def conf_gaps(conf: dict[str, str]) -> dict[str, str]:
+    """The entries of ``conf`` whose keys the launch conf does not set.
+
+    A ``builder.config(k, v)`` is applied on top of the launch conf, so
+    setting every default would override what spark-submit's ``--conf``
+    (or ``spark-defaults.conf``) chose. Under spark-submit the JVM runs
+    before Python starts and holds the submit conf as ``spark.*`` system
+    properties; this connects to it and reads them. Without a JVM yet
+    (plain ``python``), nothing is set and every entry is a gap.
+    """
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        SparkContext._ensure_initialized()
+    launch = SparkConf()
+    return {k: v for k, v in conf.items() if not launch.contains(k)}
 
 
 def get_spark(

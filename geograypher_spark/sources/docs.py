@@ -189,22 +189,24 @@ def parse_cameras(spans: DataFrame, payloads: DataFrame) -> DataFrame:
 
 def parse_faces(spans: DataFrame, payloads: DataFrame) -> DataFrame:
     """Media spans with face-batch refs → exploded faces table (S1 analog).
-    arrays_zip + explode keeps it JVM-side; one output row per face."""
-    z = (
-        spans.filter(F.col("media_ref").startswith("faces://"))
-        .join(payloads.filter(F.col("kind") == "faces"), "media_ref")
-        .select(F.from_json("payload_json", FACE_BATCH_PAYLOAD_SCHEMA).alias("b"))
-        .select(F.explode(F.arrays_zip("b.face_id", "b.coords", "b.class_id")).alias("r"))
-        .select(
-            F.col("r.face_id").alias("face_id"),
-            F.col("r.class_id").alias("class_id"),
-            *[F.col("r.coords").getItem(i).alias(n) for i, n in enumerate(
-                ["x0", "y0", "z0", "x1", "y1", "z1", "x2", "y2", "z2"])],
-        )
+    arrays_zip + explode keeps it JVM-side; one output row per face.
+    Written as SQL text, so building it costs a few dozen py4j round
+    trips, not one per Column operator."""
+    coords = [f"r.coords[{3 * v + k}] AS {a}{v}"
+              for v in range(3) for k, a in enumerate("xyz")]
+    # the centroid adds the same three doubles in the same order as
+    # (x0 + x1 + x2) / 3 over the named columns would
+    centroid = [f"(r.coords[{k}] + r.coords[{3 + k}] + r.coords[{6 + k}]) / 3 "
+                f"AS c{a}" for k, a in enumerate("xyz")]
+    return (
+        spans.filter("startswith(media_ref, 'faces://')")
+        .join(payloads.filter("kind = 'faces'"), "media_ref")
+        .selectExpr(f"from_json(payload_json, "
+                    f"'{FACE_BATCH_PAYLOAD_SCHEMA.simpleString()}') AS b")
+        .selectExpr("explode(arrays_zip(b.face_id, b.coords, b.class_id)) AS r")
+        .selectExpr("r.face_id AS face_id", "r.class_id AS class_id",
+                    *coords, *centroid)
     )
-    return z.withColumn("cx", (F.col("x0") + F.col("x1") + F.col("x2")) / 3) \
-            .withColumn("cy", (F.col("y0") + F.col("y1") + F.col("y2")) / 3) \
-            .withColumn("cz", (F.col("z0") + F.col("z1") + F.col("z2")) / 3)
 
 
 def parse_polygons(spans: DataFrame, payloads: DataFrame) -> DataFrame:

@@ -34,10 +34,10 @@ def main() -> None:
 
     # under spark-submit the builder inherits the submit conf; get_spark's
     # defaults only fill gaps
-    from geograypher_spark.session import _DEFAULTS
+    from geograypher_spark.session import _DEFAULTS, conf_gaps
 
     builder = SparkSession.builder.appName(f"geograypher-{args.pipeline}")
-    for k, v in _DEFAULTS.items():
+    for k, v in conf_gaps(_DEFAULTS).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
 

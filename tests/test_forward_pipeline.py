@@ -245,3 +245,84 @@ def test_multiview_detections_pipeline_with_checkpoints(spark, tmp_path):
     lineages = [json.load(open(f))
                 for f in glob.glob(os.path.join(root, "*", "*", "lineage.json"))]
     assert len(lineages) == 3
+
+
+def _forward_survey_chain(spark, scene):
+    """The perfbench forward_survey chain on ``scene``: docs → the three
+    parsers → visibility → per-face aggregates → union, tiles and the
+    polygon vote, each step materialized."""
+    import pandas as pd
+    from geograypher_spark.operators.aggregates import mode_vote
+    from geograypher_spark.operators.spatial_join import points_in_polygons
+    from geograypher_spark.operators.tiles import (TileGrid,
+                                                   rasterize_face_labels)
+    from geograypher_spark.operators.union import face_class_union
+    from geograypher_spark.operators.visibility import visibility_join
+    from geograypher_spark.plans.pipelines import aggregate_images
+    from geograypher_spark.sources import docs as D
+
+    docs, payloads = D.docs_from_scene(spark, scene, seed=1)
+    spans = D.explode_spans(docs)
+    f = scene.faces
+    topo = spark.createDataFrame(pd.DataFrame(
+        {"face_id": f["face_id"], "v0": f["v0"], "v1": f["v1"],
+         "v2": f["v2"]}))
+    verts = spark.createDataFrame(pd.DataFrame(scene.verts))
+    faces = D.parse_faces(spans, payloads).join(topo, "face_id")
+    cams = D.parse_cameras(spans, payloads)
+    polys = D.parse_polygons(spans, payloads)
+    for df in (faces, cams, polys):
+        df.collect()
+    vis = visibility_join(cams, faces)
+    vis.collect()
+    truth = faces.select("face_id", "class_id")
+    pred = aggregate_images(
+        vis.join(F.broadcast(truth), "face_id")
+        .select("camera_id", "face_id", "class_id", "pixel_count"))
+    pred.collect()
+    labeled = faces.drop("class_id").join(
+        pred.select("face_id", F.col("pred_class").alias("class_id")),
+        "face_id", "left")
+    face_class_union(labeled, verts).collect()
+    size = scene.params["size"]
+    grid = TileGrid(x0=0.0, y0=size, gsd=size / 200, tile_px=50)
+    rasterize_face_labels(labeled, grid, emit_images=True,
+                          bounds=(0.0, 0.0, size, size)).collect()
+    points = faces.select("face_id", F.col("cx").alias("x"),
+                          F.col("cy").alias("y")).join(pred, "face_id")
+    hits = points_in_polygons(points, polys.select("polygon_id",
+                                                   "geometry_wkb"))
+    return mode_vote(hits, ["polygon_id"], "pred_class",
+                     out="polygon_class").collect()
+
+
+def test_forward_survey_rerun_compiles_no_code(spark):
+    """A re-run of the forward_survey chain reuses every generated class.
+    Spark's codegen cache held 100 classes (4 LRU segments of 25), fewer
+    than the chain's working set, so each re-run recompiled its classes
+    with Janino (64 of the chain's 111 at 100 entries); with the session's
+    512 entries a re-run compiles none. The count is Spark's
+    compile-time histogram, which every Janino compile records.
+
+    The stage ids stay out of the class names for the test: AQE numbers
+    whole-stage codegen stages in the order it plans its query stages,
+    which follows whichever shuffle finishes first, so with the id in the
+    name a re-run can meet the same code under a new name (0-22 classes
+    per re-run in probes, each differing only in ``codegenStageId``)."""
+    from geograypher_spark.sources.scene import make_scene
+
+    assert spark.sparkContext.getConf().get(
+        "spark.sql.codegen.cache.maxEntries") == "512"
+    scene = make_scene(seed=1, camera_grid=2, ground_grid=8, image_size=64,
+                       focal=40.0, n_boxes=1, n_cylinders=1, n_cones=1)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    try:
+        first = _forward_survey_chain(spark, scene)
+        before = compiles.getCount()
+        again = _forward_survey_chain(spark, scene)
+        assert compiles.getCount() - before == 0
+    finally:
+        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+    assert sorted(map(tuple, again)) == sorted(map(tuple, first))

@@ -292,3 +292,20 @@ def test_minhash_signature_stage_runs_on_every_core(spark, minhash_one_split):
            for s in tracker.getJobInfo(j).stageIds]
     ran = [s for s in ran if s is not None and s.numCompletedTasks > 0]
     assert [s.numTasks for s in ran] == [par], ran
+
+
+def test_minhash_verify_shuffles_shingles_once(spark, minhash_one_split):
+    """The verify branch's per-doc shingle sets take one exchange, by doc
+    id. ``collect_set`` is duplicate-agnostic, so Catalyst drops the
+    shingler's distinct below it (RemoveRedundantAggregates); with
+    ``collect_list`` the distinct stayed, and shuffled the candidate
+    shingles a second time by (doc_id, shingle)."""
+    nodes = _final_nodes(minhash_one_split)
+    sets = [n for n in nodes if n.nodeName() == "ObjectHashAggregate"
+            and "collect_set(shingle" in n.simpleString(100)]
+    assert sets, "no verify shingle-set aggregate in the final plan"
+    exchanges = [n.simpleString(100) for n in nodes
+                 if n.nodeName() == "Exchange"]
+    assert not [e for e in exchanges
+                if re.match(r"Exchange hashpartitioning\(doc_id#\d+L?, shingle",
+                            e)], exchanges
