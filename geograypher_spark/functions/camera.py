@@ -10,6 +10,9 @@ Reference analogs:
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 
 
@@ -188,35 +191,43 @@ def inverse_distortion_canvas(
 def inverse_distortion_map(
     params: dict[str, float], f: float, cx: float, cy: float,
     w: int, h: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, tuple[int, int, int, int]]:
+) -> tuple[np.ndarray, tuple[int, int, int, int]]:
     """Per-output-pixel nearest-neighbour remap for render-then-warp
     distortion: for every DISTORTED pixel (r, c) (sampled at its center),
-    the integer source pixel of the ideal render on the expanded canvas.
+    the flat index of its source pixel in the ideal render on the
+    expanded canvas.
 
-    Returns ``(rows, cols, valid, (x_off, y_off, W, H))`` — all (h, w);
-    render the pinhole image with ``px - x_off, py - y_off`` into (H, W)
-    and gather ``ideal[rows, cols]`` where ``valid``. With zero distortion
-    the map is the identity (bit-exact pass-through). Matches the
-    reference's render-undistorted-then-warp order-0 remap
-    (``meshes.py:1817-1820`` via ``cameras.py:995-1090``)."""
+    Returns ``(index, (x_off, y_off, W, H))``: ``index`` is (h, w) int32,
+    ``-1`` where the pixel has no preimage. Render the pinhole image with
+    ``px - x_off, py - y_off`` into (H, W), append one ``-1`` to its
+    raveled pixels and ``take(index)``. With zero distortion the map is
+    the identity (bit-exact pass-through). Matches the reference's
+    render-undistorted-then-warp order-0 remap (``meshes.py:1817-1820``
+    via ``cameras.py:995-1090``)."""
     canvas = inverse_distortion_canvas(params, f, cx, cy, w, h)
     x_off, y_off, W, H = canvas
+    if W * H >= 2**31:
+        raise ValueError(f"distortion canvas {W}x{H} overflows an int32 index")
     u = np.broadcast_to(np.arange(w, dtype=np.float64)[None, :] + 0.5, (h, w))
     v = np.broadcast_to(np.arange(h, dtype=np.float64)[:, None] + 0.5, (h, w))
-    us, vs = _undistort_pixels(u.ravel(), v.ravel(), params, f, cx, cy, w, h)
+    # the inverse is per pixel, so row bands on threads (numpy drops the
+    # GIL in its loops) give one pass's bits in a fraction of its time
+    bands = np.array_split(np.arange(h), min(h, 8, os.cpu_count() or 1))
+    with ThreadPoolExecutor(len(bands)) as pool:
+        parts = list(pool.map(lambda r: _undistort_pixels(
+            u[r].ravel(), v[r].ravel(), params, f, cx, cy, w, h), bands))
+    us, vs = (np.concatenate(c) for c in zip(*parts))
     # range-check in float space: a diverged inverse (no preimage inside
     # the image circle, e.g. strong barrel k1) yields huge/NaN values that
-    # must not reach the int64 cast
+    # must not reach the int cast
     valid = (np.isfinite(us) & np.isfinite(vs)
              & (us >= x_off) & (us < x_off + W)
              & (vs >= y_off) & (vs < y_off + H))
     cols = np.floor(np.where(valid, us, 0.0)).astype(np.int64) - x_off
     rows = np.floor(np.where(valid, vs, 0.0)).astype(np.int64) - y_off
     valid &= (cols >= 0) & (cols < W) & (rows >= 0) & (rows < H)
-    cols[~valid] = 0
-    rows[~valid] = 0
-    return (rows.reshape(h, w), cols.reshape(h, w), valid.reshape(h, w),
-            canvas)
+    index = np.where(valid, rows * W + cols, -1).astype(np.int32)
+    return index.reshape(h, w), canvas
 
 
 def rpy_rotation(roll: float, pitch: float, yaw: float) -> np.ndarray:

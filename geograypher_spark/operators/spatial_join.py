@@ -278,18 +278,25 @@ def pip_filter_expr(x: str, y: str, pid: str, wkb_map: dict,
     return F.expr(f"CASE {' '.join(branches)} ELSE false END")
 
 
-@pandas_udf(T.BooleanType())
-def pip_udf(x: pd.Series, y: pd.Series, wkb: pd.Series) -> pd.Series:
-    """Exact point-in-polygon over Arrow batches. Batches are grouped by
-    polygon bytes first so each distinct polygon decodes once."""
+def _pip_by_key(x: pd.Series, y: pd.Series, key: pd.Series,
+                wkb_of) -> pd.Series:
+    """The Arrow PIP kernel: exact point-in-polygon over one batch, grouped
+    by polygon ``key`` so each distinct polygon decodes once —
+    ``wkb_of(key)`` gives its WKB bytes. A null key matches nothing."""
     out = np.zeros(len(x), dtype=bool)
     xv = x.to_numpy(dtype=np.float64)
     yv = y.to_numpy(dtype=np.float64)
-    codes, uniques = pd.factorize(wkb, use_na_sentinel=True)
-    for u_idx, u_wkb in enumerate(uniques):
+    codes, uniques = pd.factorize(key)
+    for u_idx, u_key in enumerate(uniques):
         m = codes == u_idx
-        out[m] = geom.points_in_wkb(xv[m], yv[m], bytes(u_wkb))
+        out[m] = geom.points_in_wkb(xv[m], yv[m], wkb_of(u_key))
     return pd.Series(out)
+
+
+@pandas_udf(T.BooleanType())
+def pip_udf(x: pd.Series, y: pd.Series, wkb: pd.Series) -> pd.Series:
+    """Exact point-in-polygon against a WKB column (the salted route)."""
+    return _pip_by_key(x, y, wkb, bytes)
 
 
 def salted_equi_join(
@@ -441,14 +448,7 @@ def points_in_polygons(
 
     @pandas_udf(T.BooleanType())
     def pip_by_id(xs: pd.Series, ys: pd.Series, pids: pd.Series) -> pd.Series:
-        out = np.zeros(len(xs), dtype=bool)
-        xv = xs.to_numpy(dtype=np.float64)
-        yv = ys.to_numpy(dtype=np.float64)
-        codes, uniques = pd.factorize(pids)
-        for u_idx, pid in enumerate(uniques):
-            m = codes == u_idx
-            out[m] = geom.points_in_wkb(xv[m], yv[m], bc.value[pid])
-        return pd.Series(out)
+        return _pip_by_key(xs, ys, pids, bc.value.__getitem__)
 
     refined = cand.filter(pip_by_id(F.col(x), F.col(y), F.col(polygon_id_col)))
     return refined.drop("cell")

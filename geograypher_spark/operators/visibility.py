@@ -211,23 +211,17 @@ def rasterize_zbuffer(
     return _out()
 
 
-def _render_group(pdf: pd.DataFrame, cam_params: dict,
-                  distortion_mode: str = "vertex"):
+def _render_group(pdf: pd.DataFrame, cam_params: dict):
     """Shared per-camera render: returns the (h, w) face-id image.
 
     ``cam_params`` comes from the broadcast camera map — candidate rows
     carry ONLY (camera_id, face_id, 9 coords); shipping the 4×4 transform
     on every row through the shuffle costs ~2.5× the bytes for nothing.
 
-    ``distortion_mode`` picks how a camera's Brown–Conrady parameters are
-    honoured: ``"vertex"`` (default) warps the projected vertices — cheap
-    and exact for triangles small relative to the distortion field;
-    ``"warp"`` renders the ideal pinhole image on an expanded canvas and
-    remaps it per distorted output pixel through the fixed-point inverse
-    (the reference's render-undistorted-then-warp, ``meshes.py:1817-1820``)
-    — exact for arbitrarily large triangles (a straight edge renders as
-    the properly curved image curve) at the cost of one (h, w) inverse
-    map per render.
+    A distorted camera renders the ideal pinhole image on the expanded
+    canvas of its ``"warp"`` map (:func:`_camera_side`), then gathers each
+    output pixel through it — the reference's render-then-warp
+    (``meshes.py:1817-1820``), exact for arbitrarily large triangles.
     """
     # deterministic z-tie resolution: rasterize in face_id order regardless
     # of shuffle-dependent group row order
@@ -240,36 +234,16 @@ def _render_group(pdf: pd.DataFrame, cam_params: dict,
     n = len(coords)
     # coords row = [x0,y0,z0,x1,y1,z1,x2,y2,z2] → (n*3, 3) points
     pts = coords.reshape(n, 3, 3).reshape(n * 3, 3)
-    distortion = cam_params.get("distortion") or {}
-    if distortion and distortion_mode == "warp":
-        rows, cols, valid, (x_off, y_off, cw, ch) = cam.inverse_distortion_map(
-            distortion, f, cx, cy, w, h)
-        px, py, z = cam.project_points(pts, c2w, f, cx, cy, w, h)
-        tri_px = np.stack([px - x_off, py - y_off], axis=1).reshape(n, 3, 2)
-        tri_z = z.reshape(n, 3)
-        img_u = rasterize_zbuffer(
-            tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), cw, ch)
-        return np.where(valid, img_u[rows, cols], np.int64(-1))
-    if distortion:
-        # project via normalized coords → Brown–Conrady warp → pixels
-        # (reference renders undistorted then warps, meshes.py:1817-1820;
-        # distorting the vertices directly is the vectorized equivalent
-        # for geometry whose triangles are small vs the distortion field)
-        world_to_cam = cam.invert_rigid(c2w)
-        pc = cam.apply_transform(world_to_cam, pts)
-        z = pc[:, 2]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xn = pc[:, 0] / z
-            yn = pc[:, 1] / z
-        xd, yd = cam.brown_conrady_distort(xn, yn, distortion)
-        px = f * xd + cx + w / 2.0
-        py = f * yd + cy + h / 2.0
-    else:
-        px, py, z = cam.project_points(pts, c2w, f, cx, cy, w, h)
-    tri_px = np.stack([px, py], axis=1).reshape(n, 3, 2)
-    tri_z = z.reshape(n, 3)
-    return rasterize_zbuffer(
-        tri_px, tri_z, pdf["face_id"].to_numpy(np.int64), w, h)
+    warp = cam_params.get("warp")
+    x_off, y_off, cw, ch = warp[1] if warp else (0, 0, w, h)
+    px, py, z = cam.project_points(pts, c2w, f, cx, cy, w, h)
+    tri_px = np.stack([px - x_off, py - y_off], axis=1).reshape(n, 3, 2)
+    img = rasterize_zbuffer(
+        tri_px, z.reshape(n, 3), pdf["face_id"].to_numpy(np.int64), cw, ch)
+    if not warp:
+        return img
+    # index -1 (no preimage) takes the appended no-hit sentinel
+    return np.append(img.ravel(), np.int64(-1)).take(warp[0])
 
 
 # ---------------------------------------------------------------------------
@@ -417,14 +391,24 @@ def _camera_side(cameras: DataFrame, operator: str):
     """The camera table — the visibility join's small side by design
     (thousands of rows vs billions of faces) — collected ONCE for
     ``operator`` → (rows, broadcast {camera_id: row}), so candidate rows
-    carry only ids+coords. An optional ``distortion`` column
-    (Brown–Conrady params) rides along for distortion-aware rendering."""
+    carry only ids+coords. A camera with non-null ``distortion`` params
+    (Brown–Conrady) gets ``"warp"``: :func:`camera.inverse_distortion_map`,
+    built once per (params, f, cx, cy, w, h) key and shared by the
+    sensor's cameras, so the broadcast pickles it once per sensor (the
+    reference's per-key cache, ``cameras.py:968-993``)."""
     rows = collect_small_side(cameras, operator)
     cam_map = {int(r["camera_id"]): r for r in rows.to_dict("records")}
+    maps = {}
     for p in cam_map.values():
-        if p.get("distortion"):   # struct-typed: drop null coefficients
-            p["distortion"] = {
-                k: v for k, v in p["distortion"].items() if v is not None}
+        dist = {k: v for k, v in (p.get("distortion") or {}).items()
+                if v is not None}
+        if dist:
+            intr = (float(p["f"]), float(p["cx"]), float(p["cy"]),
+                    int(p["w"]), int(p["h"]))
+            key = (tuple(sorted(dist.items())), intr)
+            if key not in maps:
+                maps[key] = cam.inverse_distortion_map(dist, *intr)
+            p["warp"] = maps[key]
     return rows, cameras.sparkSession.sparkContext.broadcast(cam_map)
 
 
@@ -459,23 +443,19 @@ def visibility_join(
     cameras: DataFrame, faces: DataFrame,
     res: int = 4, max_cells: int = 4096,
     z_range: tuple[float, float] | None = None,
-    distortion_mode: str = "vertex",
 ) -> DataFrame:
     """→ (camera_id, face_id, pixel_count): for every camera, the number of
     pixels whose first hit is each face (pixel_count > 0 only). The
     engine's pix2face analog, aggregated (SURVEY §1.1 'pix2face map').
-    One z-buffer render per camera.
-
-    ``distortion_mode``: ``"vertex"`` (default) or ``"warp"`` — see
-    :func:`_render_group`."""
+    One z-buffer render per camera; distorted cameras render then warp
+    (:func:`_render_group`)."""
     cand, bc, groups = _render_inputs(
         cameras, faces, FACE_COORD_COLS, "visibility_join", res, max_cells,
         z_range)
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return _counts_pdf(int(key[0]),
-                           _render_group(pdf, bc.value[int(key[0])],
-                                         distortion_mode=distortion_mode))
+                           _render_group(pdf, bc.value[int(key[0])]))
 
     # camera renders are compute-dense (bytes-cheap candidate rows,
     # z-buffer kernel per group): the balanced grouped-apply keeps the
@@ -488,7 +468,7 @@ def visibility_join(
 def render_label_images(
     cameras: DataFrame, faces_with_class: DataFrame,
     class_col: str = "face_class", nodata: int = 255,
-    res: int = 4, distortion_mode: str = "vertex",
+    res: int = 4,
     z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """→ (camera_id, w, h, label_image): per-camera uint8 CLASS images —
@@ -513,8 +493,7 @@ def render_label_images(
     ])
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        img = _render_group(pdf, bc.value[int(key[0])],
-                            distortion_mode=distortion_mode)
+        img = _render_group(pdf, bc.value[int(key[0])])
         lab = np.full(img.shape, nodata, dtype=np.uint8)
         hit = img >= 0
         if hit.any():
@@ -545,7 +524,7 @@ def render_label_images(
 
 def render_face_images(
     cameras: DataFrame, faces: DataFrame,
-    res: int = 4, distortion_mode: str = "vertex",
+    res: int = 4,
     z_range: tuple[float, float] | None = None,
 ) -> DataFrame:
     """→ (camera_id, w, h, face_image:binary): full pix2face images as
@@ -562,8 +541,7 @@ def render_face_images(
     ])
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        img = _render_group(pdf, bc.value[int(key[0])],
-                            distortion_mode=distortion_mode)
+        img = _render_group(pdf, bc.value[int(key[0])])
         return pd.DataFrame({
             "camera_id": [key[0]],
             "w": [img.shape[1]], "h": [img.shape[0]],

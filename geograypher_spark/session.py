@@ -35,7 +35,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
@@ -83,30 +83,38 @@ def conf_gaps(conf: dict[str, str]) -> dict[str, str]:
     return {k: v for k, v in conf.items() if not launch.contains(k)}
 
 
+def session_conf(
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf :func:`get_spark` applies on top of the launch conf. Its
+    defaults (``_DEFAULTS``, a ``local[$SPARK_GRAFT_CPUS or *]`` master, a
+    core-sized shuffle partition count) only fill the keys the launch conf
+    lacks (:func:`conf_gaps`); explicit arguments win over both."""
+    conf = conf_gaps({
+        **_DEFAULTS,
+        "spark.master": f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]",
+        "spark.sql.shuffle.partitions": str(
+            min(64, max(8, os.cpu_count() or 8))),
+    })
+    if master is not None:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    return {**conf, **(extra_conf or {})}
+
+
 def get_spark(
     app_name: str = "geograypher_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]`` in the sandbox;
-    under spark-submit on a cluster, leave it None and the submit conf wins.
-    """
+    """Build (or fetch) the engine's SparkSession with :func:`session_conf`;
+    under spark-submit, leave ``master`` None and the submit conf wins."""
     _inject_worker_sitecustomize()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if master is None:
-        master = f"local[{cpus}]"
-    builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
-    if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = min(64, max(8, n))
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    conf["spark.sql.execution.arrow.maxRecordsPerBatch"] = "65536"
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    builder = SparkSession.builder.appName(app_name)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -30,16 +30,11 @@ def main() -> None:
                     help="enable checkpoint-resumable execution")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    # under spark-submit the builder inherits the submit conf; get_spark's
+    # under spark-submit the session inherits the submit conf; get_spark's
     # defaults only fill gaps
-    from geograypher_spark.session import _DEFAULTS, conf_gaps
+    from geograypher_spark.session import get_spark
 
-    builder = SparkSession.builder.appName(f"geograypher-{args.pipeline}")
-    for k, v in conf_gaps(_DEFAULTS).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark(f"geograypher-{args.pipeline}")
 
     from geograypher_spark.plans import driver_queries as DQ
 

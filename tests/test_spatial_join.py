@@ -56,6 +56,35 @@ def test_covering_cells_superset_of_hits(spark, scene):
     assert brute_force_pip(scene).issubset(cand_set)
 
 
+def test_points_in_polygons_above_edge_budget(spark):
+    """A 600-edge concave ring and a square (604 edges, past the 512-edge
+    JVM predicate budget) refine through the Arrow kernel on both routes
+    (broadcast id dict and salted WKB column) to exactly the pairs
+    geom.points_in_multipolygon calls inside."""
+    n = 600
+    ang = np.linspace(0, 2 * np.pi, n, endpoint=False) + 0.001
+    rad = np.where(np.arange(n) % 2 == 0, 5.0, 3.5)
+    star = np.stack([rad * np.cos(ang), rad * np.sin(ang)], axis=1)
+    square = np.array([[1, 1], [4, 1], [4, 4], [1, 4]], dtype=float)
+    rings = {0: [star], 1: [square]}
+    polys = spark.createDataFrame(pd.DataFrame({
+        "polygon_id": [0, 1],
+        "geometry_wkb": [geom.polygon_to_wkb(r) for r in rings.values()]}))
+    pts = np.random.default_rng(3).uniform(-5.5, 5.5, size=(3000, 2))
+    points = spark.createDataFrame(pd.DataFrame({
+        "point_id": np.arange(len(pts)), "x": pts[:, 0], "y": pts[:, 1]}))
+    expect = set()
+    for pid, r in rings.items():
+        inside = geom.points_in_multipolygon(pts[:, 0], pts[:, 1], [r])
+        expect |= {(int(i), pid) for i in np.nonzero(inside)[0]}
+    assert len(expect) > 1000
+    for salt in (None, 2):
+        joined = SJ.points_in_polygons(points, polys, salt_factor=salt)
+        assert "ArrowEvalPython" in joined._jdf.queryExecution().toString()
+        got = {(r["point_id"], r["polygon_id"]) for r in joined.collect()}
+        assert got == expect
+
+
 def test_pip_udf_batch_grouping(spark):
     """pip_udf handles batches containing multiple distinct polygons."""
     sq1 = geom.polygon_to_wkb([np.array([[0, 0], [1, 0], [1, 1], [0, 1.0]])])

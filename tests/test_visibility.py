@@ -239,7 +239,7 @@ def test_empty_mesh_and_faceless_camera(spark):
 
 
 # ---------------------------------------------------------------------------
-# Exact render-then-warp distortion (distortion_mode="warp")
+# Exact render-then-warp distortion
 # ---------------------------------------------------------------------------
 
 def _dist_cam_df(spark, dist, w=200, h=200, f=100.0):
@@ -278,19 +278,18 @@ def test_warp_mode_zero_params_is_identity(spark):
     plain = _face_img(V.render_face_images(
         _dist_cam_df(spark, {}), fdf).collect()[0])
     warp = _face_img(V.render_face_images(
-        _dist_cam_df(spark, {"k1": 0.0, "p1": 0.0}), fdf,
-        distortion_mode="warp").collect()[0])
+        _dist_cam_df(spark, {"k1": 0.0, "p1": 0.0}), fdf).collect()[0])
     assert np.array_equal(plain, warp)
 
 
 def test_warp_mode_big_triangle_curved_edges(spark):
-    """THE case vertex distortion gets wrong: one huge triangle under
-    strong barrel distortion. Ground truth per output pixel is analytic —
-    undistort the pixel center (same fixed-point inverse) and test the
-    ideal float coords against the pinhole-projected triangle, no raster
-    grid involved. The warp render must agree except for nearest-neighbour
-    quantisation at the (curved) edges; the vertex render draws straight
-    chords and must be measurably wrong."""
+    """One huge triangle under strong barrel distortion, whose edges
+    image as curves (distorting only the vertices would draw straight
+    chords). Ground truth per output pixel is analytic — undistort the
+    pixel center (same fixed-point inverse) and test the ideal float
+    coords against the pinhole-projected triangle, no raster grid
+    involved. The render must agree except for nearest-neighbour
+    quantisation at the (curved) edges."""
     from geograypher_spark.functions import camera as camf
 
     dist = {"k1": -0.3}
@@ -321,15 +320,44 @@ def test_warp_mode_big_triangle_curved_edges(spark):
     truth = inside.reshape(h, w)
 
     warp_img = _face_img(V.render_face_images(
-        _dist_cam_df(spark, dist), fdf, distortion_mode="warp").collect()[0])
-    vert_img = _face_img(V.render_face_images(
-        _dist_cam_df(spark, dist), fdf, distortion_mode="vertex").collect()[0])
+        _dist_cam_df(spark, dist), fdf).collect()[0])
 
     warp_err = int((truth != (warp_img >= 0)).sum())
-    vert_err = int((truth != (vert_img >= 0)).sum())
     # NN quantisation only: a thin band along the 3 curved edges
     assert warp_err < 0.01 * truth.sum()
-    # chord-vs-curve: the straight-edge render misses systematically
-    # (here by ~1/3 of the footprint — k1=-0.3 on a frame-sized triangle)
-    assert vert_err > 5 * max(warp_err, 1)
-    assert (vert_img >= 0).any()
+
+
+def test_inverse_map_built_once_per_sensor(spark, monkeypatch):
+    """The driver builds one inverse distortion map per distinct sensor
+    key (params, f, cx, cy, w, h), cameras of one sensor share it through
+    the broadcast, and undistorted cameras build none."""
+    from geograypher_spark.functions import camera as camf
+
+    calls = []
+    build = camf.inverse_distortion_map
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(camf, "inverse_distortion_map", counting)
+    fdf = _one_tri_df(spark, (-1.6, -1.6, 0.0), (1.7, -1.4, 0.0),
+                      (0.1, 1.8, 0.0))
+    c2w = [1.0, 0, 0, 0.0, 0, -1.0, 0, 0.0, 0, 0, -1.0, 2.0, 0, 0, 0, 1.0]
+    cams = spark.createDataFrame(pd.DataFrame([
+        {"camera_id": i, "cam_to_world": c2w, "f": 50.0, "cx": 0.0,
+         "cy": 0.0, "w": 64, "h": 64, "distortion": d}
+        for i, d in enumerate([{"k1": -0.2}, {"k1": -0.1}, {"k1": -0.2}])]))
+    vis = V.visibility_join(cams, fdf).collect()
+    assert len(calls) == 2
+    assert sorted(r["camera_id"] for r in vis) == [0, 1, 2]
+    _, bc = V._camera_side(cams, "test")
+    assert bc.value[0]["warp"][0] is bc.value[2]["warp"][0]
+    assert bc.value[0]["warp"][0] is not bc.value[1]["warp"][0]
+
+    calls.clear()
+    assert V.visibility_join(camera_df(spark), fdf).count() == 1
+    assert V.visibility_join(cams.withColumn(
+        "distortion", F.create_map().cast("map<string,double>")),
+        fdf).count() == 3
+    assert calls == []
